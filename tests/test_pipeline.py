@@ -825,16 +825,23 @@ def test_collection_ann_batch_queries(spark, tmp_path):
     coll.build_ann_index(kind="ivfpq", n_centroids=4, m=4, ksub=8)
 
     qs = ["spark executors scale", "quantization codes"]
-    for kind in ("ivf", "ivfpq"):
-        batch = coll.search_ann(qs, n_results=3, kind=kind, nprobe=4).collect()
+    for kind, refine in (("ivf", False), ("ivfpq", False), ("ivfpq", True)):
+        batch = coll.search_ann(
+            qs, n_results=3, kind=kind, nprobe=4, refine=refine
+        ).collect()
         assert {r.query_id for r in batch} == {0, 1}
         for qid, q in enumerate(qs):
-            single = coll.search_ann(q, n_results=3, kind=kind, nprobe=4).collect()
+            single_df = coll.search_ann(
+                q, n_results=3, kind=kind, nprobe=4, refine=refine
+            )
+            # a single string is a batch of one without the query_id
+            assert "query_id" not in single_df.columns
+            single = single_df.collect()
             got = sorted(
                 ((r.rank, r.chunk_uid, r.score) for r in batch if r.query_id == qid)
             )
             want = sorted(((r.rank, r.chunk_uid, r.score) for r in single))
-            assert got == want, (kind, qid)
+            assert got == want, (kind, refine, qid)
 
     with pytest.raises(ValueError, match="non-empty"):
         coll.search_ann(["ok", "  "], kind="ivf")
@@ -1352,7 +1359,7 @@ def test_ann_compact_preserves_serving(spark, tmp_path):
     }
 
     for kind in ("ivf", "ivfpq"):
-        files_before = coll._ann_data_file_count(kind)
+        files_before = coll._data_files(coll._ann_path(kind))[0]
         files_after = coll.ann_compact(kind=kind)
         assert files_after < files_before, (kind, files_before, files_after)
         assert ivf_index_complete(spark, coll._ann_path(kind))
@@ -1389,7 +1396,9 @@ def test_ann_compact_preserves_serving(spark, tmp_path):
     rep = coll.ann_maintenance_report("ivfpq")
     assert rep["complete"] and rep["refine_companion"]
     assert rep["n_rows"] == totals["ivfpq"] + batch.count()
-    assert rep["n_data_files"] == coll._ann_data_file_count("ivfpq")
+    assert rep["n_data_files"] == coll._data_files(
+        coll._ann_path("ivfpq")
+    )[0]
     assert rep["avg_file_bytes"] > 0 and rep["data_bytes"] > 0
     assert isinstance(rep["rebuild_recommended"], bool)
     assert isinstance(rep["compact_recommended"], bool)
@@ -1414,8 +1423,8 @@ def test_ann_compact_preserves_serving(spark, tmp_path):
 
 def test_ann_rebuild_swaps_without_downtime(spark, tmp_path):
     """Round 15: ann_rebuild retrains a LIVE index at a tmp path and
-    promotes it with the rename-only swap — serving results equal an
-    in-place build_ann_index over the same rows, every index row
+    promotes it with the rename-only swap — serving results equal a
+    fresh build_ann_index over the same rows, every index row
     survives, no tmp/trash directories are left behind, and the
     refine companion is rebuilt for ivfpq.  A never-built index
     raises (first builds go through build_ann_index)."""
@@ -1466,7 +1475,7 @@ def test_ann_rebuild_swaps_without_downtime(spark, tmp_path):
         assert rep["complete"] and rep["kind"] == kind
         assert rep["n_rows"] == n_before == coll.count()
         assert ivf_index_complete(spark, coll._ann_path(kind))
-        # serving equals a fresh IN-PLACE build over the same rows
+        # serving equals a fresh build_ann_index over the same rows
         # (same seeds/hyperparams -> identical model -> identical hits)
         got = [
             (r.chunk_uid, round(r.score, 9))
@@ -1870,3 +1879,221 @@ def test_search_ann_filtered_escalation(spark, tmp_path):
         (r.chunk_uid, r.score) for r in esc_rb.collect() if r.query_id == 0
     ]
     assert got_rb0 == single0
+
+
+def _corpus(spark, tag, n):
+    """files(source, filename, file_bytes, content) for n synthetic
+    one-sentence PDFs named ``<tag><i>.pdf``."""
+    texts = [
+        (f"{tag} lifecycle document {i} about index maintenance "
+         f"{'alpha beta gamma delta '[: 8 + i % 12]} ").encode() * 3
+        for i in range(n)
+    ]
+    return spark.createDataFrame(
+        [
+            (
+                f"file:/fake/{tag}{i}.pdf",
+                f"{tag}{i}.pdf",
+                len(b),
+                bytearray(b"stream\n(" + b + b") Tj\nendstream"),
+            )
+            for i, b in enumerate(texts)
+        ],
+        "source STRING, filename STRING, file_bytes LONG, content BINARY",
+    )
+
+
+def _serve_all(coll, q, k):
+    """Every (kind, refine) serving route of one query, as id/score
+    lists."""
+    return {
+        (kind, refine): [
+            (r.chunk_uid, r.score)
+            for r in coll.search_ann(
+                q, n_results=k, kind=kind, refine=refine
+            ).collect()
+        ]
+        for kind, refine in (("ivf", False), ("ivfpq", False), ("ivfpq", True))
+    }
+
+
+def test_compact_keeps_ann_indexes(spark, tmp_path):
+    """compact() rewrites only the collection's data files: its ANN
+    indexes are carried across the swap and serve identical results
+    afterwards, and the rewrite is sized from the data files' bytes
+    alone — index and refine-companion bytes must not inflate the file
+    count."""
+    coll = VectorCollection(spark, str(tmp_path / "keep_coll"))
+    coll.overwrite(build_chunks(_corpus(spark, "base", 8), chunk_size=60,
+                                overlap=10))
+    for i in range(3):
+        coll.append(build_chunks(_corpus(spark, f"more{i}", 2),
+                                 chunk_size=60, overlap=10))
+    for kind in ("ivf", "ivfpq"):
+        coll.build_ann_index(kind=kind, n_centroids=4, m=4, ksub=8)
+    k = coll.count()
+    q = "index maintenance lifecycle"
+    before = _serve_all(coll, q, k)
+    assert all(before.values())
+
+    data_bytes = sum(
+        p.stat().st_size for p in (tmp_path / "keep_coll").glob("*.parquet")
+    )
+    n_files = coll.compact(target_file_bytes=data_bytes)
+    assert coll.count() == k
+    assert _serve_all(coll, q, k) == before
+    assert n_files == 1
+    assert coll.ann_maintenance_report("ivfpq")["refine_companion"]
+    # nothing left behind next to or inside the collection
+    assert [p.name for p in tmp_path.iterdir()] == ["keep_coll"]
+    assert sorted(
+        p.name for p in (tmp_path / "keep_coll").iterdir()
+        if p.name.startswith("_ann_")
+    ) == ["_ann_ivf", "_ann_ivfpq"]
+
+
+def test_compact_keeps_partition_layout(spark, tmp_path):
+    """compact() on a partition_by collection keeps its hive partition
+    directories (no flat files appear next to them, so a later
+    upsert_files still sees one consistent layout) and returns the
+    parquet count INSIDE those directories."""
+    path = tmp_path / "part_coll"
+    coll = VectorCollection(spark, str(path))
+    chunks = build_chunks(_corpus(spark, "part", 4), chunk_size=60,
+                          overlap=10)
+    # three tasks per write -> several small files per partition dir
+    coll.overwrite(chunks.repartition(3), partition_by=["filename"])
+    rows = sorted((r.chunk_uid, r.filename) for r in coll.df().collect())
+
+    def layout():
+        dirs = sorted(p.name for p in path.iterdir() if p.is_dir()
+                      and not p.name.startswith(("_", ".")))
+        flat = [p.name for p in path.glob("*.parquet")]
+        files = [p for p in path.glob("filename=*/*.parquet")]
+        return dirs, flat, files
+
+    dirs, flat, files = layout()
+    assert len(dirs) == 4 and flat == [] and len(files) > 4
+    n = coll.compact(target_file_bytes=128 * 1024 * 1024)
+    dirs2, flat2, files2 = layout()
+    assert dirs2 == dirs and flat2 == []
+    assert n == len(files2) == 4
+    assert sorted((r.chunk_uid, r.filename) for r in coll.df().collect()) \
+        == rows
+
+    # file-granular refresh still lands in the same partition layout
+    redo = build_chunks(_corpus(spark, "part", 1), chunk_size=30,
+                        overlap=5)
+    coll.upsert_files(redo)
+    dirs3, flat3, _ = layout()
+    assert dirs3 == dirs and flat3 == []
+    assert coll.df().filter(F.col("filename") == "part0.pdf").count() \
+        == redo.count()
+
+    # partition values are rewritten verbatim, not re-typed on read
+    num = VectorCollection(spark, str(tmp_path / "num_coll"))
+    num.overwrite(
+        spark.createDataFrame(
+            [("u1", "001", "a"), ("u2", "002", "b")],
+            "chunk_uid STRING, filename STRING, text STRING",
+        ),
+        partition_by=["filename"],
+    )
+    num.compact()
+    assert sorted(
+        p.name for p in (tmp_path / "num_coll").glob("filename=*")
+    ) == ["filename=001", "filename=002"]
+
+
+def test_search_ann_rejects_nprobe_below_one(spark, tmp_path):
+    """nprobe < 1 is a ValueError before any index access: the
+    underfill escalation doubles nprobe, and doubling 0 never ends."""
+    coll = VectorCollection(spark, str(tmp_path / "no_index"))
+    for bad in (0, -1):
+        for kw in ({}, {"filter_metadata": {"category": "faq"}}):
+            with pytest.raises(ValueError, match="nprobe must be >= 1"):
+                coll.search_ann("refunds", kind="ivf", nprobe=bad, **kw)
+
+
+@pytest.fixture(scope="module")
+def swap_base(spark, tmp_path_factory):
+    """A collection with a complete ivfpq index, its row count, and its
+    refined serving result for one query."""
+    root = tmp_path_factory.mktemp("swap_base") / "coll"
+    coll = VectorCollection(spark, str(root))
+    coll.overwrite(build_chunks(_corpus(spark, "swap", 6), chunk_size=60,
+                                overlap=10))
+    coll.build_ann_index(kind="ivfpq", n_centroids=4, m=4, ksub=8)
+    q = "swap lifecycle document"
+    want = [
+        (r.chunk_uid, r.score)
+        for r in coll.search_ann(q, kind="ivfpq", refine=True).collect()
+    ]
+    return root, coll.count(), q, want
+
+
+@pytest.mark.parametrize(
+    "target,step",
+    [("ivfpq", s) for s in ("built", "retired", "promoted", "deleted")]
+    + [
+        ("compact", s)
+        for s in ("built", "carried", "retired", "promoted", "deleted")
+    ],
+)
+def test_swap_crash_matrix(spark, tmp_path, swap_base, target, step):
+    """A crash after any step of the one rename swap — for an ivfpq
+    index rewrite (build_ann_index / ann_rebuild / ann_compact) and for
+    compact(), including compact's carry of the index into its tmp
+    dir — leaves at least one complete copy on disk, and serving
+    either returns the pre-crash result (a complete index is live) or
+    refuses with the "no complete" ValueError, never a partial
+    answer.  Each post-step disk state is reproduced with shutil."""
+    import pathlib
+    import shutil
+
+    base, n_rows, q, want = swap_base
+    coll_dir = tmp_path / "coll"
+    shutil.copytree(base, coll_dir)
+    if target == "ivfpq":
+        live = coll_dir / "_ann_ivfpq"
+        tmp = coll_dir / "_ann_ivfpq__rebuild_crash"
+        shutil.copytree(live, tmp)  # a fully built replacement
+        steps = ["built", "retired", "promoted", "deleted"]
+    else:
+        live = coll_dir
+        tmp = tmp_path / "coll__compact_crash"
+        shutil.copytree(  # the rewritten data files, no index yet
+            coll_dir, tmp, ignore=shutil.ignore_patterns("_ann_*")
+        )
+        steps = ["built", "carried", "retired", "promoted", "deleted"]
+    trash = pathlib.Path(str(live) + "__retired_crash")
+    do = {
+        "carried": lambda: shutil.move(
+            str(coll_dir / "_ann_ivfpq"), str(tmp / "_ann_ivfpq")
+        ),
+        "retired": lambda: shutil.move(str(live), str(trash)),
+        "promoted": lambda: shutil.move(str(tmp), str(live)),
+        "deleted": lambda: shutil.rmtree(trash),
+    }
+    for s in steps[1 : steps.index(step) + 1]:
+        do[s]()
+
+    def complete(d):
+        if target == "ivfpq":
+            return (d / "_INDEX_SUCCESS").exists() and (
+                d / "_vectors" / "_SUCCESS"
+            ).exists()
+        return (
+            d.exists()
+            and (d / "_ann_ivfpq" / "_INDEX_SUCCESS").exists()
+            and spark.read.parquet(str(d)).count() == n_rows
+        )
+
+    assert any(complete(d) for d in (live, trash, tmp)), step
+    coll = VectorCollection(spark, str(coll_dir))
+    if complete(live):
+        got = coll.search_ann(q, kind="ivfpq", refine=True).collect()
+        assert [(r.chunk_uid, r.score) for r in got] == want
+    else:
+        with pytest.raises(ValueError, match="no complete"):
+            coll.search_ann(q, kind="ivfpq", refine=True)

@@ -335,10 +335,86 @@ class VectorCollection:
         streaming parquet sink (its ``_spark_metadata`` commit log is
         present) — reads then go through the log and ignore any file
         it doesn't list."""
-        p = self.path.rstrip("/") + "/_spark_metadata"
-        jvm_path = self.spark._jvm.org.apache.hadoop.fs.Path(p)
-        fs = jvm_path.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        return bool(fs.exists(jvm_path))
+        hpath, fs = self._fs()
+        return bool(fs.exists(hpath(self.path.rstrip("/") + "/_spark_metadata")))
+
+    def _fs(self):
+        """(Hadoop ``Path`` constructor, the collection's FileSystem)."""
+        hpath = self.spark._jvm.org.apache.hadoop.fs.Path
+        return hpath, hpath(self.path).getFileSystem(
+            self.spark._jsc.hadoopConfiguration()
+        )
+
+    def _data_files(self, path: str) -> tuple[int, int]:
+        """(parquet data files, their bytes) under ``path``, walking
+        hive ``col=value`` partition dirs.  Underscore and dot entries
+        (ANN indexes, sidecars, markers, checksums, the stream log) are
+        not data and are skipped — the one listing that sizes and counts
+        both collection and index rewrites."""
+        hpath, fs = self._fs()
+        n_files = n_bytes = 0
+        todo = [hpath(path)]
+        while todo:
+            for st in fs.listStatus(todo.pop()):
+                name = st.getPath().getName()
+                if name.startswith(("_", ".")):
+                    continue
+                if st.isDirectory():
+                    todo.append(st.getPath())
+                elif name.endswith(".parquet"):
+                    n_files += 1
+                    n_bytes += st.getLen()
+        return n_files, n_bytes
+
+    def _partition_cols(self) -> list[str]:
+        """Hive partition columns of the collection, read off its first
+        ``col=value`` directory chain (``[]`` for a flat layout)."""
+        hpath, fs = self._fs()
+        cols, cur = [], hpath(self.path)
+        while True:
+            dirs = (
+                st.getPath().getName()
+                for st in fs.listStatus(cur)
+                if st.isDirectory()
+            )
+            part = next(
+                (d for d in dirs if "=" in d and not d.startswith(("_", "."))),
+                None,
+            )
+            if part is None:
+                return cols
+            cols.append(part.split("=", 1)[0])
+            cur = hpath(cur, part)
+
+    def _swap(self, live: str, tmp: str, token: str, op: str) -> None:
+        """Promote the fully-built directory ``tmp`` to ``live`` with
+        renames only — the one swap every rewrite goes through
+        (:meth:`compact`, :meth:`ann_compact`, :meth:`build_ann_index`
+        and so :meth:`ann_rebuild`): live -> ``__retired_<token>``,
+        tmp -> live, delete the retired copy; with nothing live the
+        promote is a single rename.  A crash at any step leaves one
+        complete copy on disk (old under ``__retired_*`` or new at
+        ``tmp``) — an abandoned tmp is never promoted.  The instant
+        between the two renames is the one moment ``live`` is absent, so
+        run rewrites out-of-band, not under readers on a non-atomic
+        filesystem."""
+        hpath, fs = self._fs()
+        if not fs.exists(hpath(live)):
+            if not fs.rename(hpath(tmp), hpath(live)):
+                raise IOError(f"{op}: could not promote {tmp}")
+            return
+        trash = live + f"__retired_{token}"
+        if not fs.rename(hpath(live), hpath(trash)):
+            raise IOError(f"{op}: could not retire {live}")
+        if not fs.rename(hpath(tmp), hpath(live)):
+            # roll back: put the live copy back before failing
+            if fs.rename(hpath(trash), hpath(live)):
+                raise IOError(f"{op}: could not promote {tmp}; rolled back")
+            raise IOError(
+                f"{op}: could not promote {tmp} AND rollback failed — "
+                f"live copy intact under {trash}"
+            )
+        fs.delete(hpath(trash), True)
 
     def _record_layout(self, layout: str, path: str | None = None) -> None:
         # sidecar inside the collection dir; the leading underscore
@@ -424,15 +500,24 @@ class VectorCollection:
         partition; at 100 TB that death-by-small-files tax hits every
         subsequent scan (task-per-file scheduling, footer reads, no
         row-group locality).  Compaction sizes the rewrite from the
-        ACTUAL on-disk bytes (not row counts), writes to a temp
-        directory first, then swaps with RENAMES ONLY — live -> trash,
-        tmp -> live, delete trash.  A crash at any step leaves a full
-        copy of the data on disk (old under ``__retired_*`` or new
-        under ``__compact_*``), never a partial mix; the brief window
-        between the two renames is the one instant the live path is
-        absent, so run compaction out-of-band (like an LSM/iceberg
-        rewrite-data-files maintenance job), not concurrently with
-        readers on a non-atomic filesystem.
+        ACTUAL on-disk bytes of the collection's data files (not row
+        counts; index and sidecar bytes excluded), writes to a temp
+        directory ``__compact_*`` first, then promotes it with the
+        rename-only :meth:`_swap`.  A crash at any step leaves a full
+        copy of the data on disk, never a partial mix; run compaction
+        out-of-band (like an LSM/iceberg rewrite-data-files
+        maintenance job), not concurrently with readers.
+
+        The collection's ANN indexes (``_ann_*``) survive: their rows
+        key on ``chunk_uid``, which the rewrite keeps, so they are
+        renamed into the tmp directory just before the swap (a crash
+        after that carry leaves the index complete under the tmp dir
+        and ``search_ann`` refusing loudly).  The streaming sink's
+        ``_spark_metadata`` log is NOT carried: dropping it is the
+        migration to a plain directory.  Hive partition columns
+        (``partition_by`` / :meth:`upsert_files` collections) are kept
+        as partition directories, and the returned count includes the
+        files inside them.
 
         Layout-aware: a recorded ``range:<col>`` layout is re-applied
         as a GLOBAL range sort across the new files — compaction is
@@ -447,20 +532,26 @@ class VectorCollection:
         the rename and the record silently drop the layout — pruning
         and append re-layout would then degrade without any signal).
         """
+        import math
         import uuid
 
-        jvm_path = self.spark._jvm.org.apache.hadoop.fs.Path(self.path)
-        fs = jvm_path.getFileSystem(
-            self.spark._jsc.hadoopConfiguration()
+        root = self.path.rstrip("/")
+        n_files = max(
+            1, math.ceil(self._data_files(root)[1] / target_file_bytes)
         )
-        total_bytes = fs.getContentSummary(jvm_path).getLength()
-        n_files = max(1, int(total_bytes / target_file_bytes) + (
-            1 if total_bytes % target_file_bytes else 0
-        ))
         token = uuid.uuid4().hex[:8]
-        tmp = self.path.rstrip("/") + f"__compact_{token}"
+        tmp = root + f"__compact_{token}"
         lay = self.layout()
-        live = self.spark.read.parquet(self.path)
+        parts = self._partition_cols()
+        # partition values are rewritten verbatim: with type inference a
+        # "filename=001" dir would come back as "filename=1"
+        infer = "spark.sql.sources.partitionColumnTypeInference.enabled"
+        prev = self.spark.conf.get(infer, "true")
+        self.spark.conf.set(infer, "false")
+        try:
+            live = self.spark.read.parquet(self.path)
+        finally:
+            self.spark.conf.set(infer, prev)
         kind, _, spec = (lay or "").partition(":")
         if kind == "range" and spec:
             (
@@ -474,31 +565,27 @@ class VectorCollection:
 
             zorder_write(live, tmp, spec.split(","), n_files=n_files)
         else:
-            live.repartition(n_files).write.mode("overwrite").parquet(tmp)
+            # hash on the partition columns: each partition value lands
+            # in one task, so partitionBy writes ~one file per value
+            (
+                live.repartition(n_files, *parts)
+                .write.mode("overwrite")
+                .partitionBy(*parts)
+                .parquet(tmp)
+            )
         if lay:
             # promoted directory must already carry its layout record:
             # a crash after the swap can no longer drop it
             self._record_layout(lay, path=tmp)
-        tmp_path = self.spark._jvm.org.apache.hadoop.fs.Path(tmp)
-        trash = self.path.rstrip("/") + f"__retired_{token}"
-        trash_path = self.spark._jvm.org.apache.hadoop.fs.Path(trash)
-        if not fs.rename(jvm_path, trash_path):
-            raise IOError(f"compact: could not retire {self.path}")
-        if not fs.rename(tmp_path, jvm_path):
-            # roll back: put the live data back before failing
-            if fs.rename(trash_path, jvm_path):
-                raise IOError(f"compact: could not promote {tmp}; rolled back")
-            raise IOError(
-                f"compact: could not promote {tmp} AND rollback failed — "
-                f"live data is intact under {trash}"
-            )
-        fs.delete(trash_path, True)
-        listed = fs.listStatus(jvm_path)
-        return sum(
-            1
-            for i in range(len(listed))
-            if listed[i].getPath().getName().endswith(".parquet")
-        )
+        hpath, fs = self._fs()
+        for st in fs.listStatus(hpath(root)):
+            name = st.getPath().getName()
+            if name.startswith("_ann_") and not fs.rename(
+                st.getPath(), hpath(tmp + "/" + name)
+            ):
+                raise IOError(f"compact: could not carry {name} into {tmp}")
+        self._swap(root, tmp, token, "compact")
+        return self._data_files(root)[0]
 
     # ------------------------------------------------------------- scan
     def df(self) -> DataFrame:
@@ -657,10 +744,35 @@ class VectorCollection:
         return self._ann_path(kind) + "/_vectors"
 
     def _ann_vectors_complete(self, kind: str) -> bool:
-        p = self._ann_vectors_path(kind) + "/_SUCCESS"
-        jvm_path = self.spark._jvm.org.apache.hadoop.fs.Path(p)
-        fs = jvm_path.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        return bool(fs.exists(jvm_path))
+        hpath, fs = self._fs()
+        return bool(fs.exists(hpath(self._ann_vectors_path(kind) + "/_SUCCESS")))
+
+    def _ann_index(self, kind: str, op: str) -> str:
+        """Path of the complete ``kind`` index, else a ValueError naming
+        ``op`` — the one completeness gate of every ANN call (every
+        build writes ``_INDEX_SUCCESS`` last)."""
+        from vector_db_ingestor_spark.operators.similarity import (
+            ivf_index_complete,
+        )
+
+        path = self._ann_path(kind)
+        if not ivf_index_complete(self.spark, path):
+            raise ValueError(
+                f"no complete {kind} index at {path}; run "
+                f"build_ann_index(kind={kind!r}) before {op}"
+            )
+        return path
+
+    def _ann_refine_vectors(self) -> str:
+        """Path of the complete ivfpq refine companion, else a
+        ValueError with the rebuild hint."""
+        if not self._ann_vectors_complete("ivfpq"):
+            raise ValueError(
+                f"no refine companion at {self._ann_vectors_path('ivfpq')} "
+                "(index predates the refine contract or its write "
+                "failed); rebuild with build_ann_index(kind='ivfpq')"
+            )
+        return self._ann_vectors_path("ivfpq")
 
     def build_ann_index(
         self,
@@ -687,56 +799,46 @@ class VectorCollection:
         the collection scan, so exact search and ``df()`` are
         unaffected.
 
-        Writes IN PLACE — correct for a first build (nothing is
-        serving yet).  For a drift-triggered retrain of a LIVE index
-        use :meth:`ann_rebuild`, which builds at a tmp path and
-        promotes with a rename-only swap."""
-        self._ann_build_at(
-            self._ann_path(kind), kind,
-            n_centroids=n_centroids, iters=iters, m=m, ksub=ksub,
-        )
+        Always builds into a tmp directory (``_ann_<kind>__rebuild_*``)
+        and promotes it with the rename-only :meth:`_swap`: a first
+        build is a single rename, and a build over a LIVE index keeps
+        the old one serving until the renames — a crash at any step
+        leaves one complete index on disk."""
+        import uuid
 
-    def _ann_build_at(
-        self,
-        path: str,
-        kind: str,
-        n_centroids: int,
-        iters: int,
-        m: int,
-        ksub: int,
-    ) -> None:
-        """Train + persist an ANN index at an explicit ``path`` — the
-        shared body of :meth:`build_ann_index` (in place) and
-        :meth:`ann_rebuild` (tmp dir + swap)."""
         from vector_db_ingestor_spark.operators.similarity import (
             ivf_write,
             ivfpq_train_write,
             vectors_write,
         )
 
+        path = self._ann_path(kind)
+        token = uuid.uuid4().hex[:8]
+        tmp = path + f"__rebuild_{token}"
         if kind == "ivf":
             ivf_write(
-                self.df(), path, dim=self.embedder.dim,
+                self.df(), tmp, dim=self.embedder.dim,
                 n_centroids=n_centroids, iters=iters,
                 id_col="chunk_uid", vec_col="embedding",
             )
         elif kind == "ivfpq":
             ivfpq_train_write(
-                self.df(), path, dim=self.embedder.dim,
+                self.df(), tmp, dim=self.embedder.dim,
                 n_centroids=n_centroids, m=m, ksub=ksub, iters=iters,
                 id_col="chunk_uid", vec_col="embedding",
             )
             # AFTER the codes overwrite (which clears the index dir);
             # parquet's own _SUCCESS marker gates the refine path, so
-            # a crash here degrades to a loud "rebuild" error, never a
-            # partial fetch
+            # a missing companion degrades to a loud "rebuild" error,
+            # never a partial fetch
             vectors_write(
                 self.df().select("chunk_uid", "embedding"),
-                path + "/_vectors",
+                tmp + "/_vectors",
                 id_col="chunk_uid",
             )
         else:
             raise ValueError(f"unknown ANN index kind: {kind!r}")
+        self._swap(path, tmp, token, "build_ann_index")
 
     def ann_rebuild(
         self,
@@ -751,14 +853,11 @@ class VectorCollection:
         :meth:`ann_maintenance_report`'s ``rebuild_recommended`` with
         an action the way ``compact_recommended`` pairs with
         :meth:`ann_compact`): train a FRESH model over the CURRENT
-        collection into a tmp directory, then promote it with the
-        rename-only swap.  :meth:`build_ann_index` overwrites in place
-        (fine for a first build — nothing is serving), but a drift
-        rebuild runs while readers hold the old index; building at tmp
-        keeps the old index live until two directory renames, and a
-        crash at ANY step leaves one complete index on disk (an
-        abandoned tmp is garbage — it is never promoted; the live
-        path is only touched by the final renames).
+        collection through :meth:`build_ann_index`, which builds into a
+        tmp directory and promotes it with the rename-only swap — the
+        old index serves until two directory renames, and a crash at
+        ANY step leaves one complete index on disk.  Unlike
+        :meth:`build_ann_index`, it refuses a never-built index.
 
         Hyperparameters default to the LIVE index's own shape, read
         from its sidecars (``n_centroids`` = centroid count, ``m`` /
@@ -770,34 +869,20 @@ class VectorCollection:
 
         Returns the post-rebuild :meth:`ann_maintenance_report`, so a
         maintenance driver can assert the skew actually reset."""
-        import uuid
-
         from vector_db_ingestor_spark.operators.similarity import (
-            ivf_index_complete,
             ivf_read,
             ivfpq_read,
         )
 
-        path = self._ann_path(kind)
-        if not ivf_index_complete(self.spark, path):
-            raise ValueError(
-                f"no complete {kind!r} index at {path}; first builds go "
-                f"through build_ann_index(kind={kind!r})"
-            )
+        path = self._ann_index(kind, "ann_rebuild")
         if kind == "ivfpq":
             _, cents, cbs = ivfpq_read(self.spark, path)
-            m = m or len(cbs)
-            ksub = ksub or len(cbs[0])
+            m, ksub = m or len(cbs), ksub or len(cbs[0])
         else:
             _, cents = ivf_read(self.spark, path)
-            m, ksub = m or 4, ksub or 16
-        n_centroids = n_centroids or len(cents)
-        token = uuid.uuid4().hex[:8]
-        tmp = path + f"__rebuild_{token}"
-        self._ann_build_at(
-            tmp, kind, n_centroids=n_centroids, iters=iters, m=m, ksub=ksub,
+        self.build_ann_index(
+            kind, n_centroids or len(cents), iters, m or 4, ksub or 16
         )
-        self._ann_promote(path, tmp, token, "ann_rebuild")
         return self.ann_maintenance_report(kind)
 
     def ann_recommend_refine(
@@ -832,30 +917,18 @@ class VectorCollection:
         "met", "grid": {(nprobe, k2): mean recall}, ...}``."""
         from vector_db_ingestor_spark.operators.similarity import (
             fetch_vectors,
-            ivf_index_complete,
             ivfpq_read,
             ivfpq_topk_indexed,
         )
         from vector_db_ingestor_spark.operators.topk import topk_cosine
 
-        kind = "ivfpq"
-        path = self._ann_path(kind)
-        if not ivf_index_complete(self.spark, path):
-            raise ValueError(
-                f"no complete ivfpq index at {path}; run "
-                "build_ann_index(kind='ivfpq') first"
-            )
-        if not self._ann_vectors_complete(kind):
-            raise ValueError(
-                f"no refine companion at {self._ann_vectors_path(kind)}; "
-                "rebuild with build_ann_index(kind='ivfpq')"
-            )
+        path = self._ann_index("ivfpq", "ann_recommend_refine")
+        vecs_path = self._ann_refine_vectors()
         # read the codes table + model sidecars ONCE and drive the
         # ladder's stages directly — the packaged
         # ivfpq_topk_refined_indexed would re-collect both sidecars
         # for every one of the n_queries * depths * 3 grid cells
         codes, cents, cbs = ivfpq_read(self.spark, path)
-        vecs_path = self._ann_vectors_path(kind)
         vectors = self.spark.read.parquet(vecs_path)
         probes = self._ann_probe_vectors(vectors, n_queries, "ann_recommend_refine")
         depths = self._doubling_depths(len(cents))
@@ -989,30 +1062,6 @@ class VectorCollection:
         )
         return {"actions": actions, "before": before, "after": after}
 
-    def _ann_promote(
-        self, path: str, tmp: str, token: str, op: str
-    ) -> None:
-        """Rename-only promotion of a fully-built ``tmp`` index over
-        the live one (the :meth:`compact` idiom, shared by
-        :meth:`ann_compact` and :meth:`ann_rebuild`): live -> trash,
-        tmp -> live, delete trash.  A crash at any step leaves one
-        full copy on disk."""
-        hpath = self.spark._jvm.org.apache.hadoop.fs.Path
-        fs = hpath(path).getFileSystem(self.spark._jsc.hadoopConfiguration())
-        trash = path + f"__retired_{token}"
-        if not fs.rename(hpath(path), hpath(trash)):
-            raise IOError(f"{op}: could not retire {path}")
-        if not fs.rename(hpath(tmp), hpath(path)):
-            if fs.rename(hpath(trash), hpath(path)):
-                raise IOError(
-                    f"{op}: could not promote {tmp}; rolled back"
-                )
-            raise IOError(
-                f"{op}: could not promote {tmp} AND rollback "
-                f"failed — live index intact under {trash}"
-            )
-        fs.delete(hpath(trash), True)
-
     def _novel_rows(
         self,
         batch: DataFrame,
@@ -1105,17 +1154,11 @@ class VectorCollection:
         ``stream_ingest_absorb`` does)."""
         from vector_db_ingestor_spark.operators.similarity import (
             ivf_append,
-            ivf_index_complete,
             ivfpq_append,
             vectors_append,
         )
 
-        path = self._ann_path(kind)
-        if not ivf_index_complete(self.spark, path):
-            raise ValueError(
-                f"no complete {kind!r} index at {path}; run "
-                f"build_ann_index(kind={kind!r}) first"
-            )
+        path = self._ann_index(kind, "ann_absorb")
         if kind == "ivf":
             novel = self._novel_rows(new_chunks, path)
             if novel is not None:
@@ -1177,31 +1220,19 @@ class VectorCollection:
           is untouched until the swap), ``_INDEX_SUCCESS`` written
           LAST so a half-built tmp can never read as complete.
 
-        Swap is rename-only (live -> trash, tmp -> live, delete
-        trash), the :meth:`compact` idiom: a crash at any step leaves
-        one full copy on disk — run out-of-band, not under readers."""
+        Promotion is the rename-only :meth:`_swap` every rewrite
+        shares: a crash at any step leaves one full copy on disk — run
+        out-of-band, not under readers."""
         import math
         import uuid
 
-        from vector_db_ingestor_spark.operators.similarity import (
-            ivf_index_complete,
-            vectors_write,
+        from vector_db_ingestor_spark.operators.similarity import vectors_write
+
+        path = self._ann_index(kind, "ann_compact")
+        hpath, fs = self._fs()
+        n_files = max(
+            1, math.ceil(self._data_files(path)[1] / target_file_bytes)
         )
-
-        path = self._ann_path(kind)
-        if not ivf_index_complete(self.spark, path):
-            raise ValueError(
-                f"no complete {kind!r} index at {path}; run "
-                f"build_ann_index(kind={kind!r}) first"
-            )
-        hpath = self.spark._jvm.org.apache.hadoop.fs.Path
-        fs = hpath(path).getFileSystem(self.spark._jsc.hadoopConfiguration())
-
-        data_bytes = 0
-        for st in fs.listStatus(hpath(path)):
-            if st.getPath().getName().startswith("cid="):
-                data_bytes += fs.getContentSummary(st.getPath()).getLength()
-        n_files = max(1, math.ceil(data_bytes / target_file_bytes))
         token = uuid.uuid4().hex[:8]
         tmp = path + f"__compact_{token}"
 
@@ -1229,23 +1260,8 @@ class VectorCollection:
                 id_col="chunk_uid",
             )
         fs.create(hpath(tmp + "/_INDEX_SUCCESS"), True).close()
-
-        self._ann_promote(path, tmp, token, "ann_compact")
-        return self._ann_data_file_count(kind)
-
-    def _ann_data_file_count(self, kind: str) -> int:
-        """Parquet data files across the index's cid partitions."""
-        hpath = self.spark._jvm.org.apache.hadoop.fs.Path
-        path = self._ann_path(kind)
-        fs = hpath(path).getFileSystem(self.spark._jsc.hadoopConfiguration())
-        n = 0
-        for st in fs.listStatus(hpath(path)):
-            if not st.getPath().getName().startswith("cid="):
-                continue
-            for f in fs.listStatus(st.getPath()):
-                if f.getPath().getName().endswith(".parquet"):
-                    n += 1
-        return n
+        self._swap(path, tmp, token, "ann_compact")
+        return self._data_files(path)[0]
 
     def ann_maintenance_report(
         self, kind: str = "ivf",
@@ -1265,23 +1281,14 @@ class VectorCollection:
         ``compact_recommended`` threshold keys to the file size the
         compaction will actually produce; it defaults to
         ``ann_compact``'s default."""
-        from vector_db_ingestor_spark.operators.similarity import (
-            ivf_index_complete,
-        )
-
-        path = self._ann_path(kind)
-        if not ivf_index_complete(self.spark, path):
+        try:
+            path = self._ann_index(kind, "ann_maintenance_report")
+        except ValueError:
             return {"kind": kind, "complete": False}
         drift = self.ann_drift_report(kind).agg(
             F.max("skew").alias("max_skew"), F.sum("n").alias("n_rows")
         ).first()
-        hpath = self.spark._jvm.org.apache.hadoop.fs.Path
-        fs = hpath(path).getFileSystem(self.spark._jsc.hadoopConfiguration())
-        data_bytes = 0
-        for st in fs.listStatus(hpath(path)):
-            if st.getPath().getName().startswith("cid="):
-                data_bytes += fs.getContentSummary(st.getPath()).getLength()
-        n_files = self._ann_data_file_count(kind)
+        n_files, data_bytes = self._data_files(path)
         target = target_file_bytes
         return {
             "kind": kind,
@@ -1310,17 +1317,11 @@ class VectorCollection:
         no codes), so the report is cheap at any collection size."""
         from vector_db_ingestor_spark.operators.similarity import (
             ivf_drift_report,
-            ivf_index_complete,
             ivf_read,
             ivfpq_read,
         )
 
-        path = self._ann_path(kind)
-        if not ivf_index_complete(self.spark, path):
-            raise ValueError(
-                f"no complete {kind!r} index at {path}; run "
-                f"build_ann_index(kind={kind!r}) first"
-            )
+        path = self._ann_index(kind, "ann_drift_report")
         if kind == "ivf":
             indexed, cents = ivf_read(self.spark, path)
         elif kind == "ivfpq":
@@ -1359,7 +1360,6 @@ class VectorCollection:
         target of 1.0 degrades to exhaustive probing by construction.
         """
         from vector_db_ingestor_spark.operators.similarity import (
-            ivf_index_complete,
             ivf_read,
             ivf_topk,
         )
@@ -1369,13 +1369,9 @@ class VectorCollection:
                 "ann_recommend_nprobe tunes the full-row ivf index; for "
                 "ivfpq tune k2/nprobe via the refine ladder's escalation"
             )
-        path = self._ann_path(kind)
-        if not ivf_index_complete(self.spark, path):
-            raise ValueError(
-                f"no complete {kind!r} index at {path}; run "
-                f"build_ann_index(kind={kind!r}) first"
-            )
-        indexed, cents = ivf_read(self.spark, path)
+        indexed, cents = ivf_read(
+            self.spark, self._ann_index(kind, "ann_recommend_nprobe")
+        )
         probes = self._ann_probe_vectors(
             indexed, n_queries, "ann_recommend_nprobe"
         )
@@ -1486,11 +1482,13 @@ class VectorCollection:
         the full rows — same output shape as :meth:`search` (ranked
         hits with text/metadata) with approximate recall.
 
-        A LIST of queries (Chroma's ``query_texts`` shape, the
-        :meth:`search`/:meth:`search_batch` parity) is served by the
-        BATCHED operators — the union'd shortlist is scanned once for
-        the whole batch — and the result carries a ``query_id`` column
-        (position in the list) with per-query ranks.
+        Every call is served by the BATCHED operators — the union'd
+        shortlist is scanned once for the whole batch.  A LIST of
+        queries (Chroma's ``query_texts`` shape, the
+        :meth:`search`/:meth:`search_batch` parity) gets a ``query_id``
+        column (position in the list) with per-query ranks; a single
+        string is a batch of one whose ``query_id`` is dropped.
+        ``nprobe`` must be at least 1.
 
         ``filter_metadata`` (round 13, reference R11 at the index
         rung): for ``kind="ivf"`` the index keeps full rows, so the
@@ -1532,20 +1530,19 @@ class VectorCollection:
         written by :meth:`build_ann_index` automatically; an index
         predating it fails loudly with a rebuild hint."""
         from vector_db_ingestor_spark.operators.similarity import (
-            ivf_index_complete,
             ivf_read,
-            ivf_topk,
             ivf_topk_batch,
             ivfpq_read,
             ivfpq_topk_batch_indexed,
-            ivfpq_topk_indexed,
             ivfpq_topk_refined_batch_indexed,
-            ivfpq_topk_refined_indexed,
         )
 
         queries = query if isinstance(query, list) else [query]
         if not queries or any(not q or not q.strip() for q in queries):
             raise ValueError("query must be (a list of) non-empty string(s)")
+        if nprobe < 1:
+            # escalation doubles nprobe: 0 would re-probe forever
+            raise ValueError(f"nprobe must be >= 1, got {nprobe}")
         if filter_metadata and kind != "ivf" and not (
             kind == "ivfpq" and refine
         ):
@@ -1556,160 +1553,100 @@ class VectorCollection:
                 "metadata — or use the exact search()"
             )
         meta_pred = self._metadata_predicate(filter_metadata)
-        path = self._ann_path(kind)
-        if not ivf_index_complete(self.spark, path):
+        path = self._ann_index(kind, "search_ann")
+        if refine and kind != "ivfpq":
             raise ValueError(
-                f"no complete {kind!r} index at {path}; run "
-                f"build_ann_index(kind={kind!r}) first"
+                "refine=True applies to kind='ivfpq' (the ivf index "
+                "keeps raw vectors and re-scores exactly already)"
             )
-        if refine:
-            if kind != "ivfpq":
-                raise ValueError(
-                    "refine=True applies to kind='ivfpq' (the ivf index "
-                    "keeps raw vectors and re-scores exactly already)"
-                )
-            if not self._ann_vectors_complete(kind):
-                raise ValueError(
-                    f"no refine companion at {self._ann_vectors_path(kind)} "
-                    "(index predates the refine contract or its write "
-                    "failed); rebuild with build_ann_index(kind='ivfpq')"
-                )
-            k2 = k2 or max(4 * n_results, 30)
-            vecs = self._ann_vectors_path(kind)
-            if meta_pred is not None:
-                # filtered refine (round 14): per-probe candidate
-                # over-fetch + predicate at the collection fetch +
-                # exact re-rank, with underfill escalation.  A list is
-                # served query-by-query because escalation depth is
-                # per-query state.
-                _, cents, _ = ivfpq_read(self.spark, path)
-                outs = []
-                for i, q in enumerate(queries):
-                    probe = self.embedder.embed_one(q, prefix="query")
-                    one = self._refined_filtered_topk(
-                        path, vecs, probe, n_results, k2, nprobe,
-                        len(cents), meta_pred, escalate,
-                    )
-                    if isinstance(query, list):
-                        one = one.withColumn("query_id", F.lit(i))
-                    outs.append(one)
-                if not isinstance(query, list):
-                    return outs[0].orderBy("rank")
-                res = outs[0]
-                for one in outs[1:]:
-                    res = res.unionByName(one)
-                return res.orderBy("query_id", "rank")
-            if isinstance(query, list):
-                probes = [
-                    (i, self.embedder.embed_one(q, prefix="query"))
-                    for i, q in enumerate(queries)
-                ]
-                ranked = ivfpq_topk_refined_batch_indexed(
-                    self.spark, path, vecs, probes,
-                    k=n_results, k2=k2, nprobe=nprobe, id_col="chunk_uid",
-                )
-                return self._fetch_hits(ranked).orderBy("query_id", "rank")
-            probe = self.embedder.embed_one(query, prefix="query")
-            ranked = ivfpq_topk_refined_indexed(
-                self.spark, path, vecs, probe,
+        # a single string is a batch of one; its query_id is dropped
+        probes = [
+            (i, self.embedder.embed_one(q, prefix="query"))
+            for i, q in enumerate(queries)
+        ]
+        k2 = k2 or max(4 * n_results, 30)
+        hits = None
+        if refine and meta_pred is not None:
+            # filtered refine (round 14): per-probe candidate
+            # over-fetch + predicate at the collection fetch + exact
+            # re-rank, with underfill escalation — served
+            # query-by-query because escalation depth is per-query
+            # state; the result rows are already full rows
+            vecs = self._ann_refine_vectors()
+            _, cents, _ = ivfpq_read(self.spark, path)
+            for i, probe in probes:
+                one = self._refined_filtered_topk(
+                    path, vecs, probe, n_results, k2, nprobe, len(cents),
+                    meta_pred, escalate,
+                ).withColumn("query_id", F.lit(i))
+                hits = one if hits is None else hits.unionByName(one)
+        elif refine:
+            ranked = ivfpq_topk_refined_batch_indexed(
+                self.spark, path, self._ann_refine_vectors(), probes,
                 k=n_results, k2=k2, nprobe=nprobe, id_col="chunk_uid",
             )
-            return self._fetch_hits(ranked).orderBy("rank")
-        if isinstance(query, list):
-            probes = [
-                (i, self.embedder.embed_one(q, prefix="query"))
-                for i, q in enumerate(queries)
-            ]
-            if kind == "ivf":
-                indexed, cents = ivf_read(self.spark, path)
-                hits = ivf_topk_batch(
-                    indexed, cents, probes, k=n_results, nprobe=nprobe,
-                    id_col="chunk_uid", vec_col="embedding",
-                    predicate=meta_pred,
-                )
-                if meta_pred is not None and escalate:
-                    # per-query underfill escalation: only queries
-                    # with < n_results survivors re-probe at doubled
-                    # nprobe (each retry is one pruned scan for the
-                    # whole underfilled subset, log2(|cells|) rounds
-                    # worst case).  hits is materialized after every
-                    # round (ADVICE r14: Q*k-scale rows), so each
-                    # round's count — and the final fetch — reads the
-                    # snapshot instead of re-executing every prior
-                    # topk leg (O(rounds^2) pruned scans otherwise)
-                    hits = hits.localCheckpoint(eager=True)
-                    cur = nprobe
-                    while cur < len(cents):
-                        counts = {
-                            r[0]: r[1]
-                            for r in hits.groupBy("query_id")
-                            .count()
-                            .collect()
-                        }
-                        under = [
-                            (qid, vec)
-                            for qid, vec in probes
-                            if counts.get(qid, 0) < n_results
-                        ]
-                        if not under:
-                            break
-                        cur = min(len(cents), cur * 2)
-                        redo = ivf_topk_batch(
-                            indexed, cents, under, k=n_results,
-                            nprobe=cur, id_col="chunk_uid",
-                            vec_col="embedding", predicate=meta_pred,
-                        )
-                        under_ids = [qid for qid, _ in under]
-                        hits = hits.filter(
-                            ~F.col("query_id").isin(under_ids)
-                        ).unionByName(redo).localCheckpoint(eager=True)
-            elif kind == "ivfpq":
-                codes, cents, cbs = ivfpq_read(self.spark, path)
-                hits = ivfpq_topk_batch_indexed(
-                    codes, cents, cbs, probes, k=n_results, nprobe=nprobe,
-                    id_col="chunk_uid",
-                )
-            else:
-                raise ValueError(f"unknown ANN index kind: {kind!r}")
-            ranked = hits.select("query_id", "chunk_uid", "score", "rank")
-            return self._fetch_hits(ranked).orderBy("query_id", "rank")
-        probe = self.embedder.embed_one(query, prefix="query")
-        if kind == "ivf":
+        elif kind == "ivf":
             indexed, cents = ivf_read(self.spark, path)
-            cur = nprobe
-            while True:
-                hits = ivf_topk(
-                    indexed, cents, probe, k=n_results, nprobe=cur,
-                    id_col="chunk_uid", vec_col="embedding",
-                    predicate=meta_pred,
-                )
-                # underfill escalation (filtered searches only): a
-                # count of a k-row TakeOrdered plan per round,
-                # log2(|cells|) rounds worst case; at all-cells-probed
-                # the result IS the exact filtered top-k
-                if (
-                    meta_pred is None
-                    or not escalate
-                    or cur >= len(cents)
-                    or hits.count() >= n_results
-                ):
-                    break
-                cur = min(len(cents), cur * 2)
+            ranked = ivf_topk_batch(
+                indexed, cents, probes, k=n_results, nprobe=nprobe,
+                id_col="chunk_uid", vec_col="embedding",
+                predicate=meta_pred,
+            )
+            if meta_pred is not None and escalate:
+                # per-query underfill escalation: only queries with
+                # < n_results survivors re-probe at doubled nprobe (each
+                # retry is one pruned scan for the whole underfilled
+                # subset, log2(|cells|) rounds worst case; at
+                # all-cells-probed the result IS the exact filtered
+                # top-k).  ranked is materialized after every round
+                # (ADVICE r14: Q*k-scale rows), so each round's count —
+                # and the final fetch — reads the snapshot instead of
+                # re-executing every prior topk leg (O(rounds^2) pruned
+                # scans otherwise)
+                ranked = ranked.localCheckpoint(eager=True)
+                cur = nprobe
+                while cur < len(cents):
+                    counts = {
+                        r[0]: r[1]
+                        for r in ranked.groupBy("query_id")
+                        .count()
+                        .collect()
+                    }
+                    under = [
+                        (qid, vec)
+                        for qid, vec in probes
+                        if counts.get(qid, 0) < n_results
+                    ]
+                    if not under:
+                        break
+                    cur = min(len(cents), cur * 2)
+                    redo = ivf_topk_batch(
+                        indexed, cents, under, k=n_results,
+                        nprobe=cur, id_col="chunk_uid",
+                        vec_col="embedding", predicate=meta_pred,
+                    )
+                    under_ids = [qid for qid, _ in under]
+                    ranked = ranked.filter(
+                        ~F.col("query_id").isin(under_ids)
+                    ).unionByName(redo).localCheckpoint(eager=True)
         elif kind == "ivfpq":
             codes, cents, cbs = ivfpq_read(self.spark, path)
-            hits = ivfpq_topk_indexed(
-                codes, cents, cbs, probe, k=n_results, nprobe=nprobe,
+            ranked = ivfpq_topk_batch_indexed(
+                codes, cents, cbs, probes, k=n_results, nprobe=nprobe,
                 id_col="chunk_uid",
             )
         else:
             raise ValueError(f"unknown ANN index kind: {kind!r}")
-        w = Window.orderBy(F.col("score").desc(), F.col("chunk_uid").asc())
-        ranked = hits.select("chunk_uid", "score").withColumn(
-            "rank", F.row_number().over(w)
-        )
-        # k rows back onto the collection for the full hit: In-pushdown
-        # file-skipping under a range layout, broadcast join otherwise
-        return self._fetch_hits(ranked).orderBy("rank")
+        if hits is None:
+            # k rows per query back onto the collection for the full
+            # hit: In-pushdown file-skipping under a range layout,
+            # broadcast join otherwise
+            hits = self._fetch_hits(
+                ranked.select("query_id", "chunk_uid", "score", "rank")
+            )
+        if isinstance(query, list):
+            return hits.orderBy("query_id", "rank")
+        return hits.drop("query_id").orderBy("rank")
 
     def context_for_rag(
         self,

@@ -195,18 +195,10 @@ def stream_ingest_absorb(
     compaction, never a duplicate absorb.  ``None`` (default) keeps
     the round-14 behavior: maintenance stays out-of-band.
     """
-    from vector_db_ingestor_spark.operators.similarity import (
-        ivf_index_complete,
-    )
     from vector_db_ingestor_spark.pipeline import VectorCollection
 
     coll = VectorCollection(spark, collection_path)
-    if not ivf_index_complete(spark, coll._ann_path(kind)):
-        raise ValueError(
-            f"no complete {kind!r} index under {collection_path}; seed the "
-            f"collection and build_ann_index(kind={kind!r}) before "
-            "streaming absorbs into it"
-        )
+    coll._ann_index(kind, "streaming absorbs into it")
     files = stream_pdf_files(spark, directory, glob, max_files_per_trigger)
     chunks = build_chunks(files, metadata, chunk_size, overlap, embedder)
 
