@@ -1880,6 +1880,25 @@ def test_search_ann_filtered_escalation(spark, tmp_path):
     ]
     assert got_rb0 == single0
 
+    # per-query escalation depth in one batch: one query per category
+    # vocabulary, each must reach its OWN exact filtered top-k
+    batch = [q, "billing refunds loyalty points upgrades"]
+    esc_pq = coll.search_ann(
+        batch, n_results=n_faq, kind="ivfpq", refine=True, nprobe=1, k2=2,
+        filter_metadata=flt,
+    ).collect()
+    for qid, text in enumerate(batch):
+        want_q = [
+            (r.chunk_uid, r.score)
+            for r in coll.search(
+                text, n_results=n_faq, filter_metadata=flt
+            ).collect()
+        ]
+        assert len(want_q) == n_faq
+        assert [
+            (r.chunk_uid, r.score) for r in esc_pq if r.query_id == qid
+        ] == want_q, text
+
 
 def _corpus(spark, tag, n):
     """files(source, filename, file_bytes, content) for n synthetic
@@ -2003,6 +2022,113 @@ def test_compact_keeps_partition_layout(spark, tmp_path):
     assert sorted(
         p.name for p in (tmp_path / "num_coll").glob("filename=*")
     ) == ["filename=001", "filename=002"]
+
+
+def test_df_reads_partition_values_verbatim(spark, tmp_path):
+    """A partition_by column comes back as the strings the caller wrote:
+    "001"/"002" must not be re-typed to the ints 1/2 on read, and
+    search and stats keep working over the partitioned collection."""
+    coll = VectorCollection(spark, str(tmp_path / "verbatim_coll"))
+    chunks = build_chunks(_corpus(spark, "num", 2), chunk_size=60,
+                          overlap=10)
+    coll.overwrite(
+        chunks.withColumn(
+            "filename",
+            F.when(F.col("filename") == "num0.pdf", "001").otherwise("002"),
+        ),
+        partition_by=["filename"],
+    )
+    assert dict(coll.df().dtypes)["filename"] == "string"
+    assert sorted(
+        r.filename for r in coll.df().select("filename").distinct().collect()
+    ) == ["001", "002"]
+    hits = coll.search("lifecycle document", n_results=coll.count()).collect()
+    assert hits and {r.filename for r in hits} == {"001", "002"}
+    assert coll.stats().first().n_files == 2
+
+
+def test_build_ann_index_empty_collection_raises(spark, tmp_path):
+    """Training an index over a zero-row collection is a ValueError
+    naming the empty input, for both index kinds, and leaves no index."""
+    from vector_db_ingestor_spark.operators.similarity import (
+        ivf_index_complete,
+    )
+
+    coll = VectorCollection(spark, str(tmp_path / "empty_coll"))
+    coll.overwrite(
+        build_chunks(_corpus(spark, "e", 1), chunk_size=60, overlap=10)
+        .limit(0)
+    )
+    assert coll.count() == 0
+    for kind in ("ivf", "ivfpq"):
+        with pytest.raises(ValueError, match="empty input"):
+            coll.build_ann_index(kind=kind, n_centroids=4, m=4, ksub=8)
+        assert not ivf_index_complete(spark, coll._ann_path(kind))
+
+
+class _FailingRenames:
+    """A Hadoop FileSystem whose chosen renames fail the Hadoop way
+    (``rename`` returns False); every other call passes through."""
+
+    def __init__(self, fs, fail):
+        self._fs, self._fail = fs, fail
+
+    def rename(self, src, dst):
+        if self._fail(src.getName(), dst.getName()):
+            return False
+        return self._fs.rename(src, dst)
+
+    def __getattr__(self, name):
+        return getattr(self._fs, name)
+
+
+def test_swap_rollback(spark, tmp_path, swap_base, monkeypatch):
+    """The swap's failure branches, driven through a rebuild of a live
+    ivfpq index: a failed promote (tmp -> live) renames the retired live
+    copy back, raises "rolled back" and leaves serving unchanged; when
+    the rollback rename fails too, the error names the
+    ``__retired_<token>`` directory, which still holds a complete copy."""
+    import shutil
+
+    base, _, q, want = swap_base
+    coll_dir = tmp_path / "coll"
+    shutil.copytree(base, coll_dir)
+    coll = VectorCollection(spark, str(coll_dir))
+    hpath, fs = coll._fs()
+    failing = {"rollback": False}
+
+    def fail(src, dst):
+        if dst != "_ann_ivfpq":
+            return False
+        return "__rebuild_" in src or (
+            failing["rollback"] and "__retired_" in src
+        )
+
+    monkeypatch.setattr(
+        coll, "_fs", lambda: (hpath, _FailingRenames(fs, fail))
+    )
+
+    def serve():
+        return [
+            (r.chunk_uid, r.score)
+            for r in coll.search_ann(q, kind="ivfpq", refine=True).collect()
+        ]
+
+    with pytest.raises(IOError, match="rolled back"):
+        coll.build_ann_index(kind="ivfpq", n_centroids=4, m=4, ksub=8)
+    assert (coll_dir / "_ann_ivfpq" / "_INDEX_SUCCESS").exists()
+    assert not list(coll_dir.glob("_ann_ivfpq__retired_*"))
+    assert serve() == want
+
+    failing["rollback"] = True
+    with pytest.raises(IOError, match="rollback failed") as err:
+        coll.build_ann_index(kind="ivfpq", n_centroids=4, m=4, ksub=8)
+    retired = list(coll_dir.glob("_ann_ivfpq__retired_*"))
+    assert len(retired) == 1 and retired[0].name in str(err.value)
+    assert (retired[0] / "_INDEX_SUCCESS").exists()
+    assert (retired[0] / "_vectors" / "_SUCCESS").exists()
+    with pytest.raises(ValueError, match="no complete"):
+        serve()
 
 
 def test_search_ann_rejects_nprobe_below_one(spark, tmp_path):

@@ -627,9 +627,10 @@ def test_ivfpq_index_build_query_decoupled(spark, sf_dir, tmp_path):
 
 
 def test_ivfpq_refined_indexed_prunes_vector_fetch(spark, sf_dir, tmp_path):
-    """The refine rung over PERSISTED artifacts (VERDICT r11 #2): the
-    exact re-rank's vector fetch must be a PRUNABLE point lookup, not a
-    second corpus scan.  Pins all three legs: (a) output equals the
+    """The refine rung over PERSISTED artifacts (VERDICT r11 #2), served
+    as a batch of one: the exact re-rank's vector fetch must be a
+    PRUNABLE point lookup, not a second corpus scan.  Pins all three
+    legs: (a) output equals the
     inline shortlist->rerank composition row-for-row, (b) the fetch is
     an In(vec_id) pushed into the parquet scan, and (c) the
     vectors_write range layout gives files DISJOINT vec_id footer
@@ -643,7 +644,7 @@ def test_ivfpq_refined_indexed_prunes_vector_fetch(spark, sf_dir, tmp_path):
     from vector_db_ingestor_spark.operators.similarity import (
         fetch_vectors,
         ivfpq_topk,
-        ivfpq_topk_refined_indexed,
+        ivfpq_topk_refined_batch_indexed,
         ivfpq_write,
         vectors_write,
     )
@@ -657,8 +658,8 @@ def test_ivfpq_refined_indexed_prunes_vector_fetch(spark, sf_dir, tmp_path):
     ivfpq_write(emb, idx, cents, cbs)
     vectors_write(emb, vecs, n_files=32)
 
-    got = ivfpq_topk_refined_indexed(
-        spark, idx, vecs, PROBE_64, k=10, k2=30, nprobe=4
+    got = ivfpq_topk_refined_batch_indexed(
+        spark, idx, vecs, [(0, PROBE_64)], k=10, k2=30, nprobe=4
     )
     short = ivfpq_topk(emb, cents, cbs, PROBE_64, k=30, nprobe=4).select("vec_id")
     want = topk_cosine(emb.join(F.broadcast(short), "vec_id"), PROBE_64, k=10)

@@ -18,6 +18,15 @@ HNSW; the scalable equivalents are:
   k-means-style centroids (a few fixed Lloyd iterations, deterministic
   seeded init from content hashes), vectors assigned to nearest
   centroid; probes search the ``nprobe`` nearest centroid lists.
+* **IVF-PQ** (:func:`ivfpq_write`, :func:`ivfpq_topk_indexed`) — the
+  IVF routing plus product-quantized residual codes, scored by ADC
+  table lookups.  One residual encoder (:func:`_ivfpq_encode`) feeds
+  every build, append and encode-inline serve; the exact re-rank
+  (refine) ladder is :func:`ivfpq_topk_refined_batch_indexed` over
+  the codes index and a range-laid-out vector table.  Every index
+  build ends with the one ``_INDEX_SUCCESS`` writer
+  (:func:`_mark_index_complete`) that :func:`ivf_index_complete`
+  checks.
 
 Also :func:`simjoin_lsh` — approximate all-pairs similarity self-join
 via spark.ml's BucketedRandomProjectionLSH (euclidean), the stock
@@ -185,8 +194,12 @@ def _assign_cid(
 
     ``round_dp`` rounds each sim before the argmax — the cross-engine
     oracle (``q_ann_ivf_assign``) needs last-ulp sum differences
-    squashed so Spark and DuckDB argmax the same values; the production
-    paths leave it None (full precision).
+    squashed so Spark and DuckDB argmax the same values.  The IVF paths
+    (:func:`ivf_train`, :func:`ivf_write`, :func:`ivf_append`) and the
+    codebook training in :func:`ivfpq_train_write` assign at full
+    precision (None); every IVF-PQ encode that writes or serves codes
+    (:func:`_ivfpq_encode` callers) passes its ``round_dp`` (6 by
+    default).
 
     Evaluation shape (r15 optimization): HOF lambdas are interpreted
     with NO common-subexpression elimination, so the naive
@@ -256,6 +269,9 @@ def ivf_train(
         .collect()
     )
     centroids = [list(r["__v"]) for r in init]
+    if not centroids:
+        v.unpersist()
+        raise ValueError("ivf_train: empty input, no vectors to train on")
     # ONE array-valued agg column instead of dim separate sum columns:
     # the same dim SUM aggregate buffers execute (byte-identical sums
     # and therefore byte-identical centroids), but each Lloyd step's
@@ -343,18 +359,41 @@ def ivf_write(
         .partitionBy("cid")
         .parquet(path)
     )
-    spark = embeddings.sparkSession
+    _write_model(embeddings.sparkSession, path, centroids)
+    return centroids
+
+
+def _write_model(
+    spark,
+    path: str,
+    centroids: list[list[float]],
+    codebooks: list[list[list[float]]] | None = None,
+) -> None:
+    """Persist the model sidecars (``_centroids``, and ``_codebooks``
+    for IVF-PQ) inside the index directory, then mark it complete.
+    The leading underscore makes Spark's reader skip them when
+    scanning the indexed rows."""
     spark.createDataFrame(
         [(i, c) for i, c in enumerate(centroids)], schema="cid INT, cvec ARRAY<DOUBLE>"
     ).coalesce(1).write.mode("overwrite").parquet(path + "/_centroids")
-    # completion marker LAST: the collection write drops its own
-    # _SUCCESS before the _centroids sidecar exists, so a crash between
-    # the two writes would otherwise leave a "successful" index with no
-    # model.  Readers must gate on _INDEX_SUCCESS, not _SUCCESS.
+    if codebooks is not None:
+        spark.createDataFrame(
+            [(s, j, c) for s, cb in enumerate(codebooks) for j, c in enumerate(cb)],
+            schema="s INT, j INT, cvec ARRAY<DOUBLE>",
+        ).coalesce(1).write.mode("overwrite").parquet(path + "/_codebooks")
+    _mark_index_complete(spark, path)
+
+
+def _mark_index_complete(spark, path: str) -> None:
+    """Write ``_INDEX_SUCCESS``, the one completion marker of every
+    index build or rewrite.  Call it LAST: the data write drops its own
+    ``_SUCCESS`` before the model sidecars exist, so a crash between
+    the writes would otherwise leave a "successful" index with no
+    model.  Readers gate on :func:`ivf_index_complete`, not
+    ``_SUCCESS``."""
     jvm_path = spark._jvm.org.apache.hadoop.fs.Path(path + "/_INDEX_SUCCESS")
     fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
     fs.create(jvm_path, True).close()
-    return centroids
 
 
 def ivf_index_complete(spark, path: str) -> bool:
@@ -398,13 +437,12 @@ def ivf_append(
     spark = new_embeddings.sparkSession
     if not ivf_index_complete(spark, path):
         raise ValueError(f"not a complete IVF index (no _INDEX_SUCCESS): {path}")
-    rows = spark.read.parquet(path + "/_centroids").orderBy("cid").collect()
-    centroids = [list(r.cvec) for r in rows]
+    indexed, centroids = ivf_read(spark, path)
     # align the batch to the collection's exact schema: parquet appends
     # with a wider type (e.g. array<double> into an array<float>
     # collection) write fine but BREAK every subsequent read of the
     # partition — a silently index-corrupting footgun
-    stored = [f for f in spark.read.parquet(path).schema.fields if f.name != "cid"]
+    stored = [f for f in indexed.schema.fields if f.name != "cid"]
     batch_cols = set(new_embeddings.columns)
     if batch_cols != {f.name for f in stored}:
         raise ValueError(
@@ -623,46 +661,63 @@ def ivfpq_topk(
     prunes to ``nprobe`` cells, and the top-k compiles to
     ``TakeOrderedAndProject`` — at deployment scale (cid, codes) is a
     persisted table partitioned by cid (``ivf_write``'s layout) and
-    the scan reads only probed partitions and ~m bytes per row.
+    the scan reads only probed partitions and ~m bytes per row.  It is
+    exactly "encode (:func:`_ivfpq_encode`), then
+    :func:`ivfpq_topk_indexed`".
     """
-    m = len(codebooks)
-    dsub = len(codebooks[0][0])
-    short = ivf_shortlist(centroids, probe, nprobe)
+    coded = _ivfpq_encode(embeddings, centroids, codebooks, id_col, vec_col, round_dp)
+    return ivfpq_topk_indexed(
+        coded, centroids, codebooks, probe, k, nprobe, id_col, round_dp
+    )
+
+
+def _ivfpq_encode(
+    embeddings: DataFrame,
+    centroids: list[list[float]],
+    codebooks: list[list[list[float]]],
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    round_dp: int | None = 6,
+    keep_resid: bool = False,
+    id_type: str | None = None,
+) -> DataFrame:
+    """The one IVF-PQ residual encoder: ``(id, cid[, __r],
+    c0..c{m-1})`` — nearest-centroid assignment (:func:`_assign_cid`),
+    residual = vector minus its cell centroid, one :func:`pq_code` per
+    subspace.  Every build, append and encode-inline serve goes
+    through it, so codes written and codes scored cannot drift apart.
+
+    ``round_dp`` rounds the assignment sims and the code distances
+    (None = full-precision assignment, for ``codebooks=[]`` only).
+    ``keep_resid`` keeps the residual as ``__r``: with no codebooks
+    that is the codebook-training input.  ``id_type`` casts the id to
+    the stored codes' type (appends).  Narrow expressions only — the
+    encode rides the scan, and a ``cid`` filter placed above it is
+    pushed below the encode by the optimizer.
+    """
     vec = F.col(vec_col).cast("array<double>")
     assigned = embeddings.select(
-        id_col,
+        F.col(id_col).cast(id_type).alias(id_col) if id_type else id_col,
         vec.alias("v"),
         _assign_cid(vec, centroids, round_dp).alias("cid"),
-    ).filter(F.col("cid").isin(short))
-    cents_lit = lit_double_matrix(centroids)
+    )
     resid = F.zip_with(
         F.col("v"),
-        F.element_at(cents_lit, F.col("cid") + 1),
+        F.element_at(lit_double_matrix(centroids), F.col("cid") + 1),
         lambda a, b: a - b,
     )
     # materialize the residual once per row: inlining the zip_with into
     # every pq_code re-evaluated it per subspace (and per centroid
     # before pq_code bound its slice) — same doubles, one evaluation
-    coded = assigned.withColumn("__r", resid).select(
+    dsub = len(codebooks[0][0]) if codebooks else 0
+    return assigned.withColumn("__r", resid).select(
         id_col,
         "cid",
+        *(["__r"] if keep_resid else []),
         *[
-            pq_code(F.col("__r"), codebooks[s], s * dsub, round_dp).alias(f"c{s}")
-            for s in range(m)
+            pq_code(F.col("__r"), cb, s * dsub, round_dp).alias(f"c{s}")
+            for s, cb in enumerate(codebooks)
         ],
-    )
-    tabs = pq_adc_tables(probe, codebooks)
-    q_dot_c = lit_doubles(
-        [float(sum(p * c for p, c in zip(probe, cc))) for cc in centroids]
-    )
-    adc = F.element_at(q_dot_c, F.col("cid") + 1)
-    for s in range(m):
-        adc = adc + F.element_at(lit_doubles(tabs[s]), F.col(f"c{s}") + 1)
-    return (
-        coded.withColumn("score", F.round(adc, round_dp))
-        .orderBy(F.col("score").desc(), F.col(id_col).asc())
-        .limit(k)
-        .select(id_col, "cid", "score")
     )
 
 
@@ -686,47 +741,17 @@ def ivfpq_write(
     between writes can't leave a "successful" index missing its model
     (the :func:`ivf_write` marker discipline).
     """
-    m = len(codebooks)
-    dsub = len(codebooks[0][0])
     dim = len(centroids[0])
     guarded = embeddings.withColumn(
         vec_col, _checked_vec(vec_col, dim, "ivfpq_write")
     )
-    vec = F.col(vec_col).cast("array<double>")
-    cents_lit = lit_double_matrix(centroids)
-    assigned = guarded.select(
-        id_col, vec.alias("v"), _assign_cid(vec, centroids, round_dp).alias("cid")
-    )
-    resid = F.zip_with(
-        F.col("v"),
-        F.element_at(cents_lit, F.col("cid") + 1),
-        lambda a, b: a - b,
-    )
     (
-        assigned.withColumn("__r", resid)
-        .select(
-            id_col,
-            "cid",
-            *[
-                pq_code(F.col("__r"), codebooks[s], s * dsub, round_dp).alias(f"c{s}")
-                for s in range(m)
-            ],
-        )
+        _ivfpq_encode(guarded, centroids, codebooks, id_col, vec_col, round_dp)
         .write.mode("overwrite")
         .partitionBy("cid")
         .parquet(path)
     )
-    spark = embeddings.sparkSession
-    spark.createDataFrame(
-        [(i, c) for i, c in enumerate(centroids)], schema="cid INT, cvec ARRAY<DOUBLE>"
-    ).coalesce(1).write.mode("overwrite").parquet(path + "/_centroids")
-    spark.createDataFrame(
-        [(s, j, c) for s, cb in enumerate(codebooks) for j, c in enumerate(cb)],
-        schema="s INT, j INT, cvec ARRAY<DOUBLE>",
-    ).coalesce(1).write.mode("overwrite").parquet(path + "/_codebooks")
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(path + "/_INDEX_SUCCESS")
-    fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.create(jvm_path, True).close()
+    _write_model(embeddings.sparkSession, path, centroids, codebooks)
 
 
 def ivfpq_train_write(
@@ -749,17 +774,10 @@ def ivfpq_train_write(
     100 TB both trainings run on a sample; write/encode is the only
     corpus-sized pass."""
     cents = ivf_train(embeddings, dim, n_centroids, iters, id_col, vec_col)
-    vec = F.col(vec_col).cast("array<double>")
-    cents_lit = lit_double_matrix(cents)
-    resid_df = embeddings.select(
-        F.col(id_col),
-        F.zip_with(
-            vec,
-            F.element_at(cents_lit, _assign_cid(vec, cents) + 1),
-            lambda a, b: a - b,
-        ).alias(vec_col),
+    resid = _ivfpq_encode(
+        embeddings, cents, [], id_col, vec_col, round_dp=None, keep_resid=True
     )
-    cbs = pq_train(resid_df, dim, m, ksub, iters, id_col, vec_col)
+    cbs = pq_train(resid, dim, m, ksub, iters, id_col, "__r")
     ivfpq_write(embeddings, path, cents, cbs, id_col, vec_col)
     return cents, cbs
 
@@ -890,43 +908,6 @@ def fetch_vectors(
     return spark.read.parquet(path).filter(F.col(id_col).isin(ids))
 
 
-def ivfpq_topk_refined_indexed(
-    spark,
-    index_path: str,
-    vectors_path: str,
-    probe: list[float],
-    k: int = 10,
-    k2: int = 30,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_dp: int = 6,
-) -> DataFrame:
-    """QUERY TIME, full FAISS IndexRefineFlat ladder over PERSISTED
-    artifacts: ADC shortlist (k2 over-fetch) from the cid-partitioned
-    codes index — partition-pruned, no raw vectors — then an EXACT
-    cosine re-rank of only the k2 survivors fetched from the
-    range-laid-out vector table (:func:`fetch_vectors`, file-skipping
-    In pushdown).  The deployment twin of the inline
-    ``q_ann_ivfpq_refine`` plan: same output contract, but BOTH scans
-    prune — nprobe/|cells| of the codes and ~k2 row-groups of the
-    vectors, so total query cost is sub-linear in corpus size.  The
-    k2-id collect between the stages is shortlist-scale driver state
-    (the centroid/codebook rule, not a data-path collect)."""
-    from vector_db_ingestor_spark.operators.topk import topk_cosine
-
-    codes, cents, cbs = ivfpq_read(spark, index_path)
-    short = ivfpq_topk_indexed(
-        codes, cents, cbs, probe, k=k2, nprobe=nprobe,
-        id_col=id_col, round_dp=round_dp,
-    )
-    ids = [r[0] for r in short.select(id_col).collect()]
-    cand = fetch_vectors(spark, vectors_path, ids, id_col=id_col)
-    return topk_cosine(
-        cand, probe, k=k, id_col=id_col, vec_col=vec_col, round_dp=round_dp
-    )
-
-
 def ivfpq_topk_refined_batch_indexed(
     spark,
     index_path: str,
@@ -939,19 +920,42 @@ def ivfpq_topk_refined_batch_indexed(
     vec_col: str = "embedding",
     round_dp: int = 6,
 ) -> DataFrame:
-    """QUERY TIME, batched refine ladder: the
-    :func:`ivfpq_topk_refined_indexed` contract for Q probes at once —
-    ONE pruned codes scan serves every probe's k2 shortlist
-    (:func:`ivfpq_topk_batch_indexed`), the UNION of shortlist ids is
-    fetched from the range-laid-out vector table in ONE file-skipping
-    ``In``-pushdown pass (:func:`fetch_vectors`), and a broadcast
-    (query_id, id) route table restricts the exact cosine re-rank to
-    exactly each probe's own shortlist — per-probe results are
-    IDENTICAL to running the single-probe refine per query, at the
-    cost of one pruned scan + one ~Q·k2-row fetch instead of Q of
-    each.  The Q·k2 route pairs are shortlist-scale driver state (the
-    centroid rule)."""
-    codes, cents, cbs = ivfpq_read(spark, index_path)
+    """QUERY TIME, the full FAISS IndexRefineFlat ladder over PERSISTED
+    artifacts, for Q probes at once (a single probe is a batch of
+    one): ADC shortlists (k2 over-fetch per probe) from ONE pruned scan
+    of the cid-partitioned codes index (:func:`ivfpq_topk_batch_indexed`
+    — no raw vectors), the UNION of shortlist ids fetched from the
+    range-laid-out vector table in ONE file-skipping ``In``-pushdown
+    pass (:func:`fetch_vectors`), and a broadcast (query_id, id) route
+    table restricting the exact cosine re-rank to each probe's own
+    shortlist.  BOTH scans prune — nprobe/|cells| of the codes and
+    ~Q·k2 row-groups of the vectors — so query cost is sub-linear in
+    corpus size.  The deployment twin of the inline
+    ``q_ann_ivfpq_refine`` plan.  The Q·k2 route pairs collected
+    between the stages are shortlist-scale driver state (the centroid
+    rule, not a data-path collect)."""
+    return _ivfpq_refine(
+        spark, ivfpq_read(spark, index_path), vectors_path, probes,
+        k, k2, nprobe, id_col, vec_col, round_dp,
+    )
+
+
+def _ivfpq_refine(
+    spark,
+    model: tuple[DataFrame, list[list[float]], list[list[list[float]]]],
+    vectors_path: str,
+    probes: list[tuple[int, list[float]]],
+    k: int,
+    k2: int,
+    nprobe: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    round_dp: int = 6,
+) -> DataFrame:
+    """:func:`ivfpq_topk_refined_batch_indexed` over an already-read
+    ``model`` (:func:`ivfpq_read`'s triple), so callers that run the
+    ladder repeatedly read the sidecars once."""
+    codes, cents, cbs = model
     short = ivfpq_topk_batch_indexed(
         codes, cents, cbs, probes, k=k2, nprobe=nprobe,
         id_col=id_col, round_dp=round_dp,
@@ -1014,33 +1018,13 @@ def ivfpq_append(
     if not ivf_index_complete(spark, path):
         raise ValueError(f"not a complete IVF-PQ index (no _INDEX_SUCCESS): {path}")
     codes, centroids, codebooks = ivfpq_read(spark, path)
-    m = len(codebooks)
-    dsub = len(codebooks[0][0])
-    dim = len(centroids[0])
     guarded = new_embeddings.withColumn(
-        vec_col, _checked_vec(vec_col, dim, "ivfpq_append")
-    )
-    vec = F.col(vec_col).cast("array<double>")
-    cents_lit = lit_double_matrix(centroids)
-    assigned = guarded.select(
-        F.col(id_col).cast(dict(codes.dtypes)[id_col]).alias(id_col),
-        vec.alias("v"),
-        _assign_cid(vec, centroids, round_dp).alias("cid"),
-    )
-    resid = F.zip_with(
-        F.col("v"),
-        F.element_at(cents_lit, F.col("cid") + 1),
-        lambda a, b: a - b,
+        vec_col, _checked_vec(vec_col, len(centroids[0]), "ivfpq_append")
     )
     (
-        assigned.withColumn("__r", resid)
-        .select(
-            id_col,
-            "cid",
-            *[
-                pq_code(F.col("__r"), codebooks[s], s * dsub, round_dp).alias(f"c{s}")
-                for s in range(m)
-            ],
+        _ivfpq_encode(
+            guarded, centroids, codebooks, id_col, vec_col, round_dp,
+            id_type=dict(codes.dtypes)[id_col],
         )
         .write.mode("append")
         .partitionBy("cid")
@@ -1076,38 +1060,7 @@ def ivfpq_topk_batch(
     (:func:`ivfpq_topk_batch_indexed`), so inline and indexed batch
     answers are equal by construction given an up-to-date index.
     """
-    m = len(codebooks)
-    dsub = len(codebooks[0][0])
-    union_cids = sorted(
-        {
-            cid
-            for _, vec in probes
-            for cid in ivf_shortlist(centroids, vec, nprobe)
-        }
-    )
-    vec = F.col(vec_col).cast("array<double>")
-    assigned = embeddings.select(
-        id_col,
-        vec.alias("v"),
-        _assign_cid(vec, centroids, round_dp).alias("cid"),
-    ).filter(F.col("cid").isin(union_cids))
-    cents_lit = lit_double_matrix(centroids)
-    resid = F.zip_with(
-        F.col("v"),
-        F.element_at(cents_lit, F.col("cid") + 1),
-        lambda a, b: a - b,
-    )
-    # materialize the residual once per row: inlining the zip_with into
-    # every pq_code re-evaluated it per subspace (and per centroid
-    # before pq_code bound its slice) — same doubles, one evaluation
-    coded = assigned.withColumn("__r", resid).select(
-        id_col,
-        "cid",
-        *[
-            pq_code(F.col("__r"), codebooks[s], s * dsub, round_dp).alias(f"c{s}")
-            for s in range(m)
-        ],
-    )
+    coded = _ivfpq_encode(embeddings, centroids, codebooks, id_col, vec_col, round_dp)
     return ivfpq_topk_batch_indexed(
         coded, centroids, codebooks, probes, k, nprobe, id_col, round_dp
     )

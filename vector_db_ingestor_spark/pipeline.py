@@ -33,6 +33,8 @@ kept.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -543,15 +545,7 @@ class VectorCollection:
         tmp = root + f"__compact_{token}"
         lay = self.layout()
         parts = self._partition_cols()
-        # partition values are rewritten verbatim: with type inference a
-        # "filename=001" dir would come back as "filename=1"
-        infer = "spark.sql.sources.partitionColumnTypeInference.enabled"
-        prev = self.spark.conf.get(infer, "true")
-        self.spark.conf.set(infer, "false")
-        try:
-            live = self.spark.read.parquet(self.path)
-        finally:
-            self.spark.conf.set(infer, prev)
+        live = self.df()
         kind, _, spec = (lay or "").partition(":")
         if kind == "range" and spec:
             (
@@ -589,7 +583,17 @@ class VectorCollection:
 
     # ------------------------------------------------------------- scan
     def df(self) -> DataFrame:
-        return self.spark.read.parquet(self.path)
+        """The collection as written — the one read every query and
+        :meth:`compact` go through.  Partition values come back
+        verbatim (type inference off): a ``partition_by`` STRING
+        "001" stays "001" instead of turning into the int 1."""
+        infer = "spark.sql.sources.partitionColumnTypeInference.enabled"
+        prev = self.spark.conf.get(infer, "true")
+        self.spark.conf.set(infer, "false")
+        try:
+            return self.spark.read.parquet(self.path)
+        finally:
+            self.spark.conf.set(infer, prev)
 
     def count(self) -> int:
         return self.df().count()
@@ -911,66 +915,52 @@ class VectorCollection:
 
         Probes are the first ``n_queries`` indexed vectors by id
         (deterministic self-retrieval, the zero-label tuning proxy).
-        Cost: one exact scan of the companion per probe plus
-        ``n_queries * depths * 3`` pruned k2-row ladders — tuning
-        time, never the serving path.  Returns ``{"nprobe", "k2",
-        "met", "grid": {(nprobe, k2): mean recall}, ...}``."""
+        Cost: one batched exact scan of the companion for all probes,
+        plus one batched ladder per grid cell (``depths * 3`` — one
+        pruned codes scan and one ``In``-pushdown fetch each, every
+        probe at once); the sidecars are read once.  Tuning time,
+        never the serving path.  Returns ``{"nprobe", "k2", "met",
+        "grid": {(nprobe, k2): mean recall}, ...}``."""
         from vector_db_ingestor_spark.operators.similarity import (
-            fetch_vectors,
+            _ivfpq_refine,
             ivfpq_read,
-            ivfpq_topk_indexed,
         )
-        from vector_db_ingestor_spark.operators.topk import topk_cosine
+        from vector_db_ingestor_spark.operators.topk import topk_cosine_batch
 
         path = self._ann_index("ivfpq", "ann_recommend_refine")
         vecs_path = self._ann_refine_vectors()
-        # read the codes table + model sidecars ONCE and drive the
-        # ladder's stages directly — the packaged
-        # ivfpq_topk_refined_indexed would re-collect both sidecars
-        # for every one of the n_queries * depths * 3 grid cells
-        codes, cents, cbs = ivfpq_read(self.spark, path)
+        model = ivfpq_read(self.spark, path)
         vectors = self.spark.read.parquet(vecs_path)
-        probes = self._ann_probe_vectors(vectors, n_queries, "ann_recommend_refine")
-        depths = self._doubling_depths(len(cents))
+        probes = list(enumerate(
+            self._ann_probe_vectors(vectors, n_queries, "ann_recommend_refine")
+        ))
+        exact = self._hit_sets(
+            topk_cosine_batch(
+                vectors,
+                self.spark.createDataFrame(
+                    probes, "query_id INT, query_vec ARRAY<DOUBLE>"
+                ),
+                k=k, id_col="chunk_uid", vec_col="embedding",
+                probe_id_col="query_id",
+            ),
+            len(probes),
+        )
+        depths = self._doubling_depths(len(model[1]))
         k2s = [k, 2 * k, 4 * k]
-        # per-cell recall lists, averaged ONCE at the end: an
-        # incremental `+= rec/len(probes)` float accumulation can read
-        # 0.999... for a true 1.0 (e.g. 6 probes) and spuriously fail
-        # target_recall=1.0 — which this report defines as the
-        # rebuild-codebooks signal
-        recs: dict[tuple[int, int], list[float]] = {
-            (nprobe, k2): [] for nprobe in depths for k2 in k2s
-        }
-        for probe in probes:
-            exact = {
-                r.chunk_uid
-                for r in topk_cosine(
-                    vectors, probe, k=k,
-                    id_col="chunk_uid", vec_col="embedding",
-                ).collect()
-            }
-            for nprobe in depths:
-                for k2 in k2s:
-                    short = ivfpq_topk_indexed(
-                        codes, cents, cbs, probe, k=k2, nprobe=nprobe,
+        grid = {
+            (nprobe, k2): self._mean_recall(
+                self._hit_sets(
+                    _ivfpq_refine(
+                        self.spark, model, vecs_path, probes, k, k2, nprobe,
                         id_col="chunk_uid",
-                    )
-                    ids = [r[0] for r in short.select("chunk_uid").collect()]
-                    got = {
-                        r.chunk_uid
-                        for r in topk_cosine(
-                            fetch_vectors(
-                                self.spark, vecs_path, ids,
-                                id_col="chunk_uid",
-                            ),
-                            probe, k=k,
-                            id_col="chunk_uid", vec_col="embedding",
-                        ).collect()
-                    }
-                    recs[(nprobe, k2)].append(
-                        len(got & exact) / max(1, len(exact))
-                    )
-        grid = {cell: sum(v) / len(v) for cell, v in recs.items()}
+                    ),
+                    len(probes),
+                ),
+                exact,
+            )
+            for nprobe in depths
+            for k2 in k2s
+        }
         chosen = next(
             (
                 (nprobe, k2)
@@ -989,6 +979,25 @@ class VectorCollection:
             "n_queries": len(probes),
             "k": k,
         }
+
+    @staticmethod
+    def _hit_sets(ranked: DataFrame, n: int) -> list[set]:
+        """Per-query ``chunk_uid`` sets of a batched top-k whose
+        ``query_id`` runs 0..n-1 — the recall tuners' one collect."""
+        sets: list[set] = [set() for _ in range(n)]
+        for r in ranked.select("query_id", "chunk_uid").collect():
+            sets[r[0]].add(r[1])
+        return sets
+
+    @staticmethod
+    def _mean_recall(got: list[set], exact: list[set]) -> float:
+        """Mean per-query recall of ``got`` against ``exact`` (both
+        :meth:`_hit_sets`), averaged once at the end: an incremental
+        ``+= rec / n`` accumulation can read 0.999... for a true 1.0
+        and spuriously miss ``target_recall=1.0`` — which the refine
+        report defines as the rebuild-codebooks signal."""
+        recs = [len(g & e) / max(1, len(e)) for g, e in zip(got, exact)]
+        return sum(recs) / len(recs)
 
     def _ann_probe_vectors(
         self, df, n_queries: int, op: str
@@ -1226,7 +1235,10 @@ class VectorCollection:
         import math
         import uuid
 
-        from vector_db_ingestor_spark.operators.similarity import vectors_write
+        from vector_db_ingestor_spark.operators.similarity import (
+            _mark_index_complete,
+            vectors_write,
+        )
 
         path = self._ann_index(kind, "ann_compact")
         hpath, fs = self._fs()
@@ -1259,7 +1271,7 @@ class VectorCollection:
                 tmp + "/_vectors",
                 id_col="chunk_uid",
             )
-        fs.create(hpath(tmp + "/_INDEX_SUCCESS"), True).close()
+        _mark_index_complete(self.spark, tmp)
         self._swap(path, tmp, token, "ann_compact")
         return self._data_files(path)[0]
 
@@ -1348,11 +1360,12 @@ class VectorCollection:
 
         Probes are the first ``n_queries`` indexed vectors by id —
         deterministic, and self-retrieval recall is the standard
-        zero-label proxy for tuning a frozen index.  Cost: one pruned
-        scan per (probe, depth) — ``n_queries * (log2(cells)+1)``
-        k-row jobs, a tuning-time operation to run once per
-        (re)build, not on the serving path.  At 100 TB every job is
-        still nprobe-pruned file-skipping; nothing scans the corpus.
+        zero-label proxy for tuning a frozen index.  Cost: one batched
+        pruned scan per depth — ``log2(cells)+1`` jobs, each serving all
+        ``n_queries`` probes at once — a tuning-time operation to run
+        once per (re)build, not on the serving path.  At 100 TB every
+        job is still nprobe-pruned file-skipping; nothing scans the
+        corpus.
 
         Returns ``{"nprobe": chosen, "curve": {depth: mean recall},
         "target_recall": ..., "n_queries": ..., "k": ...}``; the curve
@@ -1361,7 +1374,7 @@ class VectorCollection:
         """
         from vector_db_ingestor_spark.operators.similarity import (
             ivf_read,
-            ivf_topk,
+            ivf_topk_batch,
         )
 
         if kind != "ivf":
@@ -1372,28 +1385,24 @@ class VectorCollection:
         indexed, cents = ivf_read(
             self.spark, self._ann_index(kind, "ann_recommend_nprobe")
         )
-        probes = self._ann_probe_vectors(
+        probes = list(enumerate(self._ann_probe_vectors(
             indexed, n_queries, "ann_recommend_nprobe"
-        )
+        )))
         depths = self._doubling_depths(len(cents))
-        ids: dict[tuple[int, int], set] = {}
-        for qi, probe in enumerate(probes):
-            for depth in depths:
-                ids[(qi, depth)] = {
-                    r.chunk_uid
-                    for r in ivf_topk(
-                        indexed, cents, probe, k=k, nprobe=depth,
-                        id_col="chunk_uid", vec_col="embedding",
-                    ).collect()
-                }
-        curve = {}
-        for depth in depths:
-            recs = [
-                len(ids[(qi, depth)] & ids[(qi, len(cents))])
-                / max(1, len(ids[(qi, len(cents))]))
-                for qi in range(len(probes))
-            ]
-            curve[depth] = sum(recs) / len(recs)
+        sets = {
+            depth: self._hit_sets(
+                ivf_topk_batch(
+                    indexed, cents, probes, k=k, nprobe=depth,
+                    id_col="chunk_uid", vec_col="embedding",
+                ),
+                len(probes),
+            )
+            for depth in depths
+        }
+        curve = {
+            depth: self._mean_recall(sets[depth], sets[len(cents)])
+            for depth in depths
+        }
         chosen = next(
             (d for d in depths if curve[d] >= target_recall), len(cents)
         )
@@ -1405,64 +1414,59 @@ class VectorCollection:
             "k": k,
         }
 
-    def _refined_filtered_topk(
-        self,
-        path: str,
-        vecs: str,
-        probe: list[float],
+    @staticmethod
+    def _escalate(
+        probes: list[tuple[int, list[float]]],
+        serve: Callable,
+        hit,
         n_results: int,
-        k2: int,
         nprobe: int,
+        k2: int | None,
         n_cells: int,
-        meta_pred,
         escalate: bool,
     ) -> DataFrame:
-        """Filtered IVF-PQ serving through the refine ladder (round
-        14): ADC shortlists ``k2`` candidates (codes carry no
-        metadata, so the shortlist is unfiltered), the exact re-rank
-        pool is fetched as FULL collection rows (:meth:`_fetch_hits` —
-        In-pushdown under a range layout), the metadata predicate
-        applies there, and the top ``n_results`` survivors by exact
-        cosine win.  Underfill escalation doubles BOTH ``nprobe`` and
-        ``k2`` (a selective filter needs a deeper candidate pool, not
-        just wider probing) until filled, the pool is exhausted with
-        every cell probed (the result is then the exact filtered
-        top-k), or ``k2`` hits the 100k fetch cap (the documented
-        driver-state ceiling — at that point use the ivf index or the
-        exact :meth:`search`)."""
-        from vector_db_ingestor_spark.operators.similarity import (
-            ivfpq_topk_refined_indexed,
-        )
-
-        cur_np, cur_k2 = nprobe, k2
-        while True:
-            ranked = ivfpq_topk_refined_indexed(
-                self.spark, path, vecs, probe,
-                k=cur_k2, k2=cur_k2, nprobe=cur_np, id_col="chunk_uid",
+        """Batched filtered serving with per-query underfill escalation
+        — the one loop behind :meth:`search_ann`'s ``kind="ivf"`` and
+        filtered refine paths.  ``serve(todo, nprobe, k2)`` answers a
+        batch at one depth with a ``query_id``-keyed candidate pool;
+        ``hit`` picks the survivors from it (None: every pool row
+        survives).  A query with fewer than ``n_results`` survivors
+        re-runs at doubled ``nprobe`` (and ``k2``; None when the pool
+        depth is ``nprobe`` alone) — the still-underfilled queries as
+        one batch, since they all double in lockstep — until it fills,
+        or is exhausted: every cell probed and a pool shorter than
+        ``k2`` (the result is then the exact filtered top-k), or ``k2``
+        at the 100k fetch cap (the driver-state ceiling — use the ivf
+        index or the exact :meth:`search` beyond it).  Each round's pool
+        is materialized once: the counts and the final answer read that
+        snapshot instead of re-running the round.  Returns the union of
+        every query's final-round survivors; ``escalate=False`` is one
+        lazy round."""
+        if not escalate:
+            pool = serve(probes, nprobe, k2)
+            return pool if hit is None else pool.filter(hit)
+        kept, todo, cur_np, cur_k2 = [], probes, nprobe, k2
+        while todo:
+            pool = serve(todo, cur_np, cur_k2).localCheckpoint(eager=True)
+            surv = pool if hit is None else pool.filter(hit)
+            n_surv = dict(surv.groupBy("query_id").count().collect())
+            n_pool = (
+                dict(pool.groupBy("query_id").count().collect())
+                if cur_k2 else {}
             )
-            # materialize the candidate fetch ONCE per escalation round
-            # (VERDICT r14 #1): the underfill count, the exhaustion
-            # check, and the final rank all read this k2-scale snapshot
-            # instead of re-running the shortlist fetch + predicate
-            fetched = self._fetch_hits(ranked.drop("rank")).localCheckpoint(
-                eager=True
-            )
-            surv = fetched.filter(meta_pred)
-            if not escalate or surv.count() >= n_results:
-                break
-            # fetched is 1:1 with the shortlist (unique ids), so its
-            # count IS the candidate-pool size — no ADC re-run
-            exhausted = (
-                cur_np >= n_cells and fetched.count() < cur_k2
-            )
-            if exhausted or cur_k2 >= 100_000:
-                break
+            done = {
+                qid
+                for qid, _ in todo
+                if n_surv.get(qid, 0) >= n_results
+                or (cur_np >= n_cells
+                    and (cur_k2 is None or n_pool.get(qid, 0) < cur_k2))
+                or (cur_k2 is not None and cur_k2 >= 100_000)
+            }
+            kept.append(surv.filter(F.col("query_id").isin(sorted(done))))
+            todo = [(qid, vec) for qid, vec in todo if qid not in done]
             cur_np = min(n_cells, cur_np * 2)
-            cur_k2 = min(100_000, cur_k2 * 2)
-        w = Window.orderBy(F.col("score").desc(), F.col("chunk_uid").asc())
-        return surv.withColumn("rank", F.row_number().over(w)).filter(
-            F.col("rank") <= n_results
-        )
+            cur_k2 = cur_k2 and min(100_000, cur_k2 * 2)
+        return functools.reduce(DataFrame.unionByName, kept)
 
     def search_ann(
         self,
@@ -1514,8 +1518,11 @@ class VectorCollection:
         IS the exact filtered top-k (the all-cells-probed ==
         exact-filtered property).  ``escalate=False`` restores the
         single-pass behavior: fewer-than-k rows is then the documented
-        underfill signal.  Escalation rounds are log2-bounded and each
-        retry is itself a pruned scan, so the scale story survives: a
+        underfill signal.  Escalation is per query: in a batch, each
+        round re-runs only the still-underfilled queries, together, as
+        one batched call (:meth:`_escalate`).  Rounds are
+        log2-bounded and each retry is itself a pruned scan, so the
+        scale story survives: a
         non-selective filter never escalates, a pathological one
         degrades gracefully toward the exact filtered scan it would
         otherwise silently approximate.
@@ -1530,11 +1537,11 @@ class VectorCollection:
         written by :meth:`build_ann_index` automatically; an index
         predating it fails loudly with a rebuild hint."""
         from vector_db_ingestor_spark.operators.similarity import (
+            _ivfpq_refine,
             ivf_read,
             ivf_topk_batch,
             ivfpq_read,
             ivfpq_topk_batch_indexed,
-            ivfpq_topk_refined_batch_indexed,
         )
 
         queries = query if isinstance(query, list) else [query]
@@ -1566,69 +1573,50 @@ class VectorCollection:
         ]
         k2 = k2 or max(4 * n_results, 30)
         hits = None
-        if refine and meta_pred is not None:
-            # filtered refine (round 14): per-probe candidate
-            # over-fetch + predicate at the collection fetch + exact
-            # re-rank, with underfill escalation — served
-            # query-by-query because escalation depth is per-query
-            # state; the result rows are already full rows
+        if refine:
             vecs = self._ann_refine_vectors()
-            _, cents, _ = ivfpq_read(self.spark, path)
-            for i, probe in probes:
-                one = self._refined_filtered_topk(
-                    path, vecs, probe, n_results, k2, nprobe, len(cents),
-                    meta_pred, escalate,
-                ).withColumn("query_id", F.lit(i))
-                hits = one if hits is None else hits.unionByName(one)
-        elif refine:
-            ranked = ivfpq_topk_refined_batch_indexed(
-                self.spark, path, self._ann_refine_vectors(), probes,
-                k=n_results, k2=k2, nprobe=nprobe, id_col="chunk_uid",
-            )
+            model = ivfpq_read(self.spark, path)
+            if meta_pred is None:
+                ranked = _ivfpq_refine(
+                    self.spark, model, vecs, probes, n_results, k2, nprobe,
+                    id_col="chunk_uid",
+                )
+            else:
+                # filtered refine (round 14): the codes carry no
+                # metadata, so each query's whole k2 shortlist is
+                # re-ranked and fetched as FULL collection rows, where
+                # the predicate applies; the survivors' exact top
+                # n_results win
+                def serve(todo, cur_np, cur_k2):
+                    return self._fetch_hits(
+                        _ivfpq_refine(
+                            self.spark, model, vecs, todo, cur_k2, cur_k2,
+                            cur_np, id_col="chunk_uid",
+                        ).drop("rank")
+                    )
+
+                surv = self._escalate(
+                    probes, serve, meta_pred, n_results, nprobe, k2,
+                    len(model[1]), escalate,
+                )
+                w = Window.partitionBy("query_id").orderBy(
+                    F.col("score").desc(), F.col("chunk_uid").asc()
+                )
+                hits = surv.withColumn("rank", F.row_number().over(w)).filter(
+                    F.col("rank") <= n_results
+                )
         elif kind == "ivf":
             indexed, cents = ivf_read(self.spark, path)
-            ranked = ivf_topk_batch(
-                indexed, cents, probes, k=n_results, nprobe=nprobe,
-                id_col="chunk_uid", vec_col="embedding",
-                predicate=meta_pred,
+            ranked = self._escalate(
+                probes,
+                lambda todo, cur_np, _: ivf_topk_batch(
+                    indexed, cents, todo, k=n_results, nprobe=cur_np,
+                    id_col="chunk_uid", vec_col="embedding",
+                    predicate=meta_pred,
+                ),
+                None, n_results, nprobe, None, len(cents),
+                escalate and meta_pred is not None,
             )
-            if meta_pred is not None and escalate:
-                # per-query underfill escalation: only queries with
-                # < n_results survivors re-probe at doubled nprobe (each
-                # retry is one pruned scan for the whole underfilled
-                # subset, log2(|cells|) rounds worst case; at
-                # all-cells-probed the result IS the exact filtered
-                # top-k).  ranked is materialized after every round
-                # (ADVICE r14: Q*k-scale rows), so each round's count —
-                # and the final fetch — reads the snapshot instead of
-                # re-executing every prior topk leg (O(rounds^2) pruned
-                # scans otherwise)
-                ranked = ranked.localCheckpoint(eager=True)
-                cur = nprobe
-                while cur < len(cents):
-                    counts = {
-                        r[0]: r[1]
-                        for r in ranked.groupBy("query_id")
-                        .count()
-                        .collect()
-                    }
-                    under = [
-                        (qid, vec)
-                        for qid, vec in probes
-                        if counts.get(qid, 0) < n_results
-                    ]
-                    if not under:
-                        break
-                    cur = min(len(cents), cur * 2)
-                    redo = ivf_topk_batch(
-                        indexed, cents, under, k=n_results,
-                        nprobe=cur, id_col="chunk_uid",
-                        vec_col="embedding", predicate=meta_pred,
-                    )
-                    under_ids = [qid for qid, _ in under]
-                    ranked = ranked.filter(
-                        ~F.col("query_id").isin(under_ids)
-                    ).unionByName(redo).localCheckpoint(eager=True)
         elif kind == "ivfpq":
             codes, cents, cbs = ivfpq_read(self.spark, path)
             ranked = ivfpq_topk_batch_indexed(

@@ -7132,9 +7132,9 @@ def q_ann_ivfpq_refine_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
     The exact re-rank costs k2 cosine evaluations total — the recall
     of nprobe x k2 over-fetch with the precision of exact search.
     The persisted-artifact twin — codes index + vec_id range layout,
-    where BOTH scans prune — is ``ivfpq_topk_refined_indexed``
-    (operators/similarity.py, round 12); this declared key is the
-    hash-gated inline composition over the fixture table."""
+    where BOTH scans prune — is ``ivfpq_topk_refined_batch_indexed``
+    with a batch of one (operators/similarity.py); this declared key is
+    the hash-gated inline composition over the fixture table."""
     from vector_db_ingestor_spark.operators.similarity import ivfpq_topk
 
     cents, cbs, _, _ = _ivfpq_params()
@@ -8230,35 +8230,12 @@ def q_vec_pq_quality_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-cell partials merge, so it also runs incrementally per
     append batch."""
     from vector_db_ingestor_spark.functions.vector import dot
-    from vector_db_ingestor_spark.operators.similarity import (
-        _assign_cid,
-        pq_code,
-    )
+    from vector_db_ingestor_spark.operators.similarity import _ivfpq_encode
 
     cents, cbs, m, _ = _ivfpq_params()
-    dsub = EMBEDDING_DIM // m
     emb = load_table(spark, sf_dir, "embeddings")
-    vec = F.col("embedding").cast("array<double>")
-    cents_lit = lit_double_matrix(cents)
-    assigned = emb.select(
-        vec.alias("v"), _assign_cid(vec, cents, round_dp=6).alias("cid")
-    )
-    resid = F.zip_with(
-        F.col("v"),
-        F.element_at(cents_lit, F.col("cid") + 1),
-        lambda a, b: a - b,
-    )
-    # materialize the residual once, then code from the column (r15:
-    # inlining the zip_with into every pq_code re-evaluated it per
-    # subspace — same doubles, one evaluation)
-    coded = assigned.withColumn("r", resid).select(
-        "cid",
-        "r",
-        *[
-            pq_code(F.col("r"), cbs[s], s * dsub, round_dp=6).alias(f"c{s}")
-            for s in range(m)
-        ],
-    )
+    # the index's own encoder, residual kept for the reconstruction
+    coded = _ivfpq_encode(emb, cents, cbs, round_dp=6, keep_resid=True)
     recon = F.concat(
         *[
             F.element_at(
@@ -8268,7 +8245,7 @@ def q_vec_pq_quality_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
             for s in range(m)
         ]
     )
-    d = F.zip_with(F.col("r"), recon, lambda a, b: a - b)
+    d = F.zip_with(F.col("__r"), recon, lambda a, b: a - b)
     err_u = F.round(dot(d, d) * 1000000.0).cast("long")
     return (
         coded.select("cid", err_u.alias("e"))
