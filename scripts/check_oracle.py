@@ -5,12 +5,6 @@ DuckDB over the same parquet tables, then compares row count, column
 set, and exact (order-insensitive) values.  Usage:
 
     python scripts/check_oracle.py [sf_dir] [key ...]
-    python scripts/check_oracle.py --queue [sf_dir] [key ...]
-
-``--queue`` gates the DECLARATION QUEUE (queries.QUEUED_QUERIES — the
-impl/oracle pairs built ahead of their rotation-window slot) with the
-identical comparison the declared keys face, so /verify covers
-tomorrow's keys today.
 """
 
 from __future__ import annotations
@@ -48,9 +42,6 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
 
 def main() -> int:
     args = sys.argv[1:]
-    queue_mode = "--queue" in args
-    if queue_mode:
-        args = [a for a in args if a != "--queue"]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
 
@@ -61,14 +52,8 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
 
-    if queue_mode:
-        from vector_db_ingestor_spark.queries import QUEUED_QUERIES
-
-        queries = {k: fn for k, (fn, _) in QUEUED_QUERIES.items()}
-        oracles = {k: sql for k, (_, sql) in QUEUED_QUERIES.items()}
-    else:
-        queries = entry_mod.queries()
-        oracles = entry_mod.oracle_sql()
+    queries = entry_mod.queries()
+    oracles = entry_mod.oracle_sql()
     failures = []
     for key, fn in queries.items():
         if only and key not in only:

@@ -211,13 +211,10 @@ AUDITS: dict[str, dict] = {
     # declared round 13
     "q_url_curation": {"max_exchange": 0},
     "q_dedup_url": {"max_exchange": 1},
-}
-
-# declaration-queue keys (queries.QUEUED_QUERIES): audited with the same
-# machinery so PLANS.md carries plan evidence BEFORE a key registers.
-# q_nb_classify's bounded 5-row class fan-out is a deliberate broadcast
-# cross join, so it pins partial_agg rather than no_nested_loop.
-QUEUE_AUDITS: dict[str, dict] = {
+    # pins set when these pairs were built (rounds 11-15), ahead of
+    # their declaration; q_nb_classify's bounded 5-row class fan-out is
+    # a deliberate broadcast cross join, so it pins partial_agg rather
+    # than no_nested_loop
     "q_ann_ivf_filtered": {"top_k": True, "max_exchange": 0},
     # the 1-row escalation-depth decision rides a broadcast cross join
     # (scalar-model pattern); the serve pass stays TakeOrdered
@@ -430,12 +427,8 @@ def main() -> None:
         "|---|---|---|---|",
     ]
     failures = 0
-    from vector_db_ingestor_spark.queries import QUEUED_QUERIES
-
-    audited = {**AUDITS, **QUEUE_AUDITS}
-    for key, exp in audited.items():
-        fn = QUERIES.get(key) or QUEUED_QUERIES[key][0]
-        df = fn(spark, sf_dir)
+    for key, exp in AUDITS.items():
+        df = QUERIES[key](spark, sf_dir)
         # Execute df's OWN QueryExecution so AQE settles on the final
         # plan (a noop write would spawn a separate QueryExecution and
         # leave df's plan un-adapted — the audited string would be the

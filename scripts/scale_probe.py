@@ -1,63 +1,96 @@
-"""Scale-probe: run the candidate-generating operator families at 1x,
-3x, and 10x the sf0.1 corpus (deterministic in-memory replication with
-id offsets) and report wall-time scaling factors.
+"""Scale runner: time declared query keys on the fixture corpus
+replicated ``factor`` times, and append the measured scaling to
+SCALE_PROBE.md.
 
-The point: a bucketed/blocked candidate plan should scale ~linearly in
-corpus size (bucket count grows with data, bucket size stays bounded),
-while anything accidentally quadratic shows super-linear growth here
-long before it melts a 1000-executor cluster.  Writes SCALE_PROBE.md.
+    python scripts/scale_probe.py [sf_dir] [factors] [reps] key [key ...]
+
+``factors`` is comma-separated (default ``30,100``), ``reps`` the timed
+repetitions per leg (default 3).  The local core count is
+``SPARK_GRAFT_CPUS``, as for every session ``get_spark`` builds, so a
+core-scaling comparison is the same command run under two values.
+
+For each factor, every fixture table in ``tables.TABLES`` is replicated
+once into a temp fixture dir (``FILES`` parquet files per table), and
+each key is timed calling the production callable exactly as the driver
+does, ``QUERIES[key](spark, dir)``, the way bench.py times it: one noop
+sink warm-up, then every rep rebuilds the plan, runs it to the noop
+sink and calls ``release_all()``.  Each leg also reports the first
+DataFrame build (Python plan build plus any eager driver jobs) and the
+Catalyst analysis / optimization / planning ms of a fresh plan.
 
 Replication must grow the corpus WITHOUT growing duplicate-group sizes:
-naive identical copies turn every document into a k-clone duplicate
-cluster, and pair-producing dedup output is inherently quadratic in
-clone-group size (first measured run: embed_near_dups went 38x at 10x
-data purely from clone-pair output — see SCALING.md "order exact dedup
-first").  So each copy k is transformed by a structure-preserving,
-cross-copy-disjoint bijection:
+identical copies turn every document into a k-clone duplicate cluster,
+and pair-producing dedup output is quadratic in clone-group size (first
+measured run: embed_near_dups went 38x at 10x data purely from
+clone-pair output — see SCALING.md "order exact dedup first").  So
+copy k of every row is transformed by a structure-preserving,
+cross-copy-disjoint bijection, and its key columns get ``+ k *
+ID_STRIDE``:
 
-* embeddings — elementwise sign mask s_k in {-1,+1}^dim (same mask for
-  every vector of copy k): dot(a*s, b*s) == dot(a, b) BIT-EXACTLY, so
-  intra-copy near-dup structure and LSH-bucket occupancy statistics are
-  preserved, while cross-copy cosines collapse toward 0 and buckets
-  decorrelate.
+* embeddings — elementwise sign mask s_k in {-1,+1}^dim (one mask per
+  copy): dot(a*s, b*s) == dot(a, b) BIT-EXACTLY, so intra-copy near-dup
+  structure and LSH-bucket occupancy are preserved, while cross-copy
+  cosines collapse toward 0.
 * documents — per-copy alphabet rotation via translate(): a bijection
   on tokens, so intra-copy gram equality (and jaccard) is exact, while
   cross-copy grams are disjoint.
+* events — disjoint ``user_id`` ranges per copy.
+* customer / supplier / part / orders / lineitem — every key column
+  (``REL_KEYS``) offset, so cross-copy rows never join.
+* nation, region — dimension tables, copied unchanged.
 
-Copy k of row i gets id = i + k * ID_STRIDE.  Near-dup density per
-unit of corpus is then constant as the corpus grows — the honest
-scaling regime.
-
-Run: python scripts/scale_probe.py [sf_dir] [reps]
+Near-dup and join density per unit of corpus is then constant as the
+corpus grows — the honest scaling regime.
 """
 
 from __future__ import annotations
 
+import math
 import os
+import re
+import shutil
 import statistics
 import sys
+import tempfile
 import time
+from typing import NamedTuple
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from vector_db_ingestor_spark.constants import EMBEDDING_DIM, PROBE_64
+from vector_db_ingestor_spark.caching import release_all
+from vector_db_ingestor_spark.constants import EMBEDDING_DIM
+from vector_db_ingestor_spark.queries import QUERIES
 from vector_db_ingestor_spark.session import get_spark
-from vector_db_ingestor_spark.tables import load_table
+from vector_db_ingestor_spark.tables import TABLES, load_table
 
 ID_STRIDE = 10_000_000
 
 ALPHABET = "abcdefghijklmnopqrstuvwxyz"
+
+# parquet files per replicated table: fixed, so a leg's scan
+# parallelism does not change with SPARK_GRAFT_CPUS
+FILES = 32
+
+REL_KEYS = {
+    "customer": ["c_custkey"],
+    "supplier": ["s_suppkey"],
+    "part": ["p_partkey"],
+    "orders": ["o_orderkey", "o_custkey"],
+    "lineitem": ["l_orderkey", "l_partkey", "l_suppkey"],
+}
+
+SCALE_PROBE_MD = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "SCALE_PROBE.md"
+)
 
 
 def _sign_mask(k: int, dim: int) -> list[float]:
     """Deterministic ±1 mask for copy k (identity for k=0)."""
     if k == 0:
         return [1.0] * dim
-    import math
-
     return [1.0 if math.sin(0.9 * k * (i + 1) + 0.17) > 0 else -1.0 for i in range(dim)]
 
 
@@ -116,9 +149,14 @@ def replicate_embeddings(df: DataFrame, factor: int, dim: int) -> DataFrame:
     out = _replicated(df, "vec_id", factor)
     masks = F.array(*[F.lit(_sign_mask(k, dim)) for k in range(factor)])
     mask = F.element_at(masks, F.col("__k") + 1)
+    # x * ±1 is exact in any float width, so casting back keeps every
+    # leg at the fixture's element type (a float -> double widening
+    # would double the vector bytes of the replicated legs only)
     return out.withColumn(
         "embedding",
-        F.zip_with(F.col("embedding").cast("array<double>"), mask, lambda x, s: x * s),
+        F.zip_with(
+            F.col("embedding").cast("array<double>"), mask, lambda x, s: x * s
+        ).cast(df.schema["embedding"].dataType),
     ).drop("__k")
 
 
@@ -134,293 +172,56 @@ def replicate_events(df: DataFrame, factor: int) -> DataFrame:
     ).drop("__k")
 
 
-def round4_probes(
-    spark: SparkSession,
-    sf_dir: str,
-    factor: int,
-    work_dir: str,
-    ivf_rows: dict[str, dict[int, int]],
-) -> dict[str, DataFrame]:
-    """Probes for the round-4 additions (queries.py: q_text_boilerplate,
-    q_pack_sequences, q_stream_join, q_ann_ivf_batch).  The first three
-    mirror the query plans over replicated inputs; the IVF pair builds
-    a fresh index per factor OUTSIDE the timed region and then times
-    one-probe vs four-probe query cost — the batched plan must ride the
-    UNION of the probes' shortlists (one pruned scan), not pay B full
-    scans."""
-    from vector_db_ingestor_spark.operators.similarity import (
-        ivf_read,
-        ivf_shortlist,
-        ivf_topk,
-        ivf_topk_batch,
-        ivf_write,
-    )
-    from vector_db_ingestor_spark.queries import (
-        boilerplate_top50,
-        pack_sequences_plan,
-    )
-    from vector_db_ingestor_spark.streaming.windows import stream_stream_attribution
-
-    docs = replicate_docs(load_table(spark, sf_dir, "documents"), factor)
-    emb = replicate_embeddings(
-        load_table(spark, sf_dir, "embeddings"), factor, EMBEDDING_DIM
-    )
-    ev = replicate_events(load_table(spark, sf_dir, "events"), factor)
-
-    # production plans over replicated inputs — shared DataFrame cores,
-    # so a query change can never leave the probe measuring a stale plan
-    boilerplate = boilerplate_top50(docs)
-    pack = pack_sequences_plan(docs)
-
-    # --- stream-join batch twin (hash join on user_id + range residual)
-    attribution = stream_stream_attribution(
-        ev.filter(F.col("event_type") == "click"),
-        ev.filter(F.col("event_type") == "purchase"),
-        horizon="1 hour",
-    )
-
-    # --- IVF: build per-factor index (NOT timed), query single vs batch.
-    # The batch is CORRELATED probes (small deterministic perturbations
-    # of one query — the realistic shape: query batches cluster), so
-    # their nprobe shortlists overlap and the union scan is strictly
-    # smaller than B separate scans.  Adversarially-diverse probes
-    # degrade to union=all partitions — same bytes as B scans, still
-    # one job; that ceiling is noted in the report.
-    import math as _m
-
-    idx_path = os.path.join(work_dir, f"ivf_x{factor}")
-    ivf_write(emb, idx_path, dim=EMBEDDING_DIM, n_centroids=16, iters=1)
-    indexed, cents = ivf_read(spark, idx_path)
-    batch_probes = [
-        (b, [x + 0.05 * _m.sin(7.0 * b * (i + 1)) for i, x in enumerate(PROBE_64)])
-        for b in range(4)
-    ]
-    shortlists = [ivf_shortlist(cents, p, 4) for _, p in batch_probes]
-    union_cids = sorted({c for s in shortlists for c in s})
-    # per-cid row counts once; separate-scan cost is the SUM over each
-    # probe's OWN shortlist (probes may shortlist different cids)
-    cid_rows = {
-        r["cid"]: r["n"]
-        for r in indexed.groupBy("cid").agg(F.count("*").alias("n")).collect()
-    }
-    scanned_union = sum(cid_rows.get(c, 0) for c in union_cids)
-    scanned_separate = sum(cid_rows.get(c, 0) for s in shortlists for c in s)
-    ivf_rows.setdefault("union_cids", {})[factor] = len(union_cids)
-    ivf_rows.setdefault("rows_union", {})[factor] = scanned_union
-    ivf_rows.setdefault("rows_4_separate", {})[factor] = scanned_separate
-    print(
-        f"x{factor}: ivf batch4 union={len(union_cids)}/16 cids, "
-        f"rows scanned once={scanned_union} vs 4 separate scans="
-        f"{scanned_separate}"
-    )
-    ivf_single = ivf_topk(indexed, cents, PROBE_64, k=10, nprobe=4)
-    ivf_batch4 = ivf_topk_batch(indexed, cents, batch_probes, k=10, nprobe=4)
-
-    return {
-        "boilerplate_top50": boilerplate,
-        "pack_sequences": pack,
-        "stream_join_attrib": attribution,
-        "ivf_topk_single": ivf_single,
-        "ivf_topk_batch4": ivf_batch4,
-    }
-
-
-def round5_probes(
-    spark: SparkSession, sf_dir: str, factor: int
-) -> dict[str, DataFrame]:
-    """Probes for the round-5 retrieval suite.  BM25: the per-copy
-    alphabet rotation means the query terms match only copy 0, so
-    matching rows stay CONSTANT while the scanned token stream grows —
-    the probe times exactly the corpus-sized explode stage that
-    dominates at 100 TB.  PQ encode: the narrow per-row argmin
-    projection (the one map stage that encodes a 100 TB corpus) must
-    ride the scan linearly."""
-    from vector_db_ingestor_spark.operators.retrieval import bm25_scores
-    from vector_db_ingestor_spark.operators.similarity import (
-        pq_code,
-        pq_codebooks,
-    )
-    from vector_db_ingestor_spark.queries import _BM25_TERMS
-
-    docs = replicate_docs(load_table(spark, sf_dir, "documents"), factor)
-    emb = replicate_embeddings(
-        load_table(spark, sf_dir, "embeddings"), factor, EMBEDDING_DIM
-    )
-    m, ksub = 4, 16
-    dsub = EMBEDDING_DIM // m
-    cbs = pq_codebooks(EMBEDDING_DIM, m, ksub)
-    enc = emb.select(
-        "vec_id",
-        *[
-            pq_code(F.col("embedding"), cbs[s], s * dsub).alias(f"c{s}")
-            for s in range(m)
-        ],
-    )
-    return {
-        "bm25_scores": bm25_scores(docs, _BM25_TERMS),
-        "pq_encode": enc,
-    }
-
-
-def probes(spark: SparkSession, sf_dir: str, factor: int) -> dict[str, DataFrame]:
-    from vector_db_ingestor_spark.operators.dedup import (
-        embedding_near_dups,
-        minhash_verified_pairs,
-        ngram_jaccard_pairs,
-        simhash_near_dups,
-    )
-    from vector_db_ingestor_spark.operators.similarity import auto_n_bits, lsh_topk
-    from vector_db_ingestor_spark.operators.topk import topk_cosine
-
-    docs = replicate_docs(load_table(spark, sf_dir, "documents"), factor)
-    emb_base = load_table(spark, sf_dir, "embeddings")
-    # base count comes from the fixture actually loaded, not a literal:
-    # sf_dir is a CLI parameter, and a hardcoded sf0.1 row count would
-    # silently mis-size n_bits at any other scale
-    base_n = emb_base.count()
-    emb = replicate_embeddings(emb_base, factor, EMBEDDING_DIM)
-    probe_df = spark.createDataFrame(
-        [(0, PROBE_64)], schema="query_id INT, query_vec ARRAY<DOUBLE>"
-    )
-    return {
-        "minhash_verified": minhash_verified_pairs(docs, threshold=0.5),
-        # per-copy token rotation keeps gram document-frequencies
-        # constant, so the cap does NOT scale with factor
-        "ngram_capped": ngram_jaccard_pairs(
-            docs, block_col="lang", n=2, threshold=0.2, max_df=5
-        ),
-        # bucket count must track corpus size (auto_n_bits): fixed
-        # n_bits measured quadratic (43x at 10x rows) — see SCALING.md
-        "embed_near_dups": embedding_near_dups(
-            emb,
-            threshold=0.3,
-            dim=EMBEDDING_DIM,
-            n_bits=auto_n_bits(base_n * factor, target_bucket=8),
-        ),
-        "lsh_topk": lsh_topk(emb, probe_df, dim=EMBEDDING_DIM, k=10, n_bits=4),
-        "exact_topk": topk_cosine(emb, PROBE_64, k=10),
-        # one Arrow fingerprint pass + reused band exchange (round-5
-        # plan); 16-bit pigeonhole buckets keep collision fan-out flat
-        # as the corpus grows, so time should ride the kernel linearly.
-        # NOTE max_hamming=10 > bands-1: banded (partial) recall by
-        # declaration — the probe measures candidate volume, not
-        # exhaustive Hamming-<=10 enumeration (see simhash_near_dups)
-        "simhash_near_dups": simhash_near_dups(docs, max_hamming=10, bands=4),
-    }
-
-
-def stage_probes(
-    spark: SparkSession, sf_dir: str, factor: int
-) -> dict[str, DataFrame]:
-    """Per-stage split of the two operators whose end-to-end ratio ran
-    superlinear (see SCALE_PROBE.md history): candidate GENERATION alone
-    vs the full candidates+verify pipeline.  The verify share is the
-    difference; candidate/output row counts separate compute growth from
-    output growth."""
-    from vector_db_ingestor_spark.operators.dedup import (
-        embedding_near_dups,
-        minhash_candidates,
-        minhash_verified_pairs,
-    )
-    from vector_db_ingestor_spark.operators.similarity import auto_n_bits
-
-    docs = replicate_docs(load_table(spark, sf_dir, "documents"), factor)
-    emb_base = load_table(spark, sf_dir, "embeddings")
-    emb = replicate_embeddings(emb_base, factor, EMBEDDING_DIM)
-    n_bits = auto_n_bits(emb_base.count() * factor, target_bucket=8)
-    print(f"x{factor}: auto_n_bits -> {n_bits}")
-    return {
-        "minhash_cand": minhash_candidates(docs, with_estimate=False),
-        "minhash_full": minhash_verified_pairs(docs, threshold=0.5),
-        # threshold=-1 keeps every candidate: same plan, no verify-filter
-        # selectivity, so this times candidate-gen + cosine scoring
-        "embed_cand": embedding_near_dups(
-            emb, threshold=-1.0, dim=EMBEDDING_DIM, n_bits=n_bits
-        ),
-        "embed_full": embedding_near_dups(
-            emb, threshold=0.3, dim=EMBEDDING_DIM, n_bits=n_bits
-        ),
-    }
-
-
-def deep_probes(
-    spark: SparkSession, sf_dir: str, factor: int
-) -> dict[str, DataFrame]:
-    """The dedup families re-probed at a deeper factor (30x): one
-    decade (1x->10x) can hide a slow quadratic behind amortizing
-    constants, so the round-6 probe adds a second decade-ish step.
-    Linear-in-rows designs should show 30x/10x time ratios near 3."""
-    from vector_db_ingestor_spark.operators.dedup import ngram_jaccard_pairs
-
-    d = stage_probes(spark, sf_dir, factor)
-    docs = replicate_docs(load_table(spark, sf_dir, "documents"), factor)
-    d["ngram_capped"] = ngram_jaccard_pairs(
-        docs, block_col="lang", n=2, threshold=0.2, max_df=5
-    )
-    return d
-
-
-def ngram_crossover(
-    spark: SparkSession,
-    sf_dir: str,
-    factors: tuple[int, ...] = (1, 3, 10, 30),
-    max_df: int = 5,
-) -> dict[int, tuple[int, int]]:
-    """Pair-join input volume for n-gram jaccard, uncapped vs
-    hot-gram-capped, under SHARED-VOCABULARY growth (copies keep the
-    original text verbatim, so corpus-wide gram document-frequencies
-    scale WITH the corpus — the realistic 100 TB regime; the main
-    probe's per-copy token rotation deliberately holds per-gram df
-    constant, which is exactly the regime where the uncapped quadratic
-    stays hidden).  Reported: sum over (block, gram) of C(df, 2) — the
-    rows the gram-sharing pair join must process, the quantity wall
-    time follows.  Computed analytically from one df-count aggregation
-    (no join is executed), so 30x is cheap to measure.  Under verbatim
-    growth every gram eventually exceeds the cap, so the capped column
-    collapsing toward 0 is expected (real corpora add new RARE grams as
-    they grow); the evidence is the uncapped column's ~factor^2 blowup.
-    """
-    from vector_db_ingestor_spark.operators.dedup import word_shingles
-
-    out: dict[int, tuple[int, int]] = {}
-    for f in factors:
-        docs = load_table(spark, sf_dir, "documents")
-        if f > 1:
-            docs = _replicated(docs, "doc_id", f).drop("__k")
-        toks = (
-            docs.select(
-                F.col("lang").alias("blk"),
-                F.explode(word_shingles(F.col("text"), 2)).alias("g"),
-            )
-            .groupBy("blk", F.xxhash64("g").alias("gram"))
-            .count()
+def _replicate_rel(df: DataFrame, id_cols: list[str], factor: int) -> DataFrame:
+    """factor copies of a relational table with EVERY listed key column
+    offset into a disjoint per-copy range — cross-copy rows can never
+    join and per-key group/partition sizes stay constant as the corpus
+    grows (the relational twin of the doc/embedding bijections)."""
+    if factor == 1:
+        return df
+    out = _replicated(df, id_cols[0], factor)
+    for c in id_cols[1:]:
+        out = out.withColumn(
+            c, F.col(c) + F.col("__k").cast("long") * F.lit(ID_STRIDE)
         )
-        pairs = F.col("count") * (F.col("count") - 1) / 2
-        row = toks.agg(
-            F.sum(pairs).alias("uncapped"),
-            F.sum(
-                F.when(F.col("count") <= max_df, pairs).otherwise(0.0)
-            ).alias("capped"),
-        ).collect()[0]
-        out[f] = (int(row["uncapped"]), int(row["capped"] or 0))
-        print(
-            f"x{f}: ngram pair-join rows uncapped={out[f][0]} "
-            f"capped(df<={max_df})={out[f][1]}"
-        )
+    return out.drop("__k")
+
+
+def replicate_table(
+    spark: SparkSession, sf_dir: str, name: str, factor: int
+) -> DataFrame:
+    df = load_table(spark, sf_dir, name)
+    if name == "documents":
+        return replicate_docs(df, factor)
+    if name == "embeddings":
+        return replicate_embeddings(df, factor, EMBEDDING_DIM)
+    if name == "events":
+        return replicate_events(df, factor)
+    if name in REL_KEYS:
+        return _replicate_rel(df, REL_KEYS[name], factor)
+    return df  # nation, region
+
+
+def write_fixture(spark: SparkSession, sf_dir: str, factor: int, out_dir: str) -> None:
+    """Materialize every fixture table at ``factor`` under ``out_dir``,
+    laid out like an sf_dir, so the replicator stays out of the timed
+    plans and the keys run unmodified."""
+    for name in TABLES:
+        replicate_table(spark, sf_dir, name, factor).repartition(FILES).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(out_dir, f"{name}.parquet"))
+
+
+def catalyst_phases(df: DataFrame) -> dict[str, int]:
+    """Phase name -> duration ms from the JVM-side phase tracker."""
+    qe = df._jdf.queryExecution()
+    qe.executedPlan()  # force analysis -> physical planning
+    out: dict[str, int] = {}
+    it = qe.tracker().phases().iterator()
+    while it.hasNext():
+        kv = it.next()
+        out[str(kv._1())] = int(kv._2().endTimeMs() - kv._2().startTimeMs())
     return out
-
-
-def _time_median(df: DataFrame, reps: int) -> float:
-    """Warm once with the SAME action that is timed (a noop write —
-    count() warms a different physical plan and leaves the first timed
-    rep cold), then return the median of reps timed writes."""
-    df.write.format("noop").mode("overwrite").save()
-    ts = []
-    for _ in range(reps):
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        ts.append(time.perf_counter() - t0)
-    return statistics.median(ts)
 
 
 def monotone_violations(
@@ -446,7 +247,7 @@ def time_with_guard(
     builders: "dict[str, dict[int, object]]",
     reps: int,
     linear: set[str],
-    timer=None,
+    timer,
     retime_over: float | None = None,
 ) -> tuple[dict[str, dict[int, float]], set[str]]:
     """Time every (family, factor) leg with the measurement discipline
@@ -458,9 +259,9 @@ def time_with_guard(
     returned in ``polluted`` so the published table marks the row
     instead of presenting a number the box already disproved.
 
-    ``builders[name][factor]`` is a zero-arg callable returning the
-    DataFrame to time (rebuilt per timing so re-runs don't reuse a
-    cached plan); ``timer`` is injectable for tests.
+    ``builders[name][factor]`` is a zero-arg callable returning what
+    ``timer(leg, reps)`` times (called afresh per timing so re-runs
+    don't reuse a cached plan).
 
     ``retime_over`` (round 12, from the 24-family queue-probe lesson:
     a long back-to-back run heats the box enough to pollute its LATER
@@ -470,7 +271,6 @@ def time_with_guard(
     whatever they say.  This is not retry-until-it-fits: the rerun
     always replaces the first reading, a still-high rerun stays in the
     table, and only the first reading's contention is removed."""
-    timer = timer or _time_median
 
     def _retime(name: str, tag: str) -> None:
         for factor in sorted(builders[name]):
@@ -513,1621 +313,131 @@ def time_with_guard(
     return times, polluted
 
 
-def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    reps = int(sys.argv[2]) if len(sys.argv) > 2 else 2
-    factors = (1, 3, 10)
-    # the legacy full probe REWRITES SCALE_PROBE.md; every later runner
-    # appends.  Refuse UP FRONT (before any jobs run) to clobber an
-    # accumulated record: rounds of appended evidence outrank a fresh
-    # base table.
-    _out = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "SCALE_PROBE.md",
-    )
-    if os.path.exists(_out) and "## " in open(_out).read():
-        raise SystemExit(
-            f"{_out} already carries appended probe sections; the base "
-            "1x/3x/10x rewrite would clobber them.  Move the file aside "
-            "first if a fresh base table is really wanted."
-        )
-    spark = get_spark("scale_probe")
+class Leg(NamedTuple):
+    key: str
+    factor: int
+    fixture: str
 
-    import shutil
-    import tempfile
 
-    work_dir = tempfile.mkdtemp(prefix="scale_probe_ivf_")
-    ivf_rows: dict[str, dict[int, int]] = {}
-    results: dict[str, dict[int, float]] = {}
-    counts: dict[str, dict[int, int]] = {}
-    rows_at: dict[int, int] = {}
-    try:
-        for factor in factors:
-            rows_at[factor] = replicate_docs(
-                load_table(spark, sf_dir, "documents"), factor
-            ).count()
-            stage = stage_probes(spark, sf_dir, factor)
-            qs = {
-                **probes(spark, sf_dir, factor),
-                **round5_probes(spark, sf_dir, factor),
-                **stage,
-                **round4_probes(spark, sf_dir, factor, work_dir, ivf_rows),
-            }
-            for name, df in qs.items():
-                # candidate/output volume only for the stage-split keys —
-                # their rows-growth IS the evidence the split table reports
-                note = ""
-                if name in stage:
-                    counts.setdefault(name, {})[factor] = df.count()
-                    note = f" rows={counts[name][factor]}"
-                results.setdefault(name, {})[factor] = _time_median(df, reps)
-                print(f"x{factor:<3d} {name}: {results[name][factor]:.2f}s{note}")
-        # round-6 depth: second decade-ish step for the dedup families
-        deep_factor = 30
-        deep = deep_probes(spark, sf_dir, deep_factor)
-        for name, df in deep.items():
-            if name in ("minhash_cand", "minhash_full", "embed_cand", "embed_full"):
-                counts.setdefault(name, {})[deep_factor] = df.count()
-            results.setdefault(name, {})[deep_factor] = _time_median(df, reps)
-            print(f"x{deep_factor:<3d} {name}: {results[name][deep_factor]:.2f}s")
-        xover = ngram_crossover(spark, sf_dir)
-    finally:
-        spark.stop()
-        shutil.rmtree(work_dir, ignore_errors=True)
+def _noop(df: DataFrame) -> None:
+    df.write.format("noop").mode("overwrite").save()
 
-    lines = [
-        "# SCALE_PROBE — operator scaling at 1x / 3x / 10x sf0.1 (+30x deep)",
-        "",
-        f"Corpus rows: {rows_at}",
-        "Warm medians over noop sink; deterministic id-offset replication",
-        "(near-dup density per block held constant). time_ratio is wall-time",
-        "at 10x / wall-time at 1x: ~10 = linear in corpus size, >>10 = a",
-        "quadratic corner that would melt at 100 TB.",
-        "",
-        "| operator | 1x | 3x | 10x | 10x/1x ratio |",
-        "|---|---|---|---|---|",
-    ]
-    for name, by_f in results.items():
-        r = by_f[10] / by_f[1]
-        lines.append(
-            f"| {name} | {by_f[1]:.2f}s | {by_f[3]:.2f}s | {by_f[10]:.2f}s | {r:.1f} |"
-        )
-    lines += [
-        "",
-        "## Stage split (candidate generation vs full cand+verify)",
-        "",
-        "`minhash_cand`/`embed_cand` time candidate generation alone",
-        "(embed_cand: threshold=-1 keeps all candidates, so its row count",
-        "IS the candidate volume); `*_full` add the verify stage.  If the",
-        "end-to-end ratio is superlinear but candidate rows grow ~linearly,",
-        "the excess is hash/shuffle constants (n_bits grows with log n),",
-        "not a quadratic pair blow-up.",
-        "",
-        "| stage | 1x rows | 3x rows | 10x rows | rows 10x/1x |",
-        "|---|---|---|---|---|",
-    ]
-    for name, by_f in counts.items():
-        r = by_f[10] / max(by_f[1], 1)
-        lines.append(
-            f"| {name} | {by_f[1]} | {by_f[3]} | {by_f[10]} | {r:.1f} |"
-        )
-    deep_names = [n for n in results if 30 in results[n]]
-    if deep_names:
-        lines += [
-            "",
-            "## 30x deep probe — dedup families",
-            "",
-            "One decade can hide a slow quadratic behind amortizing",
-            "constants, so the dedup families re-run at 30x (3x the 10x",
-            "corpus).  Linear-in-rows designs show 30x/10x time ratios",
-            "near 3; candidate rows at 30x confirm volume, not constants,",
-            "drives the growth.",
-            "",
-            "| operator | 10x | 30x | 30x/10x (linear=3.0) | rows 30x | rows 30x/10x |",
-            "|---|---|---|---|---|---|",
-        ]
-        for name in deep_names:
-            by_f = results[name]
-            rows30 = counts.get(name, {}).get(30)
-            rows10 = counts.get(name, {}).get(10)
-            rr = f"{rows30 / rows10:.1f}" if rows30 and rows10 else "-"
-            lines.append(
-                f"| {name} | {by_f[10]:.2f}s | {by_f[30]:.2f}s "
-                f"| {by_f[30] / by_f[10]:.1f} | {rows30 if rows30 is not None else '-'} | {rr} |"
-            )
-    if xover:
-        base_u = max(xover[min(xover)][0], 1)
-        lines += [
-            "",
-            "## Uncapped vs capped n-gram pair-join volume (shared-vocabulary growth)",
-            "",
-            "Copies keep the text VERBATIM here, so per-gram document",
-            "frequency grows with the corpus — the realistic 100 TB regime",
-            "(the wall-time tables above use per-copy token rotation, which",
-            "holds df constant and is exactly where the uncapped quadratic",
-            "hides).  Reported: sum over (block, gram) of C(df, 2) — the",
-            "rows the gram-sharing pair join must process; ~factor^2 growth",
-            "in the uncapped column is the quadratic corner that disqualifies",
-            "q_dedup_ngram (uncapped) as a 100 TB path.  Under verbatim",
-            "growth every gram eventually crosses the cap, so the capped",
-            "column collapsing is expected (real corpora add new RARE grams);",
-            "the declared scale paths are ngram_capped + minhash_verified.",
-            "",
-            "| factor | uncapped join rows | vs 1x (linear=factor) | capped df<=5 join rows |",
-            "|---|---|---|---|",
-        ] + [
-            f"| {f}x | {u} | {u / base_u:.1f} | {c} |"
-            for f, (u, c) in sorted(xover.items())
-        ]
-    b4 = results.get("ivf_topk_batch4", {})
-    s1 = results.get("ivf_topk_single", {})
-    if b4 and s1:
-        lines += [
-            "",
-            "## Batched IVF (4 correlated probes, one pruned scan)",
-            "",
-            "`ivf_topk_batch4` answers 4 probes (small perturbations of one",
-            "query — realistic batches cluster) against the UNION of their",
-            "nprobe=4 shortlists in ONE scan.  The honest cost driver is",
-            "rows-scanned, not the sub-second local wall times (those carry a",
-            "fixed multi-stage overhead for the routing broadcast + per-probe",
-            "rank): one union scan reads `rows_union`; answering the probes",
-            "separately reads `rows_4_separate`.  Adversarially-diverse",
-            "probes degrade the union to all partitions — the same bytes as",
-            "4 scans, still one job — so batching never reads MORE.",
-            "",
-            "| factor | union cids/16 | rows scanned once | rows 4 separate scans | single time | batch4 time |",
-            "|---|---|---|---|---|---|",
-        ] + [
-            f"| {f}x | {ivf_rows['union_cids'][f]} "
-            f"| {ivf_rows['rows_union'][f]} "
-            f"| {ivf_rows['rows_4_separate'][f]} "
-            f"| {s1[f]:.2f}s | {b4[f]:.2f}s |"
-            for f in sorted(s1)
-        ]
-    out = _out
-    with open(out, "w") as f:
-        f.write("\n".join(lines) + "\n")
-    print(f"wrote {out}")
 
-
-def embed_100x(sf_dir: str, reps: int = 1) -> None:
-    """Round-7: THIRD decade-ish step (100x) for the embed family
-    only — the one family whose superlinear term (the `auto_n_bits`
-    integer sawtooth, SCALING.md) is bounded <2x around linear rather
-    than exactly linear.  Re-measures 30x in the same session so the
-    100x/30x ratio compares like conditions, and APPENDS to
-    SCALE_PROBE.md (the main probe's tables stay untouched).
-
-    Run: python scripts/scale_probe.py --embed100 [sf_dir] [reps]
-    """
-    from vector_db_ingestor_spark.operators.dedup import embedding_near_dups
-    from vector_db_ingestor_spark.operators.similarity import auto_n_bits
-
-    spark = get_spark("scale_probe_embed100")
-    rows: dict[str, dict[int, int]] = {}
-    builders: dict[str, dict[int, object]] = {}
-    bits: dict[int, int] = {}
-    factors = (30, 100)
-    try:
-        emb_base = load_table(spark, sf_dir, "embeddings")
-        base_n = emb_base.count()
-        for factor in factors:
-            emb = replicate_embeddings(emb_base, factor, EMBEDDING_DIM)
-            bits[factor] = auto_n_bits(base_n * factor, target_bucket=8)
-            print(f"x{factor}: auto_n_bits -> {bits[factor]}", flush=True)
-            # builders CONSTRUCT the DataFrame per timing (the
-            # time_with_guard contract: a re-time must not reuse a
-            # cached plan object) — capture the call, not its result
-            fams = {
-                "embed_cand": lambda emb=emb, b=bits[factor]: embedding_near_dups(
-                    emb, threshold=-1.0, dim=EMBEDDING_DIM, n_bits=b
-                ),
-                "embed_full": lambda emb=emb, b=bits[factor]: embedding_near_dups(
-                    emb, threshold=0.3, dim=EMBEDDING_DIM, n_bits=b
-                ),
-            }
-            for name, build in fams.items():
-                rows.setdefault(name, {})[factor] = build().count()
-                builders.setdefault(name, {})[factor] = build
-        # sawtooth families are bounded <2x AROUND linear, so the
-        # overshoot threshold is 2x the linear ratio rather than 1.5x;
-        # the impossible-ordering guard applies regardless
-        times, polluted = time_with_guard(
-            builders, reps, set(builders), retime_over=(100 / 30) * 2
-        )
-        for name in polluted:
-            print(f"POLLUTED: {name}", flush=True)
-    finally:
-        spark.stop()
-
-    lines = [
-        "",
-        "## 100x embed probe — the sawtooth bound across two full decades",
-        "",
-        "The embed family's candidate volume is ~(n^2/2^b)(b+1) with",
-        "b = auto_n_bits(n): linear in n if b were continuous, oscillating",
-        "<2x around linear because b moves in integer steps (SCALING.md).",
-        "This third decade-step (100x = 200k vectors, same-session 30x",
-        "baseline) checks the bound holds where a hidden quadratic would",
-        "be ~11x over linear.  linear 100x/30x = 3.33.",
-        "",
-        f"(n_bits: 30x -> {bits[30]}, 100x -> {bits[100]})",
-        "",
-        "| stage | 30x | 100x | time 100x/30x | rows 30x | rows 100x | rows 100x/30x |",
-        "|---|---|---|---|---|---|---|",
-    ]
-    for name in times:
-        t, r = times[name], rows[name]
-        mark = " POLLUTED" if name in polluted else ""
-        lines.append(
-            f"| {name} | {t[30]:.2f}s | {t[100]:.2f}s | "
-            f"{t[100] / t[30]:.1f}{mark} "
-            f"| {r[30]} | {r[100]} | {r[100] / max(r[30], 1):.1f} |"
-        )
-    out = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "SCALE_PROBE.md"
-    )
-    with open(out, "a") as f:
-        f.write("\n".join(lines) + "\n")
-    print(f"appended to {out}")
-
-
-def dedup_100x(sf_dir: str, reps: int = 1) -> None:
-    """Round-7 companion to :func:`embed_100x`: the flagship 100 TB
-    dedup paths (minhash candidates, minhash+verify, capped n-gram) at
-    100x with a same-session 30x baseline.  These are exactly-linear
-    designs (bucketed joins, bounded block sizes), so the expectation
-    is time and candidate rows both ~3.33x.  Appends to SCALE_PROBE.md.
-
-    Run: python scripts/scale_probe.py --dedup100 [sf_dir] [reps]
-    """
-    from vector_db_ingestor_spark.operators.dedup import (
-        minhash_candidates,
-        minhash_verified_pairs,
-        ngram_jaccard_pairs,
-        simhash_near_dups,
-    )
-
-    spark = get_spark("scale_probe_dedup100")
-    rows: dict[str, dict[int, int]] = {}
-    builders: dict[str, dict[int, object]] = {}
-    try:
-        for factor in (30, 100):
-            docs = replicate_docs(load_table(spark, sf_dir, "documents"), factor)
-            # thunks, not DataFrames: re-times rebuild the plan
-            fams = {
-                "minhash_cand": lambda docs=docs: minhash_candidates(
-                    docs, with_estimate=False
-                ),
-                "minhash_full": lambda docs=docs: minhash_verified_pairs(
-                    docs, threshold=0.5
-                ),
-                "ngram_capped": lambda docs=docs: ngram_jaccard_pairs(
-                    docs, block_col="lang", n=2, threshold=0.2, max_df=5
-                ),
-                # round 8: the vectorized-kernel fingerprint family —
-                # 16-bit pigeonhole buckets, fan-out should stay flat
-                "simhash_near_dups": lambda docs=docs: simhash_near_dups(
-                    docs, max_hamming=10, bands=4
-                ),
-            }
-            for name, build in fams.items():
-                rows.setdefault(name, {})[factor] = build().count()
-                builders.setdefault(name, {})[factor] = build
-        times, polluted = time_with_guard(
-            builders, reps, set(builders), retime_over=(100 / 30) * 1.5
-        )
-    finally:
-        spark.stop()
-
-    lines = [
-        "",
-        "## 100x dedup probe — the declared 100 TB paths across two decades",
-        "",
-        "minhash (cand / cand+verify) and hot-gram-capped n-gram at 100x",
-        "(500k docs) with a same-session 30x baseline.  These designs are",
-        "exactly linear (band buckets / capped gram df bound every pair",
-        "set), so both time and candidate rows should sit near the linear",
-        f"100x/30x = 3.33.  Timings are warm medians of {reps} rep(s).",
-        "",
-        "| stage | 30x | 100x | time 100x/30x | rows 30x | rows 100x | rows 100x/30x |",
-        "|---|---|---|---|---|---|---|",
-    ]
-    for name in times:
-        t, r = times[name], rows[name]
-        mark = " POLLUTED" if name in polluted else ""
-        lines.append(
-            f"| {name} | {t[30]:.2f}s | {t[100]:.2f}s | "
-            f"{t[100] / t[30]:.1f}{mark} "
-            f"| {r[30]} | {r[100]} | {r[100] / max(r[30], 1):.1f} |"
-        )
-    out = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "SCALE_PROBE.md"
-    )
-    with open(out, "a") as f:
-        f.write("\n".join(lines) + "\n")
-    print(f"appended to {out}")
-
-
-def ngram100_median(sf_dir: str, reps: int = 3) -> None:
-    """Round-9 follow-up: the ngram_capped row of the 100x dedup probe
-    was the one number measured at reps=1, and its wall ratio swung
-    1.8-4.3x across runs while candidate rows held exactly linear
-    (3.3x) — per the repo's bench-noise discipline, a single-shot
-    timing of a sub-minute stage is not evidence.  Re-measure JUST
-    ngram_capped at 30x/100x with warm median-of-``reps`` (same noop
-    sink as every probe timing) and append the full rep spread so the
-    medians are auditable.
-
-    Run: python scripts/scale_probe.py --ngram100 [sf_dir] [reps]
-    """
-    from vector_db_ingestor_spark.operators.dedup import ngram_jaccard_pairs
-
-    spark = get_spark("scale_probe_ngram100")
-    rows: dict[int, int] = {}
-    all_ts: dict[int, list[float]] = {}
-    try:
-        for factor in (30, 100):
-            docs = replicate_docs(load_table(spark, sf_dir, "documents"), factor)
-            df = ngram_jaccard_pairs(
-                docs, block_col="lang", n=2, threshold=0.2, max_df=5
-            )
-            rows[factor] = df.count()
-            df.write.format("noop").mode("overwrite").save()  # warm
-            ts = []
-            for _ in range(reps):
-                t0 = time.perf_counter()
-                df.write.format("noop").mode("overwrite").save()
-                ts.append(time.perf_counter() - t0)
-            all_ts[factor] = ts
-            print(
-                f"x{factor:<4d} ngram_capped: median "
-                f"{statistics.median(ts):.2f}s reps={[f'{t:.2f}' for t in ts]} "
-                f"rows={rows[factor]}",
-                flush=True,
-            )
-    finally:
-        spark.stop()
-
-    med = {f: statistics.median(ts) for f, ts in all_ts.items()}
-    lines = [
-        "",
-        "## ngram_capped 100x — round-9 warm-median re-measure",
-        "",
-        f"The one reps=1 probe row, re-run idle with median-of-{reps}",
-        "warm repetitions per factor (warm-up pass excluded, same noop",
-        "sink).  Candidate rows are deterministic; the spread column is",
-        "every timed rep so the median is auditable.",
-        "",
-        "| factor | median | reps (s) | rows |",
-        "|---|---|---|---|",
-    ]
-    for f in (30, 100):
-        lines.append(
-            f"| {f}x | {med[f]:.2f}s | "
-            + ", ".join(f"{t:.2f}" for t in all_ts[f])
-            + f" | {rows[f]} |"
-        )
-    lines += [
-        "",
-        f"time 100x/30x = {med[100] / med[30]:.2f} at rows "
-        f"{rows[100]}/{rows[30]} = {rows[100] / max(rows[30], 1):.2f}.",
-    ]
-    out = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "SCALE_PROBE.md"
-    )
-    with open(out, "a") as f:
-        f.write("\n".join(lines) + "\n")
-    print(f"appended to {out}")
-
-
-def _ivfpq_batch_indexed_probe(codes: DataFrame) -> DataFrame:
-    """ivfpq_topk_batch_indexed's exact plan over a prebuilt codes
-    table: 2 probes (q_ann_ivfpq_batch's pair), union'd shortlist
-    pruning, broadcast route table, window rank."""
-    from vector_db_ingestor_spark.operators.similarity import (
-        ivfpq_topk_batch_indexed,
-    )
-    from vector_db_ingestor_spark.queries import PROBE_64, _ivfpq_params
-
-    cents, cbs, _, _ = _ivfpq_params()
-    probes = [(0, PROBE_64), (1, list(reversed(PROBE_64)))]
-    return ivfpq_topk_batch_indexed(codes, cents, cbs, probes, k=10, nprobe=4)
-
-
-def _refined_batch_probe(
-    spark, index_path: str, vectors_path: str, probes
-) -> DataFrame:
-    """ivfpq_topk_refined_batch_indexed's exact plan over persisted
-    artifacts (round 13): one pruned codes scan shortlists all probes,
-    one In-pushdown fetch covers the union, broadcast route restricts
-    each probe's exact re-rank to its own shortlist."""
-    from vector_db_ingestor_spark.operators.similarity import (
-        ivfpq_topk_refined_batch_indexed,
-    )
-
-    return ivfpq_topk_refined_batch_indexed(
-        spark, index_path, vectors_path, probes, k=10, k2=30, nprobe=4
-    )
-
-
-def _ivfpq_indexed_probe(codes: DataFrame) -> DataFrame:
-    """ivfpq_topk_indexed's exact plan over a prebuilt codes table:
-    shortlist partition pruning + literal-table ADC, no raw vectors
-    (operators/similarity.py)."""
-    from vector_db_ingestor_spark.operators.similarity import ivfpq_topk_indexed
-    from vector_db_ingestor_spark.queries import PROBE_64, _ivfpq_params
-
-    cents, cbs, _, _ = _ivfpq_params()
-    return ivfpq_topk_indexed(codes, cents, cbs, PROBE_64, k=10, nprobe=4)
-
-
-def _ivfpq_probe(emb: DataFrame) -> DataFrame:
-    """q_ann_ivfpq's exact plan over a replicated corpus: literal
-    coarse centroids + residual PQ + ADC top-10 (queries._ivfpq_params
-    model, so the probe measures the registered key's expressions)."""
-    from vector_db_ingestor_spark.operators.similarity import ivfpq_topk
-    from vector_db_ingestor_spark.queries import PROBE_64, _ivfpq_params
-
-    cents, cbs, _, _ = _ivfpq_params()
-    return ivfpq_topk(emb, cents, cbs, PROBE_64, k=10, nprobe=4)
-
-
-def ann_100x(sf_dir: str, reps: int = 3) -> None:
-    """Round-10 re-run of the round-9 ANN probe, now over MATERIALIZED
-    parquet inputs (the text_100x methodology): the serving and scoring
-    families — IVF top-k single/batched, LSH top-k, exact top-k, PQ
-    scan-stage encode, BM25 — at 30x/100x with warm median-of-``reps``
-    timings.
-
-    Why materialized: replicate_docs/replicate_embeddings pick each
-    copy's rotation with a factor-deep when-chain, an O(rows x factor)
-    projection (bare replicator: 1.9s at 30x vs 10.1s at 100x — 5.4x
-    wall for 3.33x rows, measured round 9).  The round-9 run timed the
-    scan-dominated families (exact_topk, pq_encode, bm25_scores) over
-    that inline replication, so their "linear expectation 3.33" was
-    polluted by harness cost and could read as false engine
-    superlinearity.  Writing each factor's corpus to parquet first
-    takes the harness term out of the timed region and gives the scan
-    real parallelism (32 input splits).  The IVF families were already
-    clean (they read the ivf_write parquet index).
-
-    Expectations per family:
-
-    * exact_topk / pq_encode / bm25_scores are one narrow scan stage:
-      wall should ride corpus size ~linearly (ratio near 3.33).
-    * lsh_topk (fixed n_bits=4, matching the 1x-10x table) scans one
-      bucket ~= 1/16 of the corpus: linear with a 1/16 constant.
-    * ivf_topk (n_centroids=16, nprobe=4) scans the probed partitions
-      only (~4/16 of rows, file-skipping on the cid partition key):
-      linear in probed rows; the rows-scanned table is the primary
-      evidence, echoing the batched-IVF section.  At 100 TB the
-      centroid count grows with the corpus so the probed FRACTION
-      falls; fixed 16 here keeps ratios comparable with the 1x-10x
-      table.  Index build per factor is OUTSIDE the timed region.
-
-    Run: python scripts/scale_probe.py --ann100 [sf_dir] [reps]
-    """
-    import math as _m
-    import shutil
-    import tempfile
-
-    from vector_db_ingestor_spark.operators.retrieval import bm25_scores
-    from vector_db_ingestor_spark.operators.similarity import (
-        ivf_read,
-        ivf_shortlist,
-        ivf_topk,
-        ivf_topk_batch,
-        ivf_write,
-        lsh_topk,
-        pq_code,
-        pq_codebooks,
-    )
-    from vector_db_ingestor_spark.operators.topk import topk_cosine
-    from vector_db_ingestor_spark.queries import _BM25_TERMS
-
-    spark = get_spark("scale_probe_ann100")
-    work = tempfile.mkdtemp(prefix="ann100_")
-    builders: dict[str, dict[int, object]] = {}
-    ivf_meta: dict[int, tuple[int, int, int]] = {}
-    try:
-        for factor in (30, 100):
-            # materialize per factor: the replicator's O(rows x factor)
-            # when-chain must not sit inside any timed scan
-            docs_path = os.path.join(work, f"docs_x{factor}")
-            emb_path = os.path.join(work, f"emb_x{factor}")
-            replicate_docs(
-                load_table(spark, sf_dir, "documents"), factor
-            ).repartition(32).write.mode("overwrite").parquet(docs_path)
-            replicate_embeddings(
-                load_table(spark, sf_dir, "embeddings"), factor, EMBEDDING_DIM
-            ).repartition(32).write.mode("overwrite").parquet(emb_path)
-            docs = spark.read.parquet(docs_path)
-            emb = spark.read.parquet(emb_path)
-            probe_df = spark.createDataFrame(
-                [(0, PROBE_64)], schema="query_id INT, query_vec ARRAY<DOUBLE>"
-            )
-            idx = os.path.join(work, f"ivf_x{factor}")
-            ivf_write(emb, idx, dim=EMBEDDING_DIM, n_centroids=16, iters=1)
-            indexed, cents = ivf_read(spark, idx)
-            # round-11 (VERDICT r10 #6): the persisted-codes IVF-PQ
-            # serve joins the standing probe set — build the codes
-            # index OUTSIDE the timed region (the deployment contract:
-            # encode once, serve many)
-            from vector_db_ingestor_spark.operators.similarity import (
-                ivfpq_read,
-                ivfpq_write,
-            )
-            from vector_db_ingestor_spark.queries import _ivfpq_params
-
-            pq_cents, pq_cbs, _, _ = _ivfpq_params()
-            pq_idx = os.path.join(work, f"ivfpq_x{factor}")
-            ivfpq_write(emb, pq_idx, pq_cents, pq_cbs)
-            pq_codes, _, _ = ivfpq_read(spark, pq_idx)
-            # round-12 (VERDICT r11 #2): the refine rung's vector fetch
-            # over a vec_id range layout — built OUTSIDE the timed
-            # region like every other index artifact
-            from vector_db_ingestor_spark.operators.similarity import (
-                fetch_vectors,
-                ivfpq_topk_indexed,
-                vectors_write,
-            )
-
-            vecs_path = os.path.join(work, f"vecs_x{factor}")
-            vectors_write(emb, vecs_path, n_files=64)
-            refine_ids = [
-                r["vec_id"]
-                for r in ivfpq_topk_indexed(
-                    pq_codes, pq_cents, pq_cbs, PROBE_64, k=30, nprobe=4
-                )
-                .select("vec_id")
-                .collect()
-            ]
-            short_df = spark.createDataFrame(
-                [(i,) for i in refine_ids], "vec_id LONG"
-            )
-            batch_probes = [
-                (
-                    b,
-                    [
-                        x + 0.05 * _m.sin(7.0 * b * (i + 1))
-                        for i, x in enumerate(PROBE_64)
-                    ],
-                )
-                for b in range(4)
-            ]
-            shortlists = [ivf_shortlist(cents, p, 4) for _, p in batch_probes]
-            union_cids = sorted({c for s in shortlists for c in s})
-            cid_rows = {
-                r["cid"]: r["n"]
-                for r in indexed.groupBy("cid").agg(F.count("*").alias("n")).collect()
-            }
-            ivf_meta[factor] = (
-                len(union_cids),
-                sum(cid_rows.get(c, 0) for c in union_cids),
-                sum(cid_rows.get(c, 0) for s in shortlists for c in s),
-            )
-            m, ksub = 4, 16
-            dsub = EMBEDDING_DIM // m
-            cbs = pq_codebooks(EMBEDDING_DIM, m, ksub)
-            # thunks (default args bind this factor's inputs): a
-            # re-time rebuilds the plan instead of reusing the object
-            fams = {
-                "exact_topk": lambda emb=emb: topk_cosine(emb, PROBE_64, k=10),
-                "lsh_topk": lambda emb=emb, probe_df=probe_df: lsh_topk(
-                    emb, probe_df, dim=EMBEDDING_DIM, k=10, n_bits=4
-                ),
-                "ivf_topk_single": lambda indexed=indexed, cents=cents: ivf_topk(
-                    indexed, cents, PROBE_64, k=10, nprobe=4
-                ),
-                "ivf_topk_batch4": lambda indexed=indexed, cents=cents,
-                bp=batch_probes: ivf_topk_batch(
-                    indexed, cents, bp, k=10, nprobe=4
-                ),
-                "pq_encode": lambda emb=emb, cbs=cbs: emb.select(
-                    "vec_id",
-                    *[
-                        pq_code(F.col("embedding"), cbs[s], s * dsub).alias(f"c{s}")
-                        for s in range(m)
-                    ],
-                ),
-                "bm25_scores": lambda docs=docs: bm25_scores(docs, _BM25_TERMS),
-                # round-10 key: full end-to-end IVF-PQ (routing +
-                # residual encode + ADC) over raw vectors — one narrow
-                # scan stage, linear expectation; production amortizes
-                # the encode into a persisted codes table
-                "ivfpq_topk": lambda emb=emb: _ivfpq_probe(emb),
-                # round-11: the amortized serve itself — codes-only
-                # pruned read, ~m bytes/row, expected FLAT wall with
-                # probed rows linear (the 100 TB claim's plan shape)
-                "ivfpq_topk_indexed": lambda pq=pq_codes: _ivfpq_indexed_probe(pq),
-                # round-11: batched persisted-codes serve (2 probes,
-                # one union'd pruned scan + route join + window rank)
-                "ivfpq_batch2_indexed": lambda pq=pq_codes: (
-                    _ivfpq_batch_indexed_probe(pq)
-                ),
-                # round-12: the refine rung's exact re-rank fetch, both
-                # layouts — range layout (In pushdown + disjoint file
-                # ranges: expected FLAT, ~k2 row-groups whatever the
-                # corpus size) vs the r11 shape (broadcast id join
-                # against the unordered corpus: linear, the contrast
-                # row VERDICT r11 #2 flagged)
-                "refine_fetch_range": lambda vp=vecs_path, ids=refine_ids: (
-                    topk_cosine(fetch_vectors(spark, vp, ids), PROBE_64, k=10)
-                ),
-                "refine_fetch_scan": lambda emb=emb, sd=short_df: topk_cosine(
-                    emb.join(F.broadcast(sd), "vec_id"), PROBE_64, k=10
-                ),
-                # round-13: the full batched refine ladder end-to-end
-                # (ivfpq_topk_refined_batch_indexed — one pruned codes
-                # scan shortlists all 4 probes, one In-pushdown fetch
-                # covers the union, broadcast route restricts each
-                # probe's exact re-rank to its own shortlist): both
-                # scans prune, expected FLAT like its two rungs
-                "refine_batch4_range": lambda pi=pq_idx, vp=vecs_path, bp=(
-                    batch_probes
-                ): _refined_batch_probe(spark, pi, vp, bp),
-            }
-            for name, build in fams.items():
-                builders.setdefault(name, {})[factor] = build
-
-        # timing runs AFTER both factors are built so the guard can
-        # re-time either leg within-session (inputs persist until the
-        # finally cleanup); FLAT-expectation families are exempt —
-        # t(100x) ~ t(30x) either side of equal is their healthy shape
-        linear = {
-            "exact_topk", "pq_encode", "bm25_scores", "lsh_topk",
-            "ivfpq_topk", "refine_fetch_scan",
-        }
-        times, polluted = time_with_guard(
-            builders, reps, linear, retime_over=(100 / 30) * 1.5
-        )
-    finally:
-        spark.stop()
-        shutil.rmtree(work, ignore_errors=True)
-
-    lines = [
-        "",
-        "## 100x ANN-serving probe — full set, MATERIALIZED "
-        "inputs, warm median-of-%d" % reps,
-        "",
-        "The standing ANN probe set (materialized-parquet methodology,",
-        "established round 10), now including BOTH round-10 IVF-PQ rows",
-        "per VERDICT r10 #6: ivfpq_topk (inline encode — worst-case,",
-        "linear expectation) and ivfpq_topk_indexed (persisted-codes",
-        "serve: pruned partition read of ~m bytes/row — expected FLAT",
-        "wall, probed rows linear; its per-factor ivfpq_write build is",
-        "outside the timed region, the encode-once deployment",
-        "contract).  exact/pq/bm25 are one narrow scan stage (linear",
-        "expectation 3.33); lsh_topk scans ~1/16 of the corpus (fixed",
-        "n_bits=4 for continuity with the 1x-10x table); ivf_topk scans",
-        "the nprobe=4 of 16 cid partitions via partition pruning — its",
-        "honest cost driver is rows-scanned (second table), the local",
-        "walls carry fixed multi-job routing overhead.  New round 12:",
-        "refine_fetch_range (exact re-rank fetch over the vectors_write",
-        "vec_id range layout — In pushdown + disjoint file ranges,",
-        "expected FLAT) vs refine_fetch_scan (the r11 broadcast-id-join",
-        "shape it replaces — linear, kept as the contrast row).",
-        "New round 13: refine_batch4_range — the full batched refine",
-        "ladder (one pruned codes scan shortlists 4 probes, one",
-        "In-pushdown union fetch, broadcast route-restricted exact",
-        "re-rank), expected near-FLAT like its two rungs.",
-        "Impossible orderings (linear leg faster at 100x) are re-timed",
-        "in-session by time_with_guard; rows it could not clear are",
-        "marked POLLUTED.",
-        "",
-        "| stage | 30x | 100x | time 100x/30x |",
-        "|---|---|---|---|",
-    ]
-    for name, t in times.items():
-        mark = " POLLUTED" if name in polluted else ""
-        lines.append(
-            f"| {name} | {t[30]:.2f}s | {t[100]:.2f}s | "
-            f"{t[100] / t[30]:.2f}{mark} |"
-        )
-    lines += [
-        "",
-        "| factor | union cids/16 | rows scanned once | rows 4 separate |",
-        "|---|---|---|---|",
-    ]
-    for f, (nc, ru, rs) in ivf_meta.items():
-        lines.append(f"| {f}x | {nc} | {ru} | {rs} |")
-    out = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "SCALE_PROBE.md"
-    )
-    with open(out, "a") as f:
-        f.write("\n".join(lines) + "\n")
-    print(f"appended to {out}")
-
-
-def text_100x(sf_dir: str, reps: int = 3) -> None:
-    """Round-9: the third leg of the 100x record — the text-pipeline
-    families (quality scoring, token frequency, TF-IDF, benchmark
-    decontamination, boilerplate detection, sequence packing) at
-    30x/100x, warm median-of-``reps``.  Plans mirror the registered
-    queries over replicated docs (the two that already have shared
-    builders — boilerplate_top50, pack_sequences_plan — are reused
-    directly; the rest are restated inline with identical expressions).
-
-    Unlike the dedup/ann probes, the replicated corpus is MATERIALIZED
-    to parquet per factor and every family is timed over the parquet
-    read.  Reason, measured round 9: replicate_docs picks each copy's
-    text rotation with a factor-deep when-chain, so the inline
-    replication projection costs O(rows x factor) — a bare noop write
-    of replicate_docs alone is 1.9s at 30x vs 10.1s at 100x (5.4x wall
-    for 3.33x rows).  Join/shuffle-dominated probes absorb that harness
-    term; these scan-dominated families would be ~20-50% harness at
-    100x, so inline timing would report a superlinearity that belongs
-    to the probe, not the engine.  Materializing also gives the scan
-    real parallelism (32 input splits instead of the single in-memory
-    partition the explode-based replicator produces).
-
-    Expectations: quality/token_freq/tfidf are scan + hash-agg (+ tiny
-    broadcast) — linear; contamination's broadcast side (the eval set)
-    grows WITH the corpus here (doc_id % 97), which is harsher than
-    production where benchmark suites are fixed-size, so linear-ish
-    with a growing broadcast constant; boilerplate and pack_sequences
-    are one window over a corpus-keyed partition column — linear.
-
-    Run: python scripts/scale_probe.py --text100 [sf_dir] [reps]
-    """
-    import shutil
-    import tempfile
-
-    from pyspark.sql import Window
-    from vector_db_ingestor_spark.operators import text_analysis as ta
-    from vector_db_ingestor_spark.operators.text_analysis import (
-        contamination_report,
-    )
-    from vector_db_ingestor_spark.queries import (
-        boilerplate_top50,
-        pack_sequences_plan,
-    )
-
-    spark = get_spark("scale_probe_text100")
-    builders: dict[str, dict[int, object]] = {}
-    tmp = tempfile.mkdtemp(prefix="text100_")
-    try:
-        for factor in (30, 100):
-            base = load_table(spark, sf_dir, "documents")
-            n_docs = base.count() * factor
-            path = os.path.join(tmp, f"docs_x{factor}")
-            replicate_docs(base, factor).repartition(32).write.mode(
-                "overwrite"
-            ).parquet(path)
-            docs = spark.read.parquet(path)
-
-            # builders rebuild the plan per timing (time_with_guard
-            # contract); default args bind this iteration's docs/n_docs
-            def quality_df(docs=docs):
-                return docs.select(
-                    "doc_id",
-                    F.round(ta.punct_ratio(F.col("text")), 6).alias("punct_ratio"),
-                    F.round(ta.stopword_ratio(F.col("text")), 6).alias(
-                        "stop_ratio"
-                    ),
-                    F.round(ta.mean_token_len(F.col("text")), 6).alias(
-                        "mean_tok_len"
-                    ),
-                    ta.quality_score(F.col("text")).alias("quality"),
-                )
-
-            def toks_df(docs=docs):
-                return docs.select(
-                    "doc_id",
-                    F.explode(
-                        F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-                    ).alias("term"),
-                ).filter(F.col("term") != "")
-
-            def token_freq_df(docs=docs):
-                return (
-                    toks_df(docs)
-                    .groupBy("term")
-                    .agg(F.count("*").alias("n"))
-                    .orderBy(F.col("n").desc(), F.col("term").asc())
-                    .limit(50)
-                )
-
-            def tfidf_top3_df(docs=docs, n_docs=n_docs):
-                tf = (
-                    toks_df(docs)
-                    .groupBy("doc_id", "term")
-                    .agg(F.count("*").alias("tf"))
-                )
-                df_tbl = tf.groupBy("term").agg(F.count("*").alias("df"))
-                scored = tf.join(F.broadcast(df_tbl), "term").select(
-                    "doc_id",
-                    "term",
-                    F.round(
-                        F.col("tf") * F.log(F.lit(float(n_docs)) / F.col("df")),
-                        6,
-                    ).alias("tfidf"),
-                )
-                w = Window.partitionBy("doc_id").orderBy(
-                    F.col("tfidf").desc(), F.col("term").asc()
-                )
-                return scored.withColumn("rk", F.row_number().over(w)).filter(
-                    F.col("rk") <= 3
-                )
-
-            fams = {
-                "text_quality": quality_df,
-                "token_freq_top50": token_freq_df,
-                "tfidf_top3": tfidf_top3_df,
-                "contamination": lambda docs=docs: contamination_report(
-                    docs, docs.filter(F.col("doc_id") % 97 == 0), n=2
-                ),
-                "boilerplate_top50": lambda docs=docs: boilerplate_top50(docs),
-                "pack_sequences": lambda docs=docs: pack_sequences_plan(docs),
-            }
-            for name, build in fams.items():
-                builders.setdefault(name, {})[factor] = build
-        times, polluted = time_with_guard(
-            builders, reps, set(builders), retime_over=(100 / 30) * 1.5
-        )
-    finally:
-        spark.stop()
-        shutil.rmtree(tmp, ignore_errors=True)
-
-    lines = [
-        "",
-        "## 100x text-pipeline probe — warm median-of-%d" % reps,
-        "",
-        "Quality scoring, token frequency, TF-IDF top-3, benchmark",
-        "decontamination, boilerplate top-50, and sequence packing at",
-        "30x/100x (500k docs), timed over a MATERIALIZED replicated",
-        "corpus (parquet, 32 splits): the inline replicator's",
-        "factor-deep when-chain costs O(rows x factor) — 1.9s at 30x vs",
-        "10.1s at 100x for a bare noop write — which would pollute these",
-        "scan-dominated families by 20-50% at 100x (shuffle-dominated",
-        "probes absorb it).  All are scan + hash-agg / broadcast /",
-        "window plans — linear expectation 3.33.  contamination's eval",
-        "split grows with the corpus here (doc_id % 97), harsher than",
-        "production fixed-size benchmarks.",
-        "",
-        "| stage | 30x | 100x | time 100x/30x |",
-        "|---|---|---|---|",
-    ]
-    for name, t in times.items():
-        lines.append(
-            f"| {name} | {t[30]:.2f}s | {t[100]:.2f}s | "
-            f"{t[100] / t[30]:.2f}{' POLLUTED' if name in polluted else ''} |"
-        )
-    out = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "SCALE_PROBE.md"
-    )
-    with open(out, "a") as f:
-        f.write("\n".join(lines) + "\n")
-    print(f"appended to {out}")
-
-
-
-def r16_core_scaling(sf_dir: str, reps: int = 3, factor: int = 10) -> None:
-    """Round-16 core-scaling leg: the exec-heavy rewritten operators at
-    ``factor``x replication, timed at the CURRENT ``SPARK_GRAFT_CPUS``
-    (the same env the driver's low-core bench probe sets).  VERDICT
-    r15 #2: the sf0.1 headline keys are overhead-bound, so the
-    driver's 8-vs-32-core ratios sit at ~1 and say nothing; at 10x
-    replication these operators have real execution volume, so the
-    core ratio has something to bite on.  Run once per core count:
-
-        SPARK_GRAFT_CPUS=32 python scripts/scale_probe.py --r16cores
-        SPARK_GRAFT_CPUS=8  python scripts/scale_probe.py --r16cores
-
-    Appends one section per invocation (labeled with the core count)
-    to SCALE_PROBE.md; the pair of sections is the scaling evidence.
-    """
-    from vector_db_ingestor_spark.operators.dedup import (
-        embedding_near_dups,
-        minhash_candidates,
-        minhash_verified_pairs,
-        ngram_jaccard_pairs,
-        simhash_near_dups,
-    )
-    from vector_db_ingestor_spark.operators.similarity import auto_n_bits
-    from vector_db_ingestor_spark.caching import release_all
-    from vector_db_ingestor_spark.operators.text_analysis import (
-        contamination_report,
-    )
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
-    spark = get_spark("scale_probe_r16")
-    results: dict[str, float] = {}
-    try:
-        # the sf0.1 fixture is ONE small parquet file -> ONE scan
-        # partition, and the explode replicator preserves that — every
-        # map stage (tokenize, shingle, Arrow simhash) would run as a
-        # single task and the core count could never matter.  A real
-        # corpus at this volume arrives as many files/splits, so spread
-        # the replicated input deterministically (hash on the id — a
-        # rand-derived key breaks retry determinism, guide §2.5) to the
-        # parallelism the scan would have at real scale.  Fixed 128
-        # partitions, NOT cpu-derived: both core-count legs must time
-        # the IDENTICAL plan.
-        docs = replicate_docs(
-            load_table(spark, sf_dir, "documents"), factor
-        ).repartition(128, "doc_id")
-        emb_base = load_table(spark, sf_dir, "embeddings")
-        emb = replicate_embeddings(emb_base, factor, EMBEDDING_DIM).repartition(
-            128, "vec_id"
-        )
-        n_bits = auto_n_bits(emb_base.count() * factor, target_bucket=8)
-        evals = docs.filter(F.col("doc_id") % 97 == 0)
-        fams = {
-            "minhash_cand_est": lambda: minhash_candidates(
-                docs, with_estimate=True, hash_family="md5"
-            ),
-            "minhash_full": lambda: minhash_verified_pairs(docs, threshold=0.5),
-            "ngram_capped": lambda: ngram_jaccard_pairs(
-                docs, block_col="lang", n=2, threshold=0.2, max_df=5
-            ),
-            "embed_full": lambda: embedding_near_dups(
-                emb, threshold=0.3, dim=EMBEDDING_DIM, n_bits=n_bits
-            ),
-            "simhash_auto": lambda: simhash_near_dups(
-                docs, max_hamming=10, bands="auto"
-            ),
-            "contamination": lambda: contamination_report(docs, evals, n=2),
-        }
-        for name, build in fams.items():
-            # plan rebuilt per rep (bench methodology); caches released
-            # between reps so every rep pays its own materialization
-            build().write.format("noop").mode("overwrite").save()
-            release_all()
-            ts = []
-            for _ in range(reps):
-                t0 = time.perf_counter()
-                build().write.format("noop").mode("overwrite").save()
-                ts.append(time.perf_counter() - t0)
-                release_all()
-            results[name] = statistics.median(ts)
-            print(f"cpus={cpus} x{factor} {name}: {results[name]:.2f}s")
-    finally:
-        spark.stop()
-
-    out = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "SCALE_PROBE.md",
-    )
-    lines = [
-        "",
-        f"## r16 core-scaling leg — rewritten operators at {factor}x, "
-        f"local[{cpus}]",
-        "",
-        f"Warm medians of {reps} reps, plan rebuilt and caches released",
-        "per rep (bench methodology).  Compare the local[32] and",
-        "local[8] sections: exec-heavy legs should approach the core",
-        "ratio; overhead-bound legs stay flat (VERDICT r15 #2).",
-        "",
-        "| operator | median |",
-        "|---|---|",
-    ] + [f"| {k} | {v:.2f}s |" for k, v in results.items()]
-    with open(out, "a") as f:
-        f.write("\n".join(lines) + "\n")
-    print(f"appended to {out}")
-
-
-def queue_100x(
+def run(
+    spark: SparkSession,
     sf_dir: str,
-    reps: int = 3,
-    only: set[str] | None = None,
-    factors: tuple[int, int] = (30, 100),
-) -> None:
-    """Round-11: 30x/100x probe for the declaration-queue impls —
-    derived live from queries.QUEUED_QUERIES, so every queued pair is
-    probed automatically the moment it is built.  ``only`` (CLI: a
-    comma-separated 4th arg of family names, with or without the
-    ``q_`` prefix) restricts the run to a focused re-probe — e.g.
-    after restructuring one family, re-measure it without the 24-pair
-    back-to-back run polluting its own tail; ``only`` names that have
-    since been DECLARED fall back to the declared registry (the
-    test_plans pin rule), so a family keeps its probe harness after
-    its rotation window lands.  ``factors`` (CLI: comma-separated 5th
-    arg, e.g. ``30,300``) widens the decade for sub-second families
-    whose linear term median-of-N cannot resolve at 100x (VERDICT r12
-    #3: a leg under ~0.5s is timer jitter at this box's noise line —
-    stretch the big leg instead of guessing).
+    factors: tuple[int, ...],
+    reps: int,
+    keys: list[str],
+    out: str = SCALE_PROBE_MD,
+) -> dict[str, dict[int, float]]:
+    """Time ``keys`` at every factor and append one section to ``out``;
+    returns the warm medians, key -> factor -> seconds."""
+    factors = tuple(sorted(factors))
+    # key -> factor -> (first build s, Catalyst phase ms)
+    profile: dict[str, dict[int, tuple[float, dict[str, int]]]] = {}
 
-    Zero probe-side plan drift BY CONSTRUCTION: the replicated
-    documents/embeddings/events tables are MATERIALIZED to parquet
-    under a temp dir laid out exactly like a fixture sf_dir
-    (documents.parquet, ...), and the PRODUCTION impls are called with
-    that dir — the probe times the very callable the driver will run,
-    not a restatement (stronger than the shared-builder pattern, and
-    the materialization keeps the O(rows x factor) replicator
-    when-chain out of the timings, per the text_100x rationale).
+    def timer(leg: Leg, reps: int) -> float:
+        def build() -> DataFrame:
+            return QUERIES[leg.key](spark, leg.fixture)
 
-    Expectations, all linear (3.33):
-    - url_curation: pure projection riding the scan.
-    - dedup_url: one shuffle on the canonical key, shared by both
-      window functions.
-    - boilerplate_strip: explode + frequency agg + broadcast flag join
-      + per-doc regroup — two corpus shuffles.
-    - nb_classify: token agg + model joins; the model (per-class token
-      counts) grows with VOCABULARY, which the rotation bijection
-      grows ~linearly here (worst case: real corpora saturate).
-    - warc_ingest: Arrow mapInPandas parse + fused chunk kernel.
-    - ivf_drift_report: one hash agg over cid.
-    - stream_dedup: union + one dropDuplicates shuffle.
+        t0 = time.perf_counter()
+        df = build()
+        build_s = time.perf_counter() - t0
+        _noop(df)
+        release_all()
+        phases = catalyst_phases(build())
+        release_all()
+        ts = []
+        for _ in range(reps):
+            t0 = time.perf_counter()
+            _noop(build())
+            ts.append(time.perf_counter() - t0)
+            release_all()
+        profile.setdefault(leg.key, {})[leg.factor] = (build_s, phases)
+        return statistics.median(ts)
 
-    Run: python scripts/scale_probe.py --queue100 [sf_dir] [reps]
-    """
-    import shutil
-    import tempfile
-
-    from vector_db_ingestor_spark.queries import QUERIES, QUEUED_QUERIES
-
-    lo, hi = factors
-    spark = get_spark("scale_probe_queue100")
-    builders: dict[str, dict[int, object]] = {}
-    rows: dict[int, int] = {}
-    tmp = tempfile.mkdtemp(prefix="queue100_")
+    tmp = tempfile.mkdtemp(prefix="scale_probe_")
     try:
+        doc_rows = {}
+        builders: dict[str, dict[int, object]] = {}
         for factor in factors:
-            fdir = os.path.join(tmp, f"x{factor}")
-            docs = replicate_docs(
-                load_table(spark, sf_dir, "documents"), factor
-            )
-            docs.repartition(32).write.mode("overwrite").parquet(
-                os.path.join(fdir, "documents.parquet")
-            )
-            replicate_embeddings(
-                load_table(spark, sf_dir, "embeddings"), factor, EMBEDDING_DIM
-            ).repartition(32).write.mode("overwrite").parquet(
-                os.path.join(fdir, "embeddings.parquet")
-            )
-            replicate_events(
-                load_table(spark, sf_dir, "events"), factor
-            ).repartition(32).write.mode("overwrite").parquet(
-                os.path.join(fdir, "events.parquet")
-            )
-            rows[factor] = spark.read.parquet(
-                os.path.join(fdir, "documents.parquet")
-            ).count()
-
-            # derived from the queue registry: every queued pair is
-            # probed automatically the moment it is built
-            fams = {
-                k.removeprefix("q_"): fn
-                for k, (fn, _) in QUEUED_QUERIES.items()
-            }
-            if only:
-                want = {o.removeprefix("q_") for o in only}
-                declared = {
-                    k.removeprefix("q_"): fn for k, fn in QUERIES.items()
-                }
-                unknown = want - set(fams) - set(declared)
-                if unknown:
-                    raise SystemExit(f"unknown queue families: {unknown}")
-                fams = {
-                    n: (fams.get(n) or declared[n]) for n in sorted(want)
-                }
-            for name, impl in fams.items():
-                builders.setdefault(name, {})[factor] = (
-                    lambda impl=impl, fdir=fdir: impl(spark, fdir)
+            fixture = os.path.join(tmp, f"x{factor}")
+            write_fixture(spark, sf_dir, factor, fixture)
+            doc_rows[factor] = load_table(spark, fixture, "documents").count()
+            for key in keys:
+                builders.setdefault(key, {})[factor] = (
+                    lambda leg=Leg(key, factor, fixture): leg
                 )
-
-        # every queue family carries a linear expectation (docstring
-        # above), so all are guarded against impossible orderings AND
-        # end-of-run re-timed when they overshoot linear by 1.5x (the
-        # long back-to-back run pollutes its own later families)
+        # every leg carries a linear expectation: guarded against
+        # impossible orderings, and re-timed at the end of the run when
+        # it overshoots linear by 1.5x (a long back-to-back run
+        # pollutes its own later keys)
         times, polluted = time_with_guard(
-            builders, reps, set(builders),
-            retime_over=(hi / lo) * 1.5,
+            builders, reps, set(keys), timer,
+            retime_over=factors[-1] / factors[0] * 1.5 if len(factors) > 1 else None,
         )
     finally:
-        spark.stop()
         shutil.rmtree(tmp, ignore_errors=True)
 
-    focus = (
-        " — focused re-probe: %s" % ", ".join(sorted(times)) if only else ""
-    )
+    lo = factors[0]
     lines = [
         "",
-        "## %dx declaration-queue probe — warm median-of-%d%s"
-        % (hi, reps, focus),
-        "",
-        "The %d impls (queries.QUEUED_QUERIES at probe time, declared"
-        % len(times),
-        f"fallbacks for focused re-probes) at {lo}x/{hi}x (docs rows: {rows}),",
-        "timed by calling the PRODUCTION callables against a",
-        "materialized replicated fixture dir — the probe and the",
-        "driver run the identical code path.  Linear expectation"
-        f" {hi / lo:.2f};",
-        "nb_classify's model table grows with the replicator-inflated",
-        "vocabulary (real corpora saturate instead).",
-        "Impossible orderings are re-timed in-session by",
-        "time_with_guard; rows it could not clear are marked POLLUTED.",
-        "",
-        f"| impl | {lo}x | {hi}x | time {hi}x/{lo}x |",
-        "|---|---|---|---|",
-    ]
-    for name, t in times.items():
-        mark = " POLLUTED" if name in polluted else ""
-        lines.append(
-            f"| {name} | {t[lo]:.2f}s | {t[hi]:.2f}s | "
-            f"{t[hi] / t[lo]:.2f}{mark} |"
-        )
-    out = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "SCALE_PROBE.md"
-    )
-    with open(out, "a") as f:
-        f.write("\n".join(lines) + "\n")
-    print(f"appended to {out}")
-
-
-
-def layout_100x(sf_dir: str, reps: int = 2) -> None:
-    """Round-11: 30x/100x probe for the WRITE-PATH architecture
-    features (operators/layout.py, operators/joins.py bucketed_write,
-    operators/rollup.py) — these amortize one write-time cost over
-    every later query, so the thing to verify is that the WRITE itself
-    stays linear in input size.
-
-    Timed per factor (median of ``reps`` full writes each):
-    - zorder_equidepth: quantile pass + Morton interleave +
-      repartitionByRange sort-write of replicated events on
-      (user_id, value).
-    - bucketed_write: 32-bucket sorted bucketBy write on user_id.
-    - rollup_refresh: per-day partial aggregates over ALL days of the
-      replicated events (a fresh state dir each rep — the probe times
-      the full-history cost; production increments are one day).
-
-    Round-12: timing goes through :func:`time_with_guard` like the
-    queue/ann probes — all inputs are materialized for BOTH factors
-    first, every leg is guarded against impossible orderings, and
-    linear families that overshoot 1.5x-linear are re-timed once at
-    the end of the run (the zorder adjudication in SCALE_PROBE showed
-    this probe's 100x legs, timed last, carry accumulated box heat).
-
-    Run: python scripts/scale_probe.py --layout100 [sf_dir] [reps]
-    """
-    import shutil
-    import statistics as stats
-    import tempfile
-    import time as _time
-
-    from vector_db_ingestor_spark.operators.joins import bucketed_write
-    from vector_db_ingestor_spark.operators.layout import zorder_write
-    from vector_db_ingestor_spark.operators.rollup import refresh_rollup
-
-    spark = get_spark("scale_probe_layout100")
-    builders: dict[str, dict[int, object]] = {}
-    rows: dict[int, int] = {}
-    tmp = tempfile.mkdtemp(prefix="layout100_")
-    try:
-        for factor in (30, 100):
-            src_path = os.path.join(tmp, f"events_x{factor}")
-            replicate_events(
-                load_table(spark, sf_dir, "events"), factor
-            ).repartition(32).write.mode("overwrite").parquet(src_path)
-            ev = spark.read.parquet(src_path)
-            rows[factor] = ev.count()
-            ev.withColumn(
-                "day", F.date_format("ts", "yyyy-MM-dd")
-            ).write.partitionBy("day").mode("overwrite").parquet(
-                os.path.join(tmp, f"events_day_x{factor}")
-            )
-
-            def t_zorder(ev=ev):
-                zorder_write(
-                    ev, os.path.join(tmp, "z"), ["user_id", "value"],
-                    n_files=32, equidepth=True,
-                )
-
-            def t_bucketed(ev=ev, factor=factor):
-                bucketed_write(
-                    ev, f"probe_bucketed_x{factor}", "user_id",
-                    n_buckets=32, path=os.path.join(tmp, f"b_x{factor}"),
-                )
-
-            def t_rollup(factor=factor):
-                state = os.path.join(
-                    tmp, f"state_{factor}_{_time.monotonic_ns()}"
-                )
-                refresh_rollup(
-                    spark,
-                    os.path.join(tmp, f"events_day_x{factor}"),
-                    state,
-                    ["event_type"],
-                )
-
-            for name, fn in (
-                ("zorder_equidepth", t_zorder),
-                ("bucketed_write", t_bucketed),
-                ("rollup_refresh", t_rollup),
-            ):
-                builders.setdefault(name, {})[factor] = lambda fn=fn: fn
-
-        def write_timer(fn, n):
-            fn()  # warm (codegen, listing)
-            ts = []
-            for _ in range(n):
-                t0 = _time.perf_counter()
-                fn()
-                ts.append(_time.perf_counter() - t0)
-            return stats.median(ts)
-
-        times, polluted = time_with_guard(
-            builders,
+        "## scale run — SPARK_GRAFT_CPUS=%s (%s), factors %s, warm median-of-%d"
+        % (
+            os.environ.get("SPARK_GRAFT_CPUS", "unset"),
+            spark.sparkContext.master,
+            ",".join(map(str, factors)),
             reps,
-            set(builders),
-            timer=write_timer,
-            retime_over=(100 / 30) * 1.5,
-        )
-        for factor in (30, 100):
-            spark.sql(f"DROP TABLE IF EXISTS probe_bucketed_x{factor}")
-    finally:
-        spark.stop()
-        shutil.rmtree(tmp, ignore_errors=True)
-
-    lines = [
+        ),
         "",
-        "## 100x write-path layout probe — median-of-%d full writes" % reps,
+        f"`scripts/scale_probe.py` over `{sf_dir}` (documents rows: {doc_rows}).",
+        f"`vs {lo}x` is the median over the {lo}x median; linear is the",
+        "factor ratio.  `build` is the first `QUERIES[key](spark, dir)`",
+        "call; `catalyst ms` is analysis / optimization / planning of a",
+        "fresh plan.  Rows time_with_guard could not clear are POLLUTED.",
         "",
-        f"zorder_write (equi-depth), bucketed_write, rollup refresh over",
-        f"replicated events ({rows}) — write-time costs these features",
-        "amortize must themselves stay linear.  rollup_refresh here pays",
-        "FULL-history cost (fresh state each rep); production increments",
-        "process one new partition.",
-        "",
-        "| write path | 30x | 100x | time 100x/30x |",
-        "|---|---|---|---|",
+        f"| key | factor | median | vs {lo}x | build | catalyst ms |",
+        "|---|---|---|---|---|---|",
     ]
-    for name, t in times.items():
-        mark = " POLLUTED" if name in polluted else ""
-        lines.append(
-            f"| {name} | {t[30]:.2f}s | {t[100]:.2f}s | "
-            f"{t[100] / t[30]:.2f}{mark} |"
-        )
-    out = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "SCALE_PROBE.md"
-    )
+    for key in keys:
+        for factor in factors:
+            t = times[key][factor]
+            build_s, ph = profile[key][factor]
+            mark = " POLLUTED" if key in polluted and factor != lo else ""
+            lines.append(
+                f"| {key} | {factor}x | {t:.2f}s | "
+                f"{t / times[key][lo]:.2f}{mark} | {build_s:.3f}s | "
+                f"{ph.get('analysis', -1)} / {ph.get('optimization', -1)} / "
+                f"{ph.get('planning', -1)} |"
+            )
     with open(out, "a") as f:
         f.write("\n".join(lines) + "\n")
+    print("\n".join(lines))
     print(f"appended to {out}")
+    return times
 
 
-def sketch_100x(sf_dir: str, reps: int = 3) -> None:
-    """Round-12: the mergeable KMV operator (operators/sketches.py) at
-    30x/100x replicated documents, against the shuffle-bearing exact
-    form it replaces.  Both legs compute the identical k=64 smallest
-    distinct bigram hashes (pinned bit-equal in tests/test_sketches.py):
-
-    - kmv_stream: hash JVM-side -> bounded-state mapInPandas candidates
-      (<=k rows per partition, ZERO corpus shuffles) -> candidate-scale
-      merge.  Expected linear in scan/explode CPU with no shuffle term.
-    - kmv_distinct: distinct() on the full element set (the corpus-wide
-      shuffle the window/query form pays) -> TakeOrdered k.  Linear
-      too, but with the shuffle constant the streamed form deletes.
-
-    Run: python scripts/scale_probe.py --sketch100 [sf_dir] [reps]
-    """
-    import shutil
-    import tempfile
-
-    from vector_db_ingestor_spark.operators.sketches import (
-        kmv_merge_candidates,
-        kmv_partition_candidates,
-    )
-
-    spark = get_spark("scale_probe_sketch100")
-    builders: dict[str, dict[int, object]] = {}
-    rows: dict[int, int] = {}
-    tmp = tempfile.mkdtemp(prefix="sketch100_")
-    k = 64
+def main(argv: list[str]) -> None:
+    args = list(argv)
+    sf_dir = args.pop(0) if args and os.path.isdir(args[0]) else "/root/testdata/sf0.1"
+    factors: tuple[int, ...] = (30, 100)
+    reps = 3
+    if args and re.fullmatch(r"\d+(,\d+)*", args[0]):
+        factors = tuple(int(x) for x in args.pop(0).split(","))
+    if args and args[0].isdigit():
+        reps = int(args.pop(0))
+    if not args:
+        raise SystemExit(__doc__)
+    unknown = [k for k in args if k not in QUERIES]
+    if unknown:
+        raise SystemExit(f"unknown query keys: {unknown}")
+    spark = get_spark("scale_probe")
     try:
-        for factor in (30, 100):
-            fdir = os.path.join(tmp, f"x{factor}")
-            replicate_docs(
-                load_table(spark, sf_dir, "documents"), factor
-            ).repartition(32).write.mode("overwrite").parquet(
-                os.path.join(fdir, "documents.parquet")
-            )
-            rows[factor] = spark.read.parquet(
-                os.path.join(fdir, "documents.parquet")
-            ).count()
-
-            def bigrams(fdir=fdir):
-                docs = spark.read.parquet(
-                    os.path.join(fdir, "documents.parquet")
-                )
-                ws = F.filter(
-                    F.split(F.lower(F.trim("text")), r"\s+"),
-                    lambda t: t != "",
-                )
-                return (
-                    docs.select(ws.alias("ws"))
-                    .filter(F.size("ws") >= 2)
-                    .select(
-                        F.explode(
-                            F.transform(
-                                F.sequence(F.lit(1), F.size("ws") - 1),
-                                lambda i: F.concat_ws(
-                                    " ",
-                                    F.element_at(F.col("ws"), i),
-                                    F.element_at(F.col("ws"), i + 1),
-                                ),
-                            )
-                        ).alias("t")
-                    )
-                )
-
-            def h48(col):
-                return F.conv(
-                    F.substring(
-                        F.md5(F.concat(F.lit("kmv:"), col)), 1, 12
-                    ),
-                    16,
-                    10,
-                ).cast("long")
-
-            builders.setdefault("kmv_stream", {})[factor] = (
-                lambda bigrams=bigrams: kmv_merge_candidates(
-                    kmv_partition_candidates(bigrams(), "t", k), k
-                )
-            )
-            builders.setdefault("kmv_distinct", {})[factor] = (
-                lambda bigrams=bigrams, h48=h48: bigrams()
-                .select(h48(F.col("t")).alias("h"))
-                .distinct()
-                .orderBy("h")
-                .limit(k)
-            )
-
-        times, polluted = time_with_guard(
-            builders,
-            reps,
-            set(builders),
-            retime_over=(100 / 30) * 1.5,
-        )
+        run(spark, sf_dir, factors, reps, args)
     finally:
         spark.stop()
-        shutil.rmtree(tmp, ignore_errors=True)
-
-    lines = [
-        "",
-        "## 100x mergeable-KMV probe — warm median-of-%d" % reps,
-        "",
-        "operators/sketches.py's streamed sketch (bounded-state",
-        "mapInPandas candidates, <=k longs per partition, zero corpus",
-        "shuffles) vs the distinct+TakeOrdered exact form whose",
-        f"corpus-wide shuffle it deletes; docs rows {rows}, identical",
-        "k=64 output pinned in tests/test_sketches.py.  Both legs pay",
-        "the same scan/explode CPU; the delta is the shuffle term.",
-        "",
-        "| leg | 30x | 100x | time 100x/30x |",
-        "|---|---|---|---|",
-    ]
-    for name, t in times.items():
-        mark = " POLLUTED" if name in polluted else ""
-        lines.append(
-            f"| {name} | {t[30]:.2f}s | {t[100]:.2f}s | "
-            f"{t[100] / t[30]:.2f}{mark} |"
-        )
-    out = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "SCALE_PROBE.md",
-    )
-    with open(out, "a") as f:
-        f.write("\n".join(lines) + "\n")
-    print(f"appended to {out}")
-
-
-def _replicate_rel(df: DataFrame, id_cols: list[str], factor: int) -> DataFrame:
-    """factor copies of a relational table with EVERY listed key column
-    offset into a disjoint per-copy range — cross-copy rows can never
-    join and per-key group/partition sizes stay constant as the corpus
-    grows (the relational twin of the doc/embedding bijections)."""
-    if factor == 1:
-        return df
-    out = _replicated(df, id_cols[0], factor)
-    for c in id_cols[1:]:
-        out = out.withColumn(
-            c, F.col(c) + F.col("__k").cast("long") * F.lit(ID_STRIDE)
-        )
-    return out.drop("__k")
-
-
-def rel_100x(sf_dir: str, reps: int = 3) -> None:
-    """Round-9: the fourth leg of the 100x record — the RELATIONAL core
-    at 30x/100x lineitem (18M/60M rows), warm median-of-``reps`` over
-    MATERIALIZED replicated tables (parquet, 32 splits; same round-9
-    methodology as the text probe — the harness must not ride inside
-    the timed plan).  Families mirror the registered TPC-H-shaped keys:
-
-    - q1_agg: Q1 shape — scan + filter + (flag, status) hash agg.
-    - q6_scan_agg: Q6 shape — triple-predicate pushdown scan + 1-row agg.
-    - q3_join: Q3 shape — customer filter (broadcast) + orders/lineitem
-      shuffle joins + per-order revenue agg + top-10.
-    - distinct_agg: two-phase count(DISTINCT partkey) per returnflag
-      (partkeys are copy-offset, so distinct cardinality grows with the
-      corpus like production data).
-    - window_top3: row_number over (custkey, price desc) partitions —
-      a data-sized window shuffle; partition COUNT grows, size doesn't.
-
-    All five are linear-expectation plans (3.33 at 100x/30x).
-
-    Run: python scripts/scale_probe.py --rel100 [sf_dir] [reps]
-    """
-    import shutil
-    import tempfile
-
-    from pyspark.sql import Window
-
-    spark = get_spark("scale_probe_rel100")
-    builders: dict[str, dict[int, object]] = {}
-    tmp = tempfile.mkdtemp(prefix="rel100_")
-    try:
-        for factor in (30, 100):
-            paths = {}
-            for tbl, keys in (
-                ("lineitem", ["l_orderkey", "l_partkey"]),
-                ("orders", ["o_orderkey", "o_custkey"]),
-                ("customer", ["c_custkey"]),
-            ):
-                p = os.path.join(tmp, f"{tbl}_x{factor}")
-                _replicate_rel(
-                    load_table(spark, sf_dir, tbl), keys, factor
-                ).repartition(32).write.mode("overwrite").parquet(p)
-                paths[tbl] = p
-            li = spark.read.parquet(paths["lineitem"])
-            orders = spark.read.parquet(paths["orders"])
-            cust = spark.read.parquet(paths["customer"])
-
-            # builders rebuild per timing (time_with_guard contract)
-            def q1_agg(li=li):
-                return (
-                    li.filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
-                    .groupBy("l_returnflag", "l_linestatus")
-                    .agg(
-                        F.sum("l_quantity").alias("sum_qty"),
-                        F.sum("l_extendedprice").alias("sum_price"),
-                        F.avg("l_discount").alias("avg_disc"),
-                        F.count("*").alias("n"),
-                    )
-                )
-
-            def q6_scan_agg(li=li):
-                return li.filter(
-                    (F.col("l_shipdate") >= F.lit("1996-01-01"))
-                    & (F.col("l_shipdate") < F.lit("1997-01-01"))
-                    & (F.col("l_discount").between(0.02, 0.06))
-                    & (F.col("l_quantity") < 24)
-                ).agg(
-                    F.sum(F.col("l_extendedprice") * F.col("l_discount")).alias(
-                        "rev"
-                    )
-                )
-
-            def q3_join(li=li, orders=orders, cust=cust):
-                return (
-                    cust.filter(F.col("c_mktsegment") == "BUILDING")
-                    .join(orders, F.col("c_custkey") == F.col("o_custkey"))
-                    .join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-                    .groupBy("o_orderkey")
-                    .agg(
-                        F.sum(
-                            F.col("l_extendedprice") * (1 - F.col("l_discount"))
-                        ).alias("revenue")
-                    )
-                    .orderBy(F.col("revenue").desc(), F.col("o_orderkey"))
-                    .limit(10)
-                )
-
-            def distinct_agg(li=li):
-                return li.groupBy("l_returnflag").agg(
-                    F.countDistinct("l_partkey").alias("n_parts")
-                )
-
-            def window_top3(orders=orders):
-                w = Window.partitionBy("o_custkey").orderBy(
-                    F.col("o_totalprice").desc(), F.col("o_orderkey")
-                )
-                return (
-                    orders.withColumn("rk", F.row_number().over(w))
-                    .filter(F.col("rk") <= 3)
-                    .select("o_custkey", "o_orderkey", "rk")
-                )
-
-            fams = {
-                "q1_agg": q1_agg,
-                "q6_scan_agg": q6_scan_agg,
-                "q3_join": q3_join,
-                "distinct_agg": distinct_agg,
-                "window_top3": window_top3,
-            }
-            for name, build in fams.items():
-                builders.setdefault(name, {})[factor] = build
-        times, polluted = time_with_guard(
-            builders, reps, set(builders), retime_over=(100 / 30) * 1.5
-        )
-    finally:
-        spark.stop()
-        shutil.rmtree(tmp, ignore_errors=True)
-
-    lines = [
-        "",
-        "## 100x relational-core probe — warm median-of-%d" % reps,
-        "",
-        "TPC-H-shaped families at 30x/100x lineitem (18M/60M rows),",
-        "materialized replicated tables, every key column copy-offset so",
-        "join/group density per key is constant while key cardinality",
-        "grows.  Linear expectation 3.33.",
-        "",
-        "| stage | 30x | 100x | time 100x/30x |",
-        "|---|---|---|---|",
-    ]
-    for name, t in times.items():
-        lines.append(
-            f"| {name} | {t[30]:.2f}s | {t[100]:.2f}s | "
-            f"{t[100] / t[30]:.2f}{' POLLUTED' if name in polluted else ''} |"
-        )
-    out = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "SCALE_PROBE.md"
-    )
-    with open(out, "a") as f:
-        f.write("\n".join(lines) + "\n")
-    print(f"appended to {out}")
 
 
 if __name__ == "__main__":
-    if sys.argv[1:2] == ["--embed100"]:
-        embed_100x(
-            sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1",
-            int(sys.argv[3]) if len(sys.argv) > 3 else 1,
-        )
-    elif sys.argv[1:2] == ["--dedup100"]:
-        dedup_100x(
-            sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1",
-            int(sys.argv[3]) if len(sys.argv) > 3 else 1,
-        )
-    elif sys.argv[1:2] == ["--text100"]:
-        text_100x(
-            sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1",
-            int(sys.argv[3]) if len(sys.argv) > 3 else 3,
-        )
-    elif sys.argv[1:2] == ["--ann100"]:
-        ann_100x(
-            sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1",
-            int(sys.argv[3]) if len(sys.argv) > 3 else 3,
-        )
-    elif sys.argv[1:2] == ["--rel100"]:
-        rel_100x(
-            sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1",
-            int(sys.argv[3]) if len(sys.argv) > 3 else 3,
-        )
-    elif sys.argv[1:2] == ["--r16cores"]:
-        r16_core_scaling(
-            sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1",
-            int(sys.argv[3]) if len(sys.argv) > 3 else 3,
-            int(sys.argv[4]) if len(sys.argv) > 4 else 10,
-        )
-    elif sys.argv[1:2] == ["--layout100"]:
-        layout_100x(
-            sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1",
-            int(sys.argv[3]) if len(sys.argv) > 3 else 2,
-        )
-    elif sys.argv[1:2] == ["--queue100"]:
-        queue_100x(
-            sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1",
-            int(sys.argv[3]) if len(sys.argv) > 3 else 3,
-            set(sys.argv[4].split(",")) if len(sys.argv) > 4 else None,
-            tuple(int(x) for x in sys.argv[5].split(","))
-            if len(sys.argv) > 5
-            else (30, 100),
-        )
-    elif sys.argv[1:2] == ["--sketch100"]:
-        sketch_100x(
-            sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1",
-            int(sys.argv[3]) if len(sys.argv) > 3 else 3,
-        )
-    elif sys.argv[1:2] == ["--ngram100"]:
-        ngram100_median(
-            sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1",
-            int(sys.argv[3]) if len(sys.argv) > 3 else 3,
-        )
-    else:
-        main()
+    main(sys.argv[1:])

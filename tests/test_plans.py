@@ -136,9 +136,9 @@ def test_bucketed_join_and_agg_are_shuffle_free(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS b_customer")
 
 
-# declaration-queue keys: same plan pins as scripts/explain_audit.py's
-# QUEUE_AUDITS, enforced in CI at sf0.001 so a rewrite cannot degrade a
-# queued plan between build time and declaration time
+# keys built ahead of their declaration: same plan pins as
+# scripts/explain_audit.py's AUDITS, enforced in CI at sf0.001 so a
+# rewrite cannot degrade their plans
 QUEUE_CASES = [
     ("q_ann_ivf_filtered", "take_ordered"),
     # escalation's 1-row depth decision is a deliberate broadcast
@@ -163,7 +163,7 @@ QUEUE_CASES = [
     ("q_dedup_url", "no_nested_loop"),
     ("q_topk_matryoshka", "take_ordered"),
     # round-12 queue (r16-r20 windows); hits/bpe/tokens_per_source/kmv
-    # are pinned in explain_audit QUEUE_AUDITS instead — their
+    # are pinned in explain_audit AUDITS instead — their
     # deliberate 1-row broadcast cross join (scalar-model pattern, or
     # kmv's constant-key union-leg join that Catalyst folds to a
     # trivial 1x1 nested loop) fails a naive no_nested_loop check
@@ -180,12 +180,7 @@ QUEUE_CASES = [
 
 @pytest.mark.parametrize("key,shape", QUEUE_CASES)
 def test_queued_plan_shape(spark, key, shape):
-    # a queued key keeps its pin after declaration: fall back to the
-    # declared registry once the rotation window admits it
-    from vector_db_ingestor_spark.queries import QUERIES, QUEUED_QUERIES
-
-    fn = QUERIES.get(key) or QUEUED_QUERIES[key][0]
-    plan = _executed_plan(fn(spark, SF_DIR))
+    plan = _executed_plan(QUERIES[key](spark, SF_DIR))
     if shape == "no_nested_loop":
         assert "BroadcastNestedLoopJoin" not in plan
         assert "CartesianProduct" not in plan

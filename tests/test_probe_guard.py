@@ -1,13 +1,21 @@
-"""The probe-runner measurement guard (VERDICT r11 #5): a
-linear-expectation family whose big-factor leg measures FASTER than its
-small-factor leg is physically impossible — the runner must re-time it
-within-session and mark the row POLLUTED if the inversion persists,
-instead of publishing a number the box already disproved.  Pure-function
-tests with an injected timer; no Spark."""
+"""The scale runner (scripts/scale_probe.py).
+
+The measurement guard (VERDICT r11 #5): a linear-expectation family
+whose big-factor leg measures FASTER than its small-factor leg is
+physically impossible — the runner must re-time it within-session and
+mark the row POLLUTED if the inversion persists, instead of publishing
+a number the box already disproved.  Pure-function tests with an
+injected timer; no Spark.
+
+The replicators the runner's fixture dirs are built from, at factor 3,
+and one smoke run of the runner itself (Spark)."""
 
 import importlib.util
 import os
 import sys
+
+import numpy as np
+import pytest
 
 _SPEC = importlib.util.spec_from_file_location(
     "scale_probe",
@@ -118,3 +126,98 @@ def test_guard_skips_flat_families():
     )
     assert polluted == set()
     assert len(timer.calls) == 2  # no rerun
+
+
+FACTOR = 3
+
+
+@pytest.fixture(scope="module")
+def fixture_x3(spark, sf_dir, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("scale_x3"))
+    scale_probe.write_fixture(spark, sf_dir, FACTOR, out)
+    return out
+
+
+def test_replicated_tables_have_disjoint_per_copy_key_ranges(
+    spark, sf_dir, fixture_x3
+):
+    """Every replicated table holds FACTOR x the rows, and each key
+    column holds exactly the 1x values shifted by k * ID_STRIDE for
+    k = 0..FACTOR-1 (1x keys lie in [0, ID_STRIDE), so the per-copy
+    ranges are disjoint); nation and region are copied unchanged."""
+    from vector_db_ingestor_spark.tables import TABLES, load_table
+
+    stride = scale_probe.ID_STRIDE
+    key_cols = {
+        "documents": ["doc_id"],
+        "embeddings": ["vec_id"],
+        "events": ["event_id", "user_id"],
+        **scale_probe.REL_KEYS,
+    }
+    for name in TABLES:
+        base = load_table(spark, sf_dir, name)
+        rep = load_table(spark, fixture_x3, name)
+        if name not in key_cols:
+            assert sorted(rep.collect()) == sorted(base.collect()), name
+            continue
+        assert rep.count() == FACTOR * base.count(), name
+        for c in key_cols[name]:
+            one = [r[0] for r in base.select(c).collect()]
+            assert 0 <= min(one) and max(one) < stride, (name, c)
+            got = sorted(r[0] for r in rep.select(c).collect())
+            want = sorted(v + k * stride for k in range(FACTOR) for v in one)
+            assert got == want, (name, c)
+
+
+def test_replicate_embeddings_keeps_within_copy_dots_bit_exact(spark, sf_dir):
+    from vector_db_ingestor_spark.constants import EMBEDDING_DIM
+    from vector_db_ingestor_spark.tables import load_table
+
+    base = load_table(spark, sf_dir, "embeddings")
+    rep = scale_probe.replicate_embeddings(base, FACTOR, EMBEDDING_DIM).toPandas()
+    rep["copy"] = rep["vec_id"] // scale_probe.ID_STRIDE
+    rep = rep.sort_values("vec_id")
+
+    def dots(k):
+        a = np.stack(rep.loc[rep["copy"] == k, "embedding"].map(np.asarray))
+        a = a[:120]  # 120 x 120 pairs keeps the product tensor small
+        return a, (a[:, None, :] * a[None, :, :]).sum(axis=-1)
+
+    a0, d0 = dots(0)
+    for k in range(1, FACTOR):
+        ak, dk = dots(k)
+        assert not np.array_equal(ak, a0)  # the mask really flips signs
+        assert np.array_equal(dk, d0), f"copy {k} dot products moved"
+
+
+def test_dedup_ngram_on_replicated_dir_is_shifted_1x_pairs(
+    spark, sf_dir, fixture_x3
+):
+    """The exact-pair key on the 3x dir returns exactly the 1x pairs,
+    once per copy, shifted by k * ID_STRIDE: no cross-copy pair, none
+    lost within a copy."""
+    from vector_db_ingestor_spark.queries import QUERIES
+
+    stride = scale_probe.ID_STRIDE
+    one = QUERIES["q_dedup_ngram"](spark, sf_dir).collect()
+    assert one
+    got = sorted(tuple(r) for r in QUERIES["q_dedup_ngram"](spark, fixture_x3).collect())
+    want = sorted(
+        (r["id_a"] + k * stride, r["id_b"] + k * stride, r["jaccard"])
+        for k in range(FACTOR)
+        for r in one
+    )
+    assert got == want
+
+
+def test_runner_smoke_appends_one_section(spark, sf_dir, tmp_path):
+    out = tmp_path / "SCALE_PROBE.md"
+    out.write_text("# existing\n")
+    key = "q_scan_project"
+    times = scale_probe.run(spark, sf_dir, (1, 2), 1, [key], out=str(out))
+    assert set(times[key]) == {1, 2}
+    assert all(t > 0 for t in times[key].values())
+    text = out.read_text()
+    assert text.startswith("# existing\n")
+    assert text.count("## scale run") == 1
+    assert f"| {key} | 1x |" in text and f"| {key} | 2x |" in text

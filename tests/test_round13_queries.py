@@ -1,7 +1,7 @@
 """Round-13 queue item: q_ann_ivf_filtered — filtered ANN under the
 hash gate (the search_ann(filter_metadata=...) semantics on the
 literal-centroid IVF model).  The uniform DuckDB gate runs via
-scripts/check_oracle.py --queue and the registry-wide parametrized
+scripts/check_oracle.py and the registry-wide parametrized
 test; this file pins the SEMANTIC boundary the oracle can't state:
 with every cell probed, filtered ANN degrades to exact filtered
 retrieval."""

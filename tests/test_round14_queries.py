@@ -1,7 +1,7 @@
 """Round-14 queue item: q_ann_ivf_escalate — the filtered-ANN recall
 contract under the hash gate (the search_ann escalation decision rule
 as one closed-form plan).  The uniform DuckDB gate runs via
-scripts/check_oracle.py --queue and the registry-wide parametrized
+scripts/check_oracle.py and the registry-wide parametrized
 test; this file pins the SEMANTIC properties the oracle can't state:
 the chosen depth is the minimal sufficient one, and at the all-cells
 depth the result equals exact filtered retrieval."""
@@ -13,7 +13,8 @@ from pyspark.sql import functions as F
 from vector_db_ingestor_spark.operators.topk import topk_cosine
 from vector_db_ingestor_spark.queries import (
     PROBE_64,
-    QUEUED_QUERIES,
+    ORACLE_SQL,
+    QUERIES,
     _ivf_assign_centroids,
 )
 from vector_db_ingestor_spark.operators.similarity import (
@@ -26,7 +27,7 @@ from vector_db_ingestor_spark.tables import load_table
 def test_escalate_differential_vs_duckdb(spark, sf_dir):
     """The uniform hash comparison, run early (declaration-window
     insurance): Spark impl vs DuckDB oracle, value-for-value."""
-    fn, sql = QUEUED_QUERIES["q_ann_ivf_escalate"]
+    fn, sql = QUERIES["q_ann_ivf_escalate"], ORACLE_SQL["q_ann_ivf_escalate"]
     got = fn(spark, sf_dir).toPandas()
     con = duckdb.connect()
     con.execute(
@@ -55,7 +56,7 @@ def test_multimodal_dedup_accounting(spark, sf_dir):
     the min doc_id of its content group, reclaimed bytes equal the
     total minus one payload per distinct content, and copy counts
     partition the corpus."""
-    fn, _ = QUEUED_QUERIES["q_multimodal_dedup"]
+    fn = QUERIES["q_multimodal_dedup"]
     rows = fn(spark, sf_dir).collect()
     assert rows
     by_sha = {}
@@ -78,7 +79,7 @@ def test_multimodal_manifest_matches_sequential_writer(spark, sf_dir):
     plain Python, cut shards at the running-byte boundary, and compare
     the manifest row-for-row; shards must partition the stream
     contiguously."""
-    fn, _ = QUEUED_QUERIES["q_multimodal_manifest"]
+    fn = QUERIES["q_multimodal_manifest"]
     got = {
         (r.modality, r.shard_id): (
             r.n_items, r.shard_bytes, r.first_doc, r.last_doc
@@ -143,7 +144,7 @@ def test_jsonl_roundtrip_corruption_is_exact(spark, sf_dir):
     here from the raw table."""
     import hashlib
 
-    fn, _ = QUEUED_QUERIES["q_jsonl_ingest"]
+    fn = QUERIES["q_jsonl_ingest"]
     got = {r.src_doc_id: r for r in fn(spark, sf_dir).collect()}
     raw = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "text"
@@ -168,7 +169,7 @@ def test_nprobe_curve_is_monotone_to_exact(spark, sf_dir):
     non-decreasing in nprobe (a wider probe can only add exact-top-k
     members) and reaches exactly 1000 milli at all-cells-probed — the
     q_ann_ivf_escalate boundary property read as a curve."""
-    fn, _ = QUEUED_QUERIES["q_ann_nprobe_curve"]
+    fn = QUERIES["q_ann_nprobe_curve"]
     rows = sorted(fn(spark, sf_dir).collect(), key=lambda r: r.nprobe)
     assert [r.nprobe for r in rows] == [1, 2, 4, 8]
     recalls = [r.recall_milli for r in rows]
@@ -199,7 +200,7 @@ def test_csv_ingest_every_row_quoted(spark, sf_dir):
     """q_csv_ingest semantics: the injected tail forces the writer to
     quote EVERY row (the contract the key exists to certify), and the
     parsed text always ends with the tail."""
-    fn, _ = QUEUED_QUERIES["q_csv_ingest"]
+    fn = QUERIES["q_csv_ingest"]
     rows = fn(spark, sf_dir).collect()
     assert rows
     assert all(r.was_quoted for r in rows)
@@ -217,7 +218,7 @@ def test_asof_tolerance_three_way_split(spark, sf_dir):
     from vector_db_ingestor_spark.operators.joins import asof_join
     from vector_db_ingestor_spark.queries import QUERIES
 
-    fn, _ = QUEUED_QUERIES["q_join_asof_tolerance"]
+    fn = QUERIES["q_join_asof_tolerance"]
     got = {r.event_id: r for r in fn(spark, sf_dir).collect()}
     base = {
         r.event_id: r.asof_click_id
@@ -266,7 +267,7 @@ def test_asof_nearest_semantics(spark, sf_dir):
     nearest); side is null exactly when no click exists for the user."""
     from vector_db_ingestor_spark.queries import QUERIES
 
-    fn, _ = QUEUED_QUERIES["q_join_asof_nearest"]
+    fn = QUERIES["q_join_asof_nearest"]
     got = {r.event_id: r for r in fn(spark, sf_dir).collect()}
     back = {
         r.event_id: r.asof_click_id
@@ -312,7 +313,7 @@ def test_sample_temperature_flattens(spark, sf_dir):
     alpha < 1 FLATTENS it (the largest-share source is undersampled,
     the smallest oversampled), and expected counts spend the budget up
     to per-source rounding."""
-    fn, _ = QUEUED_QUERIES["q_sample_temperature"]
+    fn = QUERIES["q_sample_temperature"]
     rows = fn(spark, sf_dir).collect()
     assert len(rows) >= 2
     assert abs(sum(r.temp_weight for r in rows) - 1.0) < 1e-3
@@ -333,7 +334,7 @@ def test_escalate_depth_is_minimal_sufficient(spark, sf_dir):
     (1, 2, 4, 8) whose probed-cell prefix holds >= k filtered
     survivors (or 8 when none does) — recomputed here independently
     from the candidate set."""
-    fn, _ = QUEUED_QUERIES["q_ann_ivf_escalate"]
+    fn = QUERIES["q_ann_ivf_escalate"]
     rows = fn(spark, sf_dir).collect()
     assert rows, "fixture must yield candidates"
     used = {r.nprobe_used for r in rows}
@@ -370,7 +371,7 @@ def test_escalate_all_cells_equals_exact_filtered(spark, sf_dir):
     exactness: compare against brute-force filtered top-k whenever
     nprobe_used == n_cells; at shallower depths the hits must still
     all satisfy the filter and be ordered by (score desc, vec_id)."""
-    fn, _ = QUEUED_QUERIES["q_ann_ivf_escalate"]
+    fn = QUERIES["q_ann_ivf_escalate"]
     rows = fn(spark, sf_dir).collect()
     assert rows
     scores = [(r.score, r.vec_id) for r in rows]

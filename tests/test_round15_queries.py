@@ -2,7 +2,7 @@
 min-side-containment near-subset detector — the excerpt/re-publication
 duplication shape Jaccard washes out) and q_agg_decay (exponentially
 time-decayed aggregation with exact power-of-two weights).  The
-uniform DuckDB gate runs via scripts/check_oracle.py --queue and the
+uniform DuckDB gate runs via scripts/check_oracle.py and the
 registry-wide parametrized test; this file pins the SEMANTIC
 properties the oracles can't state: a true subset doc scores
 containment 1.0 while its jaccard is tiny, containment dominates
@@ -19,13 +19,13 @@ from vector_db_ingestor_spark.operators.dedup import (
     containment_pairs,
     ngram_jaccard_pairs,
 )
-from vector_db_ingestor_spark.queries import QUEUED_QUERIES, _CONTAIN
+from vector_db_ingestor_spark.queries import ORACLE_SQL, QUERIES, _CONTAIN
 
 
 def test_containment_differential_vs_duckdb(spark, sf_dir):
     """Declaration-window insurance: Spark impl vs DuckDB oracle,
     value-for-value on the fixture."""
-    fn, sql = QUEUED_QUERIES["q_dedup_containment"]
+    fn, sql = QUERIES["q_dedup_containment"], ORACLE_SQL["q_dedup_containment"]
     got = (
         fn(spark, sf_dir)
         .toPandas()
@@ -133,7 +133,7 @@ def test_agg_decay_differential_vs_duckdb(spark, sf_dir):
     value-for-value on the fixture (BIGINT columns exact-equal)."""
     import duckdb as ddb
 
-    fn, sql = QUEUED_QUERIES["q_agg_decay"]
+    fn, sql = QUERIES["q_agg_decay"], ORACLE_SQL["q_agg_decay"]
     got = (
         fn(spark, sf_dir)
         .toPandas()

@@ -4659,14 +4659,7 @@ def q_text_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     natural boilerplate, so per-source footers are seeded
     deterministically first (same fixture pattern as q_pii_redact) —
     the detector then has real cross-document repeats to find."""
-    return boilerplate_top50(load_table(spark, sf_dir, "documents"))
-
-
-def boilerplate_top50(docs: DataFrame) -> DataFrame:
-    """DataFrame-core of q_text_boilerplate, shared with
-    scripts/scale_probe.py so the probe always measures the production
-    plan (the probe feeds replicated inputs; the query feeds fixture
-    tables)."""
+    docs = load_table(spark, sf_dir, "documents")
     page = F.concat(
         F.col("text"),
         F.lit(". Published by "), F.col("source"), F.lit(" syndicate. "),
@@ -4724,13 +4717,8 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     time).  One window cumsum per language partition, no iteration; at
     100 TB the partition key is (lang, shard) so each window stays
     bounded."""
-    return pack_sequences_plan(load_table(spark, sf_dir, "documents"))
-
-
-def pack_sequences_plan(docs: DataFrame, capacity: int = 2048) -> DataFrame:
-    """DataFrame-core of q_pack_sequences, shared with
-    scripts/scale_probe.py (same drift rationale as
-    :func:`boilerplate_top50`)."""
+    capacity = 2048
+    docs = load_table(spark, sf_dir, "documents")
     t = docs.select(
         "doc_id", "lang",
         F.size(F.split(F.trim("text"), r"\s+")).alias("n_tokens"),
@@ -8350,9 +8338,13 @@ def q_tokens_per_source_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
     after q_mixture_weights' targets are applied.  Plan: one narrow
     token-count projection riding the scan (size of the split array —
     no explode; counting needs no token rows), one map-side-combined
-    hash agg on (source, lang), then share/cumulative windows over the
-    AGGREGATED table — strata-scale, so the unpartitioned cumulative
-    window is bounded (the q_docs_filter_report global-window rule).
+    hash agg on (source, lang), then ONE conditional aggregation over a
+    broadcast self cross join of the AGGREGATED table: each stratum
+    counts and sums the strata at or before it in contribution order
+    (n_tokens DESC, source, lang — a total order, the group keys are
+    unique) and sums all of them for the corpus total.  That is
+    strata^2 pair rows, parallel on the probe side, with no
+    partition-less Window funnelling the table into one task.
     Exactness: token counts are integers; shares are one double
     division rounded at the end; the cumulative sum is an exact BIGINT
     running total divided once."""
@@ -8370,15 +8362,24 @@ def q_tokens_per_source_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("ntok").alias("n_tokens"),
         )
     )
-    tot = agg.agg(F.sum("n_tokens").alias("tot"))
-    w = Window.orderBy(
-        F.col("n_tokens").desc(), F.col("source").asc(), F.col("lang").asc()
+    prior = agg.select(*[F.col(c).alias("b_" + c) for c in agg.columns])
+    # n_docs never decides the order ((source, lang) is unique); keeping
+    # it in the key keeps the prior side the same aggregate as agg, so
+    # the corpus shuffle is reused instead of re-scanned
+    at_or_before = F.struct(
+        -F.col("b_n_tokens"), "b_source", "b_lang", "b_n_docs"
+    ) <= F.struct(-F.col("n_tokens"), "source", "lang", "n_docs")
+    ranked = (
+        agg.crossJoin(F.broadcast(prior))
+        .groupBy("source", "lang", "n_docs", "n_tokens")
+        .agg(
+            F.count_if(at_or_before).cast("int").alias("rank"),
+            F.sum(F.when(at_or_before, F.col("b_n_tokens"))).alias("cum_tokens"),
+            F.sum("b_n_tokens").alias("tot"),
+        )
     )
     return (
-        agg.crossJoin(F.broadcast(tot))
-        .withColumn("rank", F.row_number().over(w))
-        .withColumn("cum_tokens", F.sum("n_tokens").over(w))
-        .select(
+        ranked.select(
             "rank", "source", "lang", "n_docs", "n_tokens",
             F.round(F.col("n_tokens") / F.col("tot"), 6).alias("share"),
             F.round(F.col("cum_tokens") / F.col("tot"), 6).alias("cum_share"),
@@ -9317,7 +9318,7 @@ def _ann_nprobe_curve_oracle(k: int = 20) -> str:
 # Round-14 declarations (SURVEY §7's largest window: the seven pairs
 # built round 11, differentially tested in tests/test_round11_queries.py,
 # plan-pinned in tests/test_plans.py QUEUE_CASES, and 100x-probed —
-# promoted from QUEUED_QUERIES into the declared inventory here)
+# declared here)
 # =====================================================================
 
 QUERIES["q_text_boilerplate_strip"] = q_text_boilerplate_strip_impl
@@ -9338,8 +9339,8 @@ ORACLE_SQL["q_join_interval"] = _join_interval_oracle()
 
 # =====================================================================
 # Round-15 declarations (the scheduled window from SURVEY §7: built +
-# differentially tested round 11, gate-green on every --queue run since
-# — promoted from QUEUED_QUERIES into the declared inventory here).
+# differentially tested round 11, oracle-green on every run since
+# — declared here).
 # q_sketch_linear also retires the evidence-ladder gap next to
 # q_agg_approx's rows-only HLL (hash-exact distinct estimation).
 # =====================================================================
@@ -9519,66 +9520,52 @@ def _agg_decay_oracle() -> str:
 
 
 # =====================================================================
-# the declaration queue, as data: every built-ahead impl/oracle pair
-# (single source of truth for scripts/check_oracle.py --queue and the
-# per-round registration diffs; tests import the pairs directly)
+# Declarations of the pairs built rounds 11-15 ahead of their window
+# (each differentially tested in tests/test_round1{1,4,5}_queries.py
+# and plan-pinned in scripts/explain_audit.py AUDITS)
 # =====================================================================
 
-QUEUED_QUERIES: dict[str, tuple[QueryFn, str]] = {
-    "q_ann_ivf_filtered": (q_ann_ivf_filtered_impl, _ivf_filtered_oracle()),
-    "q_ann_ivf_escalate": (q_ann_ivf_escalate_impl, _ivf_escalate_oracle()),
-    "q_multimodal_dedup": (
-        q_multimodal_dedup_impl,
-        _multimodal_dedup_oracle(),
-    ),
-    "q_multimodal_manifest": (
-        q_multimodal_manifest_impl,
-        _multimodal_manifest_oracle(),
-    ),
-    "q_join_asof_tolerance": (
-        q_join_asof_tolerance_impl,
-        _join_asof_tolerance_oracle(),
-    ),
-    "q_join_asof_nearest": (
-        q_join_asof_nearest_impl,
-        _join_asof_nearest_oracle(),
-    ),
-    "q_sample_temperature": (
-        q_sample_temperature_impl,
-        _sample_temperature_oracle(),
-    ),
-    "q_jsonl_ingest": (q_jsonl_ingest_impl, _jsonl_ingest_oracle()),
-    "q_csv_ingest": (q_csv_ingest_impl, _csv_ingest_oracle()),
-    "q_ann_nprobe_curve": (
-        q_ann_nprobe_curve_impl,
-        _ann_nprobe_curve_oracle(),
-    ),
-    "q_sample_reservoir": (q_sample_reservoir_impl, _sample_reservoir_oracle()),
-    "q_dedup_passage": (q_dedup_passage_impl, _dedup_passage_oracle()),
-    "q_dedup_containment": (
-        q_dedup_containment_impl,
-        _dedup_containment_oracle(),
-    ),
-    "q_agg_decay": (q_agg_decay_impl, _agg_decay_oracle()),
-    "q_graph_hits": (q_graph_hits_impl, _graph_hits_oracle()),
-    "q_sketch_kmv": (q_sketch_kmv_impl, _sketch_kmv_oracle()),
-    "q_stats_ab": (q_stats_ab_impl, _stats_ab_oracle()),
-    "q_join_spatial": (q_join_spatial_impl, _join_spatial_oracle()),
-    "q_vec_pq_quality": (q_vec_pq_quality_impl, _vec_pq_quality_oracle()),
-    "q_tokens_per_source": (
-        q_tokens_per_source_impl,
-        _tokens_per_source_oracle(),
-    ),
-    "q_bpe_train": (q_bpe_train_impl, _bpe_train_oracle()),
-    "q_curation_pipeline": (
-        q_curation_pipeline_impl,
-        _curation_pipeline_oracle(),
-    ),
-}
-
-# a queued key must not also be declared (the whole point is that the
-# rotation window hasn't admitted it yet)
-assert not set(QUEUED_QUERIES) & set(QUERIES), (
-    "queued keys overlap declared inventory: "
-    f"{set(QUEUED_QUERIES) & set(QUERIES)}"
-)
+QUERIES["q_ann_ivf_filtered"] = q_ann_ivf_filtered_impl
+ORACLE_SQL["q_ann_ivf_filtered"] = _ivf_filtered_oracle()
+QUERIES["q_ann_ivf_escalate"] = q_ann_ivf_escalate_impl
+ORACLE_SQL["q_ann_ivf_escalate"] = _ivf_escalate_oracle()
+QUERIES["q_multimodal_dedup"] = q_multimodal_dedup_impl
+ORACLE_SQL["q_multimodal_dedup"] = _multimodal_dedup_oracle()
+QUERIES["q_multimodal_manifest"] = q_multimodal_manifest_impl
+ORACLE_SQL["q_multimodal_manifest"] = _multimodal_manifest_oracle()
+QUERIES["q_join_asof_tolerance"] = q_join_asof_tolerance_impl
+ORACLE_SQL["q_join_asof_tolerance"] = _join_asof_tolerance_oracle()
+QUERIES["q_join_asof_nearest"] = q_join_asof_nearest_impl
+ORACLE_SQL["q_join_asof_nearest"] = _join_asof_nearest_oracle()
+QUERIES["q_sample_temperature"] = q_sample_temperature_impl
+ORACLE_SQL["q_sample_temperature"] = _sample_temperature_oracle()
+QUERIES["q_jsonl_ingest"] = q_jsonl_ingest_impl
+ORACLE_SQL["q_jsonl_ingest"] = _jsonl_ingest_oracle()
+QUERIES["q_csv_ingest"] = q_csv_ingest_impl
+ORACLE_SQL["q_csv_ingest"] = _csv_ingest_oracle()
+QUERIES["q_ann_nprobe_curve"] = q_ann_nprobe_curve_impl
+ORACLE_SQL["q_ann_nprobe_curve"] = _ann_nprobe_curve_oracle()
+QUERIES["q_sample_reservoir"] = q_sample_reservoir_impl
+ORACLE_SQL["q_sample_reservoir"] = _sample_reservoir_oracle()
+QUERIES["q_dedup_passage"] = q_dedup_passage_impl
+ORACLE_SQL["q_dedup_passage"] = _dedup_passage_oracle()
+QUERIES["q_dedup_containment"] = q_dedup_containment_impl
+ORACLE_SQL["q_dedup_containment"] = _dedup_containment_oracle()
+QUERIES["q_agg_decay"] = q_agg_decay_impl
+ORACLE_SQL["q_agg_decay"] = _agg_decay_oracle()
+QUERIES["q_graph_hits"] = q_graph_hits_impl
+ORACLE_SQL["q_graph_hits"] = _graph_hits_oracle()
+QUERIES["q_sketch_kmv"] = q_sketch_kmv_impl
+ORACLE_SQL["q_sketch_kmv"] = _sketch_kmv_oracle()
+QUERIES["q_stats_ab"] = q_stats_ab_impl
+ORACLE_SQL["q_stats_ab"] = _stats_ab_oracle()
+QUERIES["q_join_spatial"] = q_join_spatial_impl
+ORACLE_SQL["q_join_spatial"] = _join_spatial_oracle()
+QUERIES["q_vec_pq_quality"] = q_vec_pq_quality_impl
+ORACLE_SQL["q_vec_pq_quality"] = _vec_pq_quality_oracle()
+QUERIES["q_tokens_per_source"] = q_tokens_per_source_impl
+ORACLE_SQL["q_tokens_per_source"] = _tokens_per_source_oracle()
+QUERIES["q_bpe_train"] = q_bpe_train_impl
+ORACLE_SQL["q_bpe_train"] = _bpe_train_oracle()
+QUERIES["q_curation_pipeline"] = q_curation_pipeline_impl
+ORACLE_SQL["q_curation_pipeline"] = _curation_pipeline_oracle()
