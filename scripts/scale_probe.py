@@ -375,7 +375,7 @@ def run(
         # pollutes its own later keys)
         times, polluted = time_with_guard(
             builders, reps, set(keys), timer,
-            retime_over=factors[-1] / factors[0] * 1.5 if len(factors) > 1 else None,
+            retime_over=factors[-1] / factors[0] * 1.5,
         )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
