@@ -85,11 +85,12 @@ AUDITS: dict[str, dict] = {
         "max_exchange": 2, "reused_exchange": True, "partial_agg": True,
         "no_nested_loop": True,
     },
-    # r15 shape: ONE persisted shingle scan feeds signatures and the
-    # exact-jaccard verify, and the banded table is persisted so both
-    # self-join sides read the cache (exchange reuse does not match
-    # across InMemoryTableScan instances) — signature pipeline still
-    # computes exactly once; broadcast verify joins
+    # ONE persisted shingle scan feeds signatures and the exact-jaccard
+    # verify, and the banded table is persisted so the signature
+    # pipeline computes exactly once; each self-join side shuffles the
+    # cached band rows on (band_idx, band_hash) once (exchange reuse
+    # does not match across InMemoryTableScan instances); broadcast
+    # verify joins
     "q_dedup_minhash_verified": {
         "max_exchange": 4, "no_nested_loop": True, "broadcast": True,
     },

@@ -239,7 +239,7 @@ def test_minhash_identical_docs_est_one(spark):
 
 def test_minhash_agg_signature_matches_column_contract(spark):
     """minhash_signatures (the explode-agg hot path that
-    minhash_candidates actually calls) must equal the Column-level
+    minhash_candidates actually calls) must equal the per-row
     minhash_signature contract term-for-term, for BOTH hash families —
     the two build from one family definition, and this guards the
     execution shapes against each other."""
@@ -248,7 +248,7 @@ def test_minhash_agg_signature_matches_column_contract(spark):
     from vector_db_ingestor_spark.operators.dedup import (
         minhash_signature,
         minhash_signatures,
-        word_shingles,
+        word_shingles_sql,
     )
 
     df = spark.createDataFrame(
@@ -257,12 +257,12 @@ def test_minhash_agg_signature_matches_column_contract(spark):
          (3, "the quick brown fox jumps over the lazy dog again and again")],
         "doc_id INT, text STRING",
     )
-    sh = df.select("doc_id", word_shingles(F.col("text"), 2).alias("sh"))
+    sh = df.select("doc_id", F.expr(word_shingles_sql("text", 2)).alias("sh"))
     for family in ("xxhash64", "md5"):
         contract = {
             r.doc_id: list(r.sig)
             for r in sh.select(
-                "doc_id", minhash_signature(F.col("sh"), 8, family).alias("sig")
+                "doc_id", minhash_signature("sh", 8, family).alias("sig")
             ).collect()
         }
         hot = {
@@ -284,18 +284,18 @@ def test_minhash_md5_family_cross_engine_signature(spark):
         MINHASH_P,
         minhash_perm_consts,
         minhash_signature,
-        word_shingles,
+        word_shingles_sql,
     )
     from pyspark.sql import functions as F
 
     docs = [(1, "the quick brown fox jumps over the lazy dog"),
             (2, "pack my box with five dozen liquor jugs")]
     df = spark.createDataFrame(docs, "doc_id INT, text STRING")
-    sh = df.select("doc_id", word_shingles(F.col("text"), 2).alias("sh"))
+    sh = df.select("doc_id", F.expr(word_shingles_sql("text", 2)).alias("sh"))
     spark_sig = {
         r.doc_id: list(r.sig)
         for r in sh.select(
-            "doc_id", minhash_signature(F.col("sh"), 8, "md5").alias("sig")
+            "doc_id", minhash_signature("sh", 8, "md5").alias("sig")
         ).collect()
     }
 
@@ -453,14 +453,16 @@ def test_salted_join_left_matches_and_right_rejected(spark):
 
 
 def test_word_shingles_short_doc_yields_empty(spark):
-    from vector_db_ingestor_spark.operators.dedup import word_shingles
+    from vector_db_ingestor_spark.operators.dedup import word_shingles_sql
 
     df = spark.createDataFrame(
         [(1, "one two"), (2, ""), (3, "a b c d")], "doc_id INT, text STRING"
     )
     rows = {
         r.doc_id: r.g
-        for r in df.select("doc_id", word_shingles(F.col("text"), 3).alias("g")).collect()
+        for r in df.select(
+            "doc_id", F.expr(word_shingles_sql("text", 3)).alias("g")
+        ).collect()
     }
     # docs with < 3 tokens produce an empty gram set, not an ANSI
     # element_at fault from a descending sequence
@@ -469,25 +471,29 @@ def test_word_shingles_short_doc_yields_empty(spark):
     assert rows[3] == ["a b c", "b c d"]
 
 
-def test_word_shingles_sql_parity(spark):
-    """The SQL-fragment shingle builder (the hot-path plan-build
-    optimization) must produce exactly the Column contract's values —
+def test_word_shingles_sql_matches_python_reference(spark):
+    """The shingle builder against a Python reference (lowercase, trim
+    spaces, split on whitespace runs, n-grams, sorted distinct) —
     including short docs, repeated grams, mixed whitespace, and n=1."""
-    from vector_db_ingestor_spark.operators.dedup import (
-        word_shingles,
-        word_shingles_sql,
-    )
+    import re
 
-    df = spark.createDataFrame(
-        [
-            (1, "one two"),
-            (2, ""),
-            (3, "a b c d"),
-            (4, "  The  QUICK   brown\tfox the quick brown fox  "),
-            (5, "x x x x x"),
-        ],
-        "doc_id INT, text STRING",
-    )
+    from vector_db_ingestor_spark.operators.dedup import word_shingles_sql
+
+    docs = {
+        1: "one two",
+        2: "",
+        3: "a b c d",
+        4: "  The  QUICK   brown\tfox the quick brown fox  ",
+        5: "x x x x x",
+    }
+    df = spark.createDataFrame(list(docs.items()), "doc_id INT, text STRING")
+
+    def reference(text: str, n: int) -> list[str]:
+        toks = re.split(r"\s+", text.lower().strip(" "))
+        if len(toks) < n:
+            return []
+        return sorted({" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)})
+
     for n in (1, 2, 3):
         got = {
             r.doc_id: r.g
@@ -495,33 +501,91 @@ def test_word_shingles_sql_parity(spark):
                 "doc_id", F.expr(word_shingles_sql("`text`", n)).alias("g")
             ).collect()
         }
-        want = {
-            r.doc_id: r.g
-            for r in df.select(
-                "doc_id", word_shingles(F.col("text"), n).alias("g")
-            ).collect()
-        }
-        assert got == want, f"n={n}"
+        assert got == {d: reference(t, n) for d, t in docs.items()}, f"n={n}"
 
 
-def test_rp_lsh_bucket_string_column_parity(spark, sf_dir):
-    """rp_lsh_bucket has two construction paths (SQL-string vs Column);
-    all production callers use the string path — pin the Column path to
-    it so neither can silently drift (ADVICE r15 #1), over real fixture
-    vectors whose hyperplane dots include near-zero values."""
+def _seq_dot(a, b) -> float:
+    """Left-to-right double dot product, the engine's fold order."""
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc += float(x) * float(y)
+    return acc
+
+
+def _round_half_up(x: float, dp: int) -> float:
+    """Spark's round(double, dp): HALF_UP on the shortest decimal repr."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return float(Decimal(repr(x)).quantize(Decimal(1).scaleb(-dp), ROUND_HALF_UP))
+
+
+def test_rp_lsh_bucket_matches_python_sign_bits(spark, sf_dir):
+    """rp_lsh_bucket over real fixture vectors (hyperplane dots include
+    near-zero values) equals the sign bits of left-to-right dots against
+    :func:`_hyperplane`, bit b weighted 2^b."""
     from vector_db_ingestor_spark.constants import EMBEDDING_DIM
-    from vector_db_ingestor_spark.operators.similarity import rp_lsh_bucket
+    from vector_db_ingestor_spark.operators.similarity import _hyperplane, rp_lsh_bucket
     from vector_db_ingestor_spark.tables import load_table
 
+    planes = [_hyperplane(EMBEDDING_DIM, b) for b in range(8)]
     emb = load_table(spark, sf_dir, "embeddings").limit(200)
-    both = emb.select(
-        "vec_id",
-        rp_lsh_bucket("`embedding`", EMBEDDING_DIM, 8).alias("s"),
-        rp_lsh_bucket(F.col("embedding"), EMBEDDING_DIM, 8).alias("c"),
+    rows = emb.select(
+        "vec_id", "embedding", rp_lsh_bucket("`embedding`", EMBEDDING_DIM, 8).alias("s")
     ).collect()
-    assert both, "fixture read produced no rows"
-    for r in both:
-        assert r.s == r.c, f"vec_id={r.vec_id}: {r.s} != {r.c}"
+    assert len(rows) == 200, "fixture read produced too few rows"
+    for r in rows:
+        want = sum(1 << b for b, h in enumerate(planes) if _seq_dot(r.embedding, h) > 0)
+        assert r.s == want, f"vec_id={r.vec_id}: {r.s} != {want}"
+
+
+def test_assign_cid_and_pq_code_match_python_reference(spark, sf_dir):
+    """The IVF assignment is the first-wins argmax of 6dp-rounded
+    cosines to the centroids, and a PQ code the first-wins argmin of the
+    6dp-rounded reduced distance -2 x.c + c.c, both recomputed in Python
+    over 200 fixture vectors; duplicated centroids force exact ties."""
+    import math
+
+    from vector_db_ingestor_spark.constants import EMBEDDING_DIM
+    from vector_db_ingestor_spark.operators.similarity import (
+        _assign_cid,
+        pq_code,
+        pq_codebooks,
+    )
+    from vector_db_ingestor_spark.queries import _ivf_assign_centroids
+    from vector_db_ingestor_spark.tables import load_table
+
+    cents = _ivf_assign_centroids()
+    cents = cents + [cents[3]]  # a later duplicate never wins
+    cbs = pq_codebooks(EMBEDDING_DIM, m=4, ksub=16)
+    cbs[1][5] = list(cbs[1][2])
+    dsub = EMBEDDING_DIM // 4
+    emb = load_table(spark, sf_dir, "embeddings").limit(200)
+    rows = emb.select(
+        "vec_id",
+        "embedding",
+        F.expr(_assign_cid("embedding", cents, round_dp=6)).alias("cid"),
+        *[
+            F.expr(pq_code("embedding", cbs[s], s * dsub)).alias(f"c{s}")
+            for s in range(4)
+        ],
+    ).collect()
+    assert len(rows) == 200, "fixture read produced too few rows"
+    cnorms = [math.sqrt(_seq_dot(c, c)) for c in cents]
+    for r in rows:
+        v = [float(x) for x in r.embedding]
+        nv = math.sqrt(_seq_dot(v, v))
+        sims = [
+            _round_half_up(_seq_dot(v, c) / (nv * cn), 6)
+            for c, cn in zip(cents, cnorms)
+        ]
+        assert r.cid == sims.index(max(sims)), r.vec_id
+        for s in range(4):
+            sub = v[s * dsub : (s + 1) * dsub]
+            dists = [
+                _round_half_up(-2.0 * _seq_dot(sub, c) + float(sum(x * x for x in c)), 6)
+                for c in cbs[s]
+            ]
+            assert r[f"c{s}"] == dists.index(min(dists)), (r.vec_id, s)
 
 
 def test_ngram_jaccard_df_cap_contract(spark, sf_dir):
@@ -798,7 +862,7 @@ def test_minhash_shapes_agree_on_adversarial_corpus(spark):
     from vector_db_ingestor_spark.operators.dedup import (
         minhash_signature,
         minhash_signatures,
-        word_shingles,
+        word_shingles_sql,
     )
 
     texts = [
@@ -819,13 +883,13 @@ def test_minhash_shapes_agree_on_adversarial_corpus(spark):
         [(i, t) for i, t in enumerate(texts)], "doc_id INT, text STRING"
     )
     sh = df.select(
-        "doc_id", word_shingles(F.col("text"), 2).alias("sh")
+        "doc_id", F.expr(word_shingles_sql("text", 2)).alias("sh")
     ).filter(F.size("sh") > 0)
     for family in ("xxhash64", "md5"):
         contract = {
             r.doc_id: list(r.sig)
             for r in sh.select(
-                "doc_id", minhash_signature(F.col("sh"), 8, family).alias("sig")
+                "doc_id", minhash_signature("sh", 8, family).alias("sig")
             ).collect()
         }
         hot = {

@@ -159,7 +159,6 @@ def test_mmr_batch_matches_per_query_single(spark):
         shortlist_with_sims,
         shortlist_with_sims_batch,
     )
-    from vector_db_ingestor_spark.operators.topk import probe_literal
     from vector_db_ingestor_spark.tables import load_table
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
@@ -176,7 +175,7 @@ def test_mmr_batch_matches_per_query_single(spark):
     assert len(got) == 10
     for qid, vec in enumerate(PROBE_BATCH[:2]):
         single = mmr_rerank(
-            shortlist_with_sims(emb, probe_literal(vec), n=10), lam=0.7, k=5
+            shortlist_with_sims(emb, vec, n=10), lam=0.7, k=5
         )
         for r in single.collect():
             assert got[(qid, r["rank"])] == (r["vec_id"], r["mmr"]), (qid, r)
@@ -189,13 +188,13 @@ def test_pq_code_exact_centroid_and_first_wins(spark):
     vec = [float(x) for x in cbs[0][2] + cbs[1][0]]
     df = spark.createDataFrame([(1, vec)], ["vec_id", "embedding"])
     row = df.select(
-        pq_code(F.col("embedding"), cbs[0], 0).alias("c0"),
-        pq_code(F.col("embedding"), cbs[1], 4).alias("c1"),
+        F.expr(pq_code("embedding", cbs[0], 0)).alias("c0"),
+        F.expr(pq_code("embedding", cbs[1], 4)).alias("c1"),
     ).collect()[0]
     assert (row["c0"], row["c1"]) == (2, 0)
     # duplicated centroid -> equal distances -> argmin takes the FIRST
     dup = [cbs[0][2], cbs[0][2], cbs[0][1], cbs[0][0]]
-    row2 = df.select(pq_code(F.col("embedding"), dup, 0).alias("c")).collect()[0]
+    row2 = df.select(F.expr(pq_code("embedding", dup, 0)).alias("c")).collect()[0]
     assert row2["c"] == 0
 
 
@@ -237,8 +236,8 @@ def test_pq_train_recovers_cluster_means(spark):
     # duplicated per-subspace pattern codes identically in both
     codes = df.select(
         "vec_id",
-        pq_code(F.col("embedding"), cbs[0], 0).alias("c0"),
-        pq_code(F.col("embedding"), cbs[1], 4).alias("c1"),
+        F.expr(pq_code("embedding", cbs[0], 0)).alias("c0"),
+        F.expr(pq_code("embedding", cbs[1], 4)).alias("c1"),
     ).collect()
     by_cluster = {True: set(), False: set()}
     for r in codes:

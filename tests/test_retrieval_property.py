@@ -116,7 +116,7 @@ def test_pq_code_matches_reference_argmin(spark, vec, dup_first_two):
     if dup_first_two:
         cb[1] = list(cb[0])  # equal distances -> first-wins tie-break
     df = spark.createDataFrame([(1, [float(x) for x in vec])], "vec_id INT, embedding ARRAY<FLOAT>")
-    got = df.select(pq_code(F.col("embedding"), cb, 0).alias("c")).collect()[0]["c"]
+    got = df.select(F.expr(pq_code("embedding", cb, 0)).alias("c")).collect()[0]["c"]
     # reference replicates the exact reduced-distance algebra: float32
     # storage cast to double, sequential dot, HALF_UP rounding
     v = [float(F_) for F_ in df.collect()[0]["embedding"]]

@@ -21,8 +21,9 @@ def test_filtered_ivf_topk_all_cells_equals_exact_filtered(spark, sf_dir):
     result's id universe with the filter still airtight."""
     cents = _ivf_assign_centroids()
     emb = load_table(spark, sf_dir, "embeddings")
-    vec = F.col("embedding").cast("array<double>")
-    indexed = emb.withColumn("cid", _assign_cid(vec, cents, round_dp=6))
+    indexed = emb.withColumn(
+        "cid", F.expr(_assign_cid("embedding", cents, round_dp=6))
+    )
     pred = F.col("label").isin(1, 3, 5, 7)
 
     got = ivf_topk(

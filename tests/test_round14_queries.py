@@ -345,9 +345,8 @@ def test_escalate_depth_is_minimal_sufficient(spark, sf_dir):
     cents = _ivf_assign_centroids()
     order = ivf_shortlist(cents, PROBE_64, nprobe=len(cents))
     emb = load_table(spark, sf_dir, "embeddings")
-    vec = F.col("embedding").cast("array<double>")
     cand = (
-        emb.withColumn("cid", _assign_cid(vec, cents, round_dp=6))
+        emb.withColumn("cid", F.expr(_assign_cid("embedding", cents, round_dp=6)))
         .filter(F.col("label") == 9)
         .groupBy("cid")
         .count()

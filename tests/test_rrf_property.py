@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from vector_db_ingestor_spark.functions.literals import doubles_sql
 from vector_db_ingestor_spark.functions.vector import cosine_similarity
 from vector_db_ingestor_spark.operators.retrieval import (
     bm25_scores,
@@ -61,9 +62,7 @@ def test_rrf_fused_recall_beats_each_single_channel(spark):
     dense_scored = docs.select(
         "doc_id",
         F.round(
-            cosine_similarity(
-                F.col("embedding"), F.array(*[F.lit(v) for v in PROBE])
-            ),
+            cosine_similarity("embedding", doubles_sql(PROBE)),
             6,
         ).alias("cos"),
     )

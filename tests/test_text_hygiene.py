@@ -83,7 +83,7 @@ def test_repetition_stats_empty_and_whitespace_docs(spark):
 
 
 def test_contamination_short_docs_no_crash(spark):
-    # docs shorter than the n-gram width have no grams (word_shingles
+    # docs shorter than the n-gram width have no grams (word_shingles_sql
     # guard) and must neither crash under ANSI mode nor contaminate
     corpus = spark.createDataFrame(
         [(1, "tiny"), (2, "benchmark words here repeated words here")],

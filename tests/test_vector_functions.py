@@ -6,10 +6,10 @@ from pyspark.sql import functions as F
 
 from vector_db_ingestor_spark.functions.vector import (
     cosine_similarity,
-    dot,
-    l2_distance,
-    l2_norm,
-    normalize,
+    dot_sql,
+    l2_distance_sql,
+    l2_norm_sql,
+    normalize_sql,
 )
 
 
@@ -26,7 +26,7 @@ def vec_df(spark):
 
 
 def test_dot(vec_df):
-    rows = {r.id: r.d for r in vec_df.select("id", dot("a", "b").alias("d")).collect()}
+    rows = {r.id: r.d for r in vec_df.select("id", F.expr(dot_sql("a", "b")).alias("d")).collect()}
     assert rows[1] == pytest.approx(32.0)
     assert rows[2] == 0.0
     assert rows[3] == pytest.approx(4.0)
@@ -46,7 +46,9 @@ def test_l2(vec_df):
     rows = {
         r.id: (r.n, r.d)
         for r in vec_df.select(
-            "id", l2_norm("a").alias("n"), l2_distance("a", "b").alias("d")
+            "id",
+            F.expr(l2_norm_sql("a")).alias("n"),
+            F.expr(l2_distance_sql("a", "b")).alias("d"),
         ).collect()
     }
     assert rows[1][0] == pytest.approx(math.sqrt(14))
@@ -54,7 +56,7 @@ def test_l2(vec_df):
 
 
 def test_normalize(vec_df):
-    out = vec_df.select("id", normalize("a").alias("u")).collect()
+    out = vec_df.select("id", F.expr(normalize_sql("a")).alias("u")).collect()
     for r in out:
         assert np.linalg.norm(r.u) == pytest.approx(1.0)
 
@@ -62,7 +64,7 @@ def test_normalize(vec_df):
 def test_float_arrays_upcast(spark):
     # fixtures store array<float>; arithmetic must happen in double
     df = spark.createDataFrame([(1, [0.1, 0.2])], "id INT, v ARRAY<FLOAT>")
-    (out,) = df.select(dot("v", "v").alias("d")).collect()
+    (out,) = df.select(F.expr(dot_sql("v", "v")).alias("d")).collect()
     f = np.float64(np.float32(0.1)) ** 2 + np.float64(np.float32(0.2)) ** 2
     assert out.d == pytest.approx(float(f), rel=1e-12)
 
@@ -214,11 +216,10 @@ def test_ivf_assign_rounding_is_production_faithful(spark):
 
     cents = _ivf_assign_centroids()
     emb = load_table(spark, "/root/testdata/sf0.01", "embeddings")
-    vec = F.col("embedding").cast("array<double>")
     diff = (
         emb.select(
-            _assign_cid(vec, cents).alias("exact"),
-            _assign_cid(vec, cents, round_dp=6).alias("rounded"),
+            F.expr(_assign_cid("embedding", cents)).alias("exact"),
+            F.expr(_assign_cid("embedding", cents, round_dp=6)).alias("rounded"),
         )
         .filter(F.col("exact") != F.col("rounded"))
         .count()
@@ -492,7 +493,7 @@ def test_ivfpq_residual_encoding_beats_raw_pq_when_clusters_exceed_codewords(spa
     vec = F.col("embedding").cast("array<double>")
     cents_lit = F.lit([[float(x) for x in c] for c in cents])
     assigned = emb.select(
-        "vec_id", vec.alias("v"), _assign_cid(vec, cents).alias("cid")
+        "vec_id", vec.alias("v"), F.expr(_assign_cid("embedding", cents)).alias("cid")
     )
     resid_df = assigned.select(
         "vec_id",
@@ -762,6 +763,40 @@ def test_ivfpq_append_frozen_models(spark, sf_dir, tmp_path):
 
     with pytest.raises(ValueError, match="_INDEX_SUCCESS"):
         ivfpq_append(new, str(tmp_path / "nonexistent"))
+
+
+def test_ivfpq_train_write_assigns_like_the_written_codes(spark, tmp_path, monkeypatch):
+    """One assignment per IVF-PQ index: a vector whose two best centroid
+    cosines tie after 6dp rounding (full precision prefers cid 1, the
+    rounded first-wins argmax cid 0) lands in the same cell in the
+    codebook-training residuals and in the written codes."""
+    import vector_db_ingestor_spark.operators.similarity as sim
+
+    cents = [[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0]]
+    cbs = sim.pq_codebooks(4, m=2, ksub=2)
+    emb = spark.createDataFrame(
+        [(0, [1.0, 1.0 + 4e-7, 0.0, 0.0]), (1, [1.0, 0.2, 0.0, 0.0]),
+         (2, [0.1, 1.0, 0.0, 0.0])],
+        "vec_id BIGINT, embedding ARRAY<DOUBLE>",
+    )
+    tie = emb.filter("vec_id = 0").select(
+        F.expr(sim._assign_cid("embedding", cents)).alias("exact"),
+        F.expr(sim._assign_cid("embedding", cents, round_dp=6)).alias("rounded"),
+    ).first()
+    assert (tie.exact, tie.rounded) == (1, 0)
+
+    trained_on = {}
+
+    def fake_pq_train(resid, dim, m, ksub, iters, id_col, vec_col):
+        trained_on.update({r[id_col]: r["cid"] for r in resid.collect()})
+        return cbs
+
+    monkeypatch.setattr(sim, "ivf_train", lambda *a, **k: cents)
+    monkeypatch.setattr(sim, "pq_train", fake_pq_train)
+    path = str(tmp_path / "idx")
+    sim.ivfpq_train_write(emb, path, dim=4, n_centroids=2, m=2, ksub=2)
+    written = {r.vec_id: r.cid for r in spark.read.parquet(path).collect()}
+    assert trained_on == written == {0: 0, 1: 0, 2: 1}
 
 
 def test_ivfpq_batch_indexed_matches_inline_and_prunes(spark, sf_dir, tmp_path):

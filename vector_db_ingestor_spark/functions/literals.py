@@ -1,21 +1,17 @@
-"""Fast Column literals for large numeric constants.
+"""Numeric array literals as SQL fragments.
 
-``F.lit(list_of_floats)`` (and ``F.array(*[F.lit(x) ...])``) issues one
-py4j round trip PER ELEMENT, so the model literals this engine embeds in
-its plans — 16 x 64 centroid grids, PQ codebooks, ADC tables, hyperplane
-banks — cost hundreds of milliseconds of driver time per plan build
-(measured: 95 ms for one 64-float array, 845 ms for a 16 x 64 matrix).
-Building the same literal as ONE ``F.expr`` string is ~100-700x cheaper
-(1.1 ms either way) and bit-identical: ``repr(float)`` is the shortest
-round-tripping decimal, and Spark's SQL lexer parses the ``D`` suffix
-with ``java.lang.Double.parseDouble`` — the exact inverse.  Parity
+The model constants this engine embeds in its plans — centroid grids,
+PQ codebooks, ADC tables, hyperplane banks — are written as SQL text
+(:func:`doubles_sql`, :func:`double_matrix_sql`) and compose into the
+vector fragments of :mod:`vector_db_ingestor_spark.functions.vector`;
+the Column forms are one ``F.expr`` over the same text.  One parse per
+literal instead of one py4j round trip PER ELEMENT (``F.lit`` of a
+16 x 64 matrix cost 845 ms of driver time, the string 1.1 ms), and
+bit-identical: ``repr(float)`` is the shortest round-tripping decimal,
+and Spark's SQL lexer parses the ``D`` suffix with
+``java.lang.Double.parseDouble`` — the exact inverse.  Parity
 (including -0.0, denormals, and 1e308-scale values) is pinned in
 tests/test_operators.py.
-
-Driver-side plan-construction cost is real at every scale — it is pure
-single-threaded time before any task can launch (optimization guide
-§7.3) — and the bench pays it once per rep because each rep rebuilds
-the plan.
 """
 
 from __future__ import annotations
@@ -53,19 +49,21 @@ def lit_doubles(vals: Sequence[float]) -> Column:
     return F.expr(doubles_sql(vals))
 
 
-def lit_double_matrix(rows: Sequence[Sequence[float]]) -> Column:
-    """``array<array<double>>`` literal in one py4j call.
+def double_matrix_sql(rows: Sequence[Sequence[float]]) -> str:
+    """``array<array<double>>`` literal as a SQL fragment, one
+    :func:`doubles_sql` per row.
 
     An empty matrix is a typed empty literal (see :func:`doubles_sql`);
     an empty INNER row stays a ``ValueError`` — a mixed-shape matrix
     has no sensible meaning for the centroid/codebook grids this
     builds, and every caller derives rows from a fixed ``dim``."""
     if len(rows) == 0:
-        return F.expr("CAST(array() AS ARRAY<ARRAY<DOUBLE>>)")
+        return "CAST(array() AS ARRAY<ARRAY<DOUBLE>>)"
     if any(len(r) == 0 for r in rows):
-        raise ValueError("lit_double_matrix: empty inner row")
-    return F.expr(
-        "array("
-        + ",".join("array(" + ",".join(_d(v) for v in r) + ")" for r in rows)
-        + ")"
-    )
+        raise ValueError("double_matrix_sql: empty inner row")
+    return "array(" + ",".join(doubles_sql(r) for r in rows) + ")"
+
+
+def lit_double_matrix(rows: Sequence[Sequence[float]]) -> Column:
+    """``array<array<double>>`` literal in one py4j call."""
+    return F.expr(double_matrix_sql(rows))

@@ -1,4 +1,4 @@
-"""Vector distance / similarity as pure Column expressions.
+"""Vector distance / similarity, each formula written once as SQL.
 
 The reference delegates similarity to ChromaDB's HNSW index with the
 default ``l2`` space (collection creation at
@@ -6,9 +6,17 @@ default ``l2`` space (collection creation at
 embeddings (``src/PDFToChromaIngestorBgeEmbedding.py:45``) which makes
 L2 rank-equivalent to cosine.  Here the same math is expressed as
 built-in higher-order-function expressions (``zip_with`` +
-``aggregate``), so scoring stays JVM-side inside whole-stage codegen —
-no Python round trip — and is dimension-agnostic (the fixtures are 64-d,
-the reference models 384-d).
+``aggregate``), so scoring stays JVM-side — no Python round trip — and
+is dimension-agnostic (the fixtures are 64-d, the reference models
+384-d).
+
+Each builder returns a SQL fragment over SQL sub-expressions (column
+names, literals such as :func:`~vector_db_ingestor_spark.functions.
+literals.doubles_sql`, or lambda variables of an enclosing fragment),
+so larger expressions — the IVF assignment, PQ codes, LSH buckets —
+compose from the same text.  A caller that needs a Column wraps the
+fragment in ONE ``F.expr``: one parse instead of a py4j round trip per
+lambda and per node (tens of ms of driver time per plan build).
 
 All arithmetic is done in double precision regardless of the stored
 array element type (the fixtures store ``array<float>``): inputs are
@@ -22,70 +30,50 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def _as_double(v: Column | str) -> Column:
-    c = F.col(v) if isinstance(v, str) else v
-    return c.cast("array<double>")
-
-
-def dot(a: Column | str, b: Column | str) -> Column:
-    """Dot product of two array columns (double accumulation)."""
-    return F.aggregate(
-        F.zip_with(_as_double(a), _as_double(b), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+def _double(a: str) -> str:
+    return f"CAST({a} AS ARRAY<DOUBLE>)"
 
 
 def dot_sql(a: str, b: str) -> str:
-    """:func:`dot` as a SQL fragment over SQL sub-expressions.
-
-    Parses to the identical ArrayAggregate/ZipWith tree (same casts,
-    same 0.0 double seed, same left-to-right fold), but building the
-    expression costs ONE py4j round trip via ``F.expr`` instead of
-    ~26 ms of per-lambda py4j/py-inspection work — plan-construction
-    time the bench pays on every invocation (optimization guide §7.3).
-    """
+    """Dot product of two arrays (double accumulation, left-to-right)."""
     return (
-        f"aggregate(zip_with(CAST({a} AS ARRAY<DOUBLE>),"
-        f" CAST({b} AS ARRAY<DOUBLE>), (x, y) -> x * y),"
+        f"aggregate(zip_with({_double(a)}, {_double(b)}, (x, y) -> x * y),"
         f" 0.0D, (acc, v) -> acc + v)"
     )
 
 
 def l2_norm_sql(a: str) -> str:
-    """:func:`l2_norm` as a SQL fragment (see :func:`dot_sql`)."""
     return f"sqrt({dot_sql(a, a)})"
 
 
-def l2_norm(a: Column | str) -> Column:
-    return F.sqrt(dot(a, a))
-
-
-def l2_distance(a: Column | str, b: Column | str) -> Column:
-    diff = F.zip_with(_as_double(a), _as_double(b), lambda x, y: x - y)
-    return F.sqrt(
-        F.aggregate(diff, F.lit(0.0), lambda acc, v: acc + v * v)
+def l2_distance_sql(a: str, b: str) -> str:
+    return (
+        f"sqrt(aggregate(zip_with({_double(a)}, {_double(b)}, (x, y) -> x - y),"
+        f" 0.0D, (acc, v) -> acc + v * v))"
     )
 
 
-def cosine_similarity(a: Column | str, b: Column | str) -> Column:
+def cosine_sql(a: str, b: str) -> str:
     """cos(a, b) = a.b / (|a| |b|); matches DuckDB list_cosine_similarity."""
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
+    return f"({dot_sql(a, b)} / ({l2_norm_sql(a)} * {l2_norm_sql(b)}))"
 
 
-def normalize(a: Column | str) -> Column:
-    """Unit-normalize an array column (reference BGE
-    ``normalize_embeddings=True``, src/PDFToChromaIngestorBgeEmbedding.py:45).
+def normalize_sql(a: str) -> str:
+    """Unit-normalize an array (reference BGE ``normalize_embeddings=True``,
+    src/PDFToChromaIngestorBgeEmbedding.py:45).
 
     The norm binds once per row via a singleton-struct transform:
     referencing it directly from the per-element lambda lets
     CollapseProject inline the 64-element norm aggregate into the
     lambda body, re-running it PER ELEMENT (and, through collapsed
-    projections, per downstream consumer) — the r15 `_assign_cid`
-    no-CSE-in-HOF finding.  Identical divisions, identical values."""
-    arr = _as_double(a)
-    bound = F.transform(
-        F.array(F.struct(arr.alias("v"), l2_norm(arr).alias("n"))),
-        lambda s: F.transform(s["v"], lambda x: x / s["n"]),
+    projections, per downstream consumer).  Identical divisions,
+    identical values."""
+    return (
+        f"element_at(transform(array(struct({_double(a)} AS v,"
+        f" {l2_norm_sql(a)} AS n)), s -> transform(s.v, x -> x / s.n)), 1)"
     )
-    return F.element_at(bound, 1)
+
+
+def cosine_similarity(a: str, b: str) -> Column:
+    """:func:`cosine_sql` as a Column."""
+    return F.expr(cosine_sql(a, b))

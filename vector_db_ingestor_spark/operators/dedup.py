@@ -32,8 +32,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from vector_db_ingestor_spark.functions.vector import cosine_similarity
-
 
 # ---------------------------------------------------------------- exact
 
@@ -57,15 +55,20 @@ def dedup_exact(
 # ------------------------------------------------------------- shingles
 
 def word_shingles_sql(text_sql: str, n: int = 3) -> str:
-    """:func:`word_shingles` as a SQL fragment over a SQL
-    sub-expression (usually a quoted column name).
+    """Sorted distinct word n-grams of lowercased whitespace tokens, as
+    a SQL fragment over a SQL sub-expression (usually a quoted column
+    name).
 
-    Parses to the same split/ngram tree with the same values, but
-    building the expression costs ONE ``F.expr`` parse instead of
-    ~0.15-0.4 s of per-lambda py4j construction — plan-build time every
-    shingle-consuming query pays per invocation (optimization guide
-    §7.3; the ``dot_sql`` pattern).  Value parity with the Column form
-    is pinned in tests/test_operators.py.
+    The token array is bound once per row through a lambda variable
+    (``transform`` over a singleton array): referencing the raw
+    ``split(...)`` expression inside the per-gram lambda makes Catalyst
+    re-evaluate the regex split for every gram — measured ~5x slower on
+    the documents table.  With the binding, shingling is one split +
+    O(words * n) array work per row, all JVM-side.  Grams are
+    ``concat_ws`` over n ``element_at`` lookups (no per-gram array;
+    slice+array_join was ~2x slower).  Docs with fewer than n tokens
+    yield an empty set: ``sequence(0, size-n)`` would otherwise descend
+    through negative indices and fault ``element_at`` under ANSI mode.
     """
     toks = f"split(lower(trim({text_sql})), '\\\\s+')"
     if n == 1:
@@ -82,44 +85,6 @@ def word_shingles_sql(text_sql: str, n: int = 3) -> str:
         f"CASE WHEN size(t) >= {n} THEN {grams} "
         f"ELSE CAST(array() AS ARRAY<STRING>) END), 1)"
     )
-
-
-def word_shingles(text_col: Column, n: int = 3) -> Column:
-    """Sorted distinct word n-grams of lowercased whitespace tokens.
-
-    The token array is bound once per row through a lambda variable
-    (``transform`` over a singleton array): referencing the raw
-    ``split(...)`` expression inside the per-gram lambda makes Catalyst
-    re-evaluate the regex split for every gram — measured ~5x slower on
-    the documents table.  With the binding, shingling is one split +
-    O(words * n) array work per row, all codegen'd JVM-side.
-    """
-    toks = F.split(F.lower(F.trim(text_col)), r"\s+")
-    if n == 1:
-        return F.array_sort(F.array_distinct(toks))
-
-    def grams_of(t: Column) -> Column:
-        idx = F.sequence(F.lit(0), F.size(t) - n)
-        # concat_ws over n element_at lookups: no per-gram array
-        # allocation (slice+array_join was ~2x slower on the bench)
-        grams = F.array_sort(
-            F.array_distinct(
-                F.transform(
-                    idx,
-                    lambda i: F.concat_ws(
-                        " ", *[F.element_at(t, i + j + 1) for j in range(n)]
-                    ),
-                )
-            )
-        )
-        # docs with < n tokens: sequence(0, size-n) would descend through
-        # negative indices and element_at would fault under ANSI mode —
-        # such docs have no n-gram, so yield an empty set instead.
-        return F.when(F.size(t) >= n, grams).otherwise(
-            F.array().cast("array<string>")
-        )
-
-    return F.element_at(F.transform(F.array(toks), grams_of), 1)
 
 
 # ---------------------------------------------------------- minhash LSH
@@ -146,9 +111,10 @@ def minhash_perm_consts(num_perm: int) -> list[tuple[int, int]]:
 
 
 def minhash_signature(
-    shingles: Column, num_perm: int = 64, hash_family: str = "xxhash64"
+    shingles: str, num_perm: int = 64, hash_family: str = "xxhash64"
 ) -> Column:
-    """num_perm minhash values, all JVM-side.
+    """num_perm minhash values of a gram-array column (name or SQL
+    fragment), all JVM-side.
 
     Classic K-hash construction with the standard one-string-hash
     optimization: each shingle string is hashed ONCE, and the K
@@ -157,54 +123,31 @@ def minhash_signature(
     stays uniform and deterministic.  The base-hash array is bound
     through a lambda variable so it is computed once, not once per seed.
 
-    This Column-level form is the portable CONTRACT (tests and the
-    DuckDB oracle mirror it term-for-term).  The hot path,
+    This per-row form is the portable CONTRACT (tests and the DuckDB
+    oracle mirror it term-for-term).  The hot path,
     :func:`minhash_candidates`, computes the identical signature as
-    explode + K MIN aggregates instead — one hash-agg pass rather than
-    K array walks per doc — and the two are asserted equal in
-    tests/test_operators.py.
-
-    ``hash_family``:
-
-    * ``"xxhash64"`` (default, hot path) — min(xxhash64(xxhash64(s),
-      seed)) per seed, 8-byte long minima.
-    * ``"md5"`` (portable/verification path) — each gram hashes ONCE to
-      a 32-bit base int (first 8 hex chars of its md5), and the K
-      functions are affine permutations (a_s*x + b_s) mod P over that
-      base (:func:`minhash_perm_consts`).  md5 and 64-bit integer
-      arithmetic render identically in every engine, so an external
-      engine (the DuckDB oracle, an auditor) re-derives the signature —
-      and therefore the LSH candidate set — bit-for-bit, at the same
-      cost class as the xxhash64 family (one digest per gram + K
-      mul/add/mod passes).
+    explode + K MIN aggregates instead (:func:`minhash_signatures`) —
+    one hash-agg pass rather than K array walks per doc.  Both shapes
+    build from the one family definition, :func:`_minhash_family_sql`,
+    and are asserted equal in tests/test_operators.py.
     """
-    base_of, perms = _minhash_family(num_perm, hash_family)
-
-    def sig_of(h: Column) -> Column:
-        # single-arg wrapper per perm: Spark reads lambda arity, and
-        # the family's closure-bound perms are plain Python callables
-        return F.array(
-            *[
-                F.array_min(F.transform(h, (lambda p: lambda x: p(x))(p)))
-                for p in perms
-            ]
-        )
-
-    # single-arg wrapper: F.xxhash64 is *args and HOFs reject it raw
-    base = F.transform(shingles, lambda g: base_of(g))
-    return F.element_at(F.transform(F.array(base), sig_of), 1)
+    base_of, perms = _minhash_family_sql(num_perm, hash_family)
+    sig = "array(" + ",".join(
+        f"array_min(transform(h, x -> {p('x')}))" for p in perms
+    ) + ")"
+    return F.expr(
+        f"element_at(transform(array(transform({shingles}, g -> {base_of('g')})),"
+        f" h -> {sig}), 1)"
+    )
 
 
-def _minhash_family(num_perm: int, hash_family: str):
-    """The ONE definition of a minhash family: ``(base_of, perms)``
-    where ``base_of(gram_col)`` is the per-gram base hash and
-    ``perms[s](base_col)`` the s-th permutation.  Both execution shapes
-    — the Column-level :func:`minhash_signature` contract and the
-    explode-agg hot path :func:`minhash_signatures` — build their
-    expressions from here, so the two cannot drift.
+def _minhash_family_sql(num_perm: int, hash_family: str):
+    """The ONE definition of a minhash family, as SQL-fragment
+    builders: ``(base_of, perms)`` where ``base_of(gram_sql)`` is the
+    per-gram base hash and ``perms[s](base_sql)`` the s-th permutation.
 
-    * ``"xxhash64"`` (default) — base xxhash64(s); perm s re-hashes
-      with seed s.
+    * ``"xxhash64"`` (default, hot path) — base xxhash64(s); perm s
+      re-hashes with seed s; 8-byte long minima.
     * ``"md5"`` (portable/verification) — base is the first 8 md5 hex
       chars as a 32-bit int; perms are affine (a*x + b) mod P
       (:func:`minhash_perm_consts`) — pure BIGINT arithmetic both
@@ -212,30 +155,6 @@ def _minhash_family(num_perm: int, hash_family: str):
       2^32, consts < 2^31), so an external engine re-derives the
       signature — and therefore the LSH candidate set — bit-for-bit.
     """
-    if hash_family == "md5":
-        base_of = lambda g: F.conv(  # noqa: E731
-            F.substring(F.md5(g), 1, 8), 16, 10
-        ).cast("long")
-        perms = [
-            # closure factory via defaults: called directly (never
-            # handed to a HOF), so the extra-arg arity is harmless
-            (lambda x, a=a, b=b: (x * F.lit(a) + F.lit(b)) % F.lit(MINHASH_P))
-            for a, b in minhash_perm_consts(num_perm)
-        ]
-    else:
-        base_of = F.xxhash64
-        perms = [(lambda x, s=s: F.xxhash64(x, F.lit(s))) for s in range(num_perm)]
-    return base_of, perms
-
-
-def _minhash_family_sql(num_perm: int, hash_family: str):
-    """SQL-fragment twin of :func:`_minhash_family` for the hot path:
-    ``(base_sql(gram_sql), [perm_sql(base_sql), ...])`` built from the
-    SAME constants (:func:`minhash_perm_consts`, ``MINHASH_P``) and the
-    same formulas, so the families cannot drift — and the two execution
-    shapes are additionally asserted equal in tests/test_operators.py.
-    One ``F.expr`` parse replaces ~8 py4j calls per permutation
-    (~0.5s of plan build at num_perm=64, paid per bench rep)."""
     if hash_family == "md5":
         base_of = lambda g: (  # noqa: E731
             f"CAST(conv(substring(md5({g}), 1, 8), 16, 10) AS BIGINT)"
@@ -260,10 +179,9 @@ def minhash_signatures(
     """(id, sig) signatures via explode + K MIN aggregates — the hot
     path :func:`minhash_candidates` uses (2.2x faster than K per-row
     HOF array walks; see SCALING.md).  Same family definition as
-    :func:`minhash_signature` (:func:`_minhash_family_sql` mirrors
-    :func:`_minhash_family` term-for-term), and the two shapes are
-    asserted equal in tests/test_operators.py.  Rows with empty gram
-    arrays produce no signature."""
+    :func:`minhash_signature`, and the two shapes are asserted equal
+    in tests/test_operators.py.  Rows with empty gram arrays produce
+    no signature."""
     base_of, perms = _minhash_family_sql(num_perm, hash_family)
     exploded = sh_df.select(id_col, F.explode(sh_col).alias("__g")).select(
         id_col, F.expr(base_of("__g")).alias("__bh")
@@ -310,15 +228,18 @@ def minhash_candidates(
     ``shingled`` OVERRIDES ``df``/``text_col``/``shingle_n`` (ADVICE
     r15 #4): when provided it must carry exactly ``(mh_id, sh)`` —
     the id column renamed to ``mh_id`` and ``sh`` built by
-    :func:`word_shingles` / :func:`word_shingles_sql` with the SAME
+    :func:`word_shingles_sql` with the SAME
     ``shingle_n`` the caller would otherwise pass; the other three
     arguments are ignored.  The only intended caller is
     :func:`minhash_verified_pairs`'s shared-scan path, which persists
     one shingle table and feeds both the signature pipeline and the
     exact verify.
     """
+    from pyspark import StorageLevel
+
+    from vector_db_ingestor_spark.caching import register
+
     rows_per_band = num_perm // bands
-    cached_input = shingled is not None
     if shingled is None:
         # materialize shingles in their own projection: inlining the
         # shingle expression into all num_perm minhash expressions
@@ -351,10 +272,6 @@ def minhash_candidates(
         # can answer the estimate) and joined back onto the DEDUPED
         # candidate pairs, so each unique pair folds its agreement
         # exactly once.  Same signatures, same pairs, same est_jaccard.
-        from pyspark import StorageLevel
-
-        from vector_db_ingestor_spark.caching import register
-
         sig = register(sig.persist(StorageLevel.MEMORY_AND_DISK))
     if hash_family == "md5":
         # band key as md5 of the pipe-joined decimal minima: reproducible
@@ -373,30 +290,17 @@ def minhash_candidates(
             F.expr("array(" + ",".join(band_of(b) for b in range(bands)) + ")")
         ).alias("band_idx", "band_hash"),
     )
-    # shared exchange: both self-join sides reuse one shuffle stage, so
-    # shingling + signatures compute once over the corpus.  The
-    # shuffle_hash hint below keeps it that way: letting AQE broadcast
-    # one side wraps that side's exchange in a BroadcastExchange,
-    # breaks ReusedExchange, and re-runs the whole signature pipeline
-    # twice (observed at audit sf) — and at real scale the banded
-    # corpus is never broadcast-able anyway.
-    banded = banded.repartition("band_idx", "band_hash")
-    if cached_input or with_estimate:
-        # when the signature pipeline hangs off a persisted table (the
-        # minhash_verified_pairs shared-scan path, r15; the persisted
-        # sig table on the estimate path, r16), ReusedExchange no
-        # longer matches the two self-join subtrees (canonicalized
-        # InMemoryTableScan instances differ), so the signature
-        # pipeline would re-run per side — persist the banded table
-        # instead (bands x (id, band key) per doc, the smallest
-        # corpus-derived relation in this plan); both sides read the
-        # cache and inherit its hash partitioning, so the signature
-        # computes once and the join adds no new exchange.
-        from pyspark import StorageLevel
-
-        from vector_db_ingestor_spark.caching import register
-
-        banded = register(banded.persist(StorageLevel.MEMORY_AND_DISK))
+    # persist the banded table (bands x (id, band key) per doc, the
+    # smallest corpus-derived relation in this plan) so the signature
+    # pipeline computes once: both self-join sides read the cache.
+    # Each side then shuffles the cached rows on (band_idx, band_hash)
+    # for the join; a persisted table cannot feed a ReusedExchange
+    # (canonicalized InMemoryTableScan instances differ), and a
+    # repartition before the persist would only add a third shuffle
+    # of the same rows.  The shuffle_hash hint keeps AQE from
+    # broadcasting one side — at real scale the banded corpus is never
+    # broadcast-able anyway.
+    banded = register(banded.persist(StorageLevel.MEMORY_AND_DISK))
     left = banded.select(
         F.col("mh_id").alias("id_a"),
         "band_idx",
@@ -756,7 +660,7 @@ def ngram_jaccard_pairs(
         # than an unbounded shuffle later.  The guard aggregates the
         # SAME cached token stream the join consumes, so shingling runs
         # once per corpus, not once for the guard and again for the
-        # join.  Grams are distinct per doc (word_shingles dedups), so
+        # join.  Grams are distinct per doc (word_shingles_sql dedups), so
         # count(*) == document frequency — per xxhash64(gram) bucket:
         # a 64-bit collision between distinct grams would merge their
         # dfs and could trip the guard spuriously (never miss a real
@@ -1013,35 +917,26 @@ def embedding_near_dups(
     Higher-order functions are interpreted, not codegen'd, so per-pair
     expression count is the dominant constant.
 
-    r16: the norm binds ONCE per row via a singleton-struct transform
-    (the r15 `_assign_cid` pattern).  Materializing it as a separate
-    column did NOT protect it — CollapseProject inlines a single-use
-    alias into the consuming lambda, so `x -> x / __nrm` re-ran the
-    64-element norm aggregate PER ELEMENT, and the collapsed
-    normalize expression travelled into the join where it re-ran per
-    CANDIDATE side (measured 2.26 s -> 0.91 s noop median for the
-    whole pipeline at sf0.1 with the struct binding; identical pair
-    set and cosines).
+    The norm binds ONCE per row (:func:`~vector_db_ingestor_spark.
+    functions.vector.normalize_sql`'s singleton-struct transform);
+    a separate norm column would not protect it — CollapseProject
+    inlines a single-use alias into the consuming lambda, re-running
+    the 64-element norm aggregate PER ELEMENT and per CANDIDATE side
+    (measured 2.26 s -> 0.91 s noop median for the whole pipeline at
+    sf0.1 with the struct binding; identical pair set and cosines).
     """
-    from vector_db_ingestor_spark.functions.vector import dot_sql, l2_norm_sql
+    from vector_db_ingestor_spark.functions.vector import dot_sql, normalize_sql
 
-    # every kernel here builds as ONE F.expr string (identical parsed
-    # trees; see dot_sql) — the Column-composed form cost ~1.2s of py4j
-    # plan construction per invocation, ~1/3 of this key's bench time
     base = embeddings.select(
         F.col(id_col),
         F.col(vec_col).cast("array<double>").alias("__v"),
         *( [F.col(block_col)] if block_col is not None else [] ),
     )
-    nv_sql = (
-        f"element_at(transform(array(struct(__v AS v, {l2_norm_sql('__v')} AS n)),"
-        " s -> transform(s.v, x -> x / s.n)), 1)"
-    )
     normed = base.select(
         id_col,
         "__v",
         *( [block_col] if block_col is not None else [] ),
-        F.expr(nv_sql).alias("__nv"),
+        F.expr(normalize_sql("__v")).alias("__nv"),
     )
     cos = F.round(F.expr(dot_sql("vec_a", "vec_b")), 6)
     if block_col is not None:

@@ -30,10 +30,11 @@ that suite Spark-first:
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from vector_db_ingestor_spark.functions.literals import doubles_sql
 from vector_db_ingestor_spark.functions.vector import cosine_similarity
 
 # ------------------------------------------------------------- BM25
@@ -150,7 +151,7 @@ def rrf_fuse(
 
 def shortlist_with_sims(
     embeddings: DataFrame,
-    probe_lit: Column,
+    probe: list[float],
     n: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -171,7 +172,9 @@ def shortlist_with_sims(
     scored = embeddings.select(
         F.col(id_col).alias("sid"),
         F.col(vec_col).alias("svec"),
-        F.round(cosine_similarity(F.col(vec_col), probe_lit), round_dp).alias("rel"),
+        F.round(
+            cosine_similarity(f"`{vec_col}`", doubles_sql(probe)), round_dp
+        ).alias("rel"),
     )
     # materialize the n-row shortlist before the self-join: TakeOrdered
     # is not an Exchange, so without this both join sides re-scan and
@@ -198,7 +201,7 @@ def shortlist_with_sims(
     pairs = (
         a.join(bside, F.col("id_a") != F.col("id_b"), "left")
         .withColumn(
-            "sim", F.round(cosine_similarity(F.col("vec_a"), F.col("vec_b")), round_dp)
+            "sim", F.round(cosine_similarity("vec_a", "vec_b"), round_dp)
         )
         .select("id_a", "rel_a", "id_b", "sim")
     )
@@ -303,21 +306,12 @@ def shortlist_with_sims_batch(
     only B x n rows.  Output adds ``probe_id_col`` to the single-probe
     pair schema.
     """
-    from vector_db_ingestor_spark.functions.vector import dot_sql, l2_norm_sql
-
-    # SQL-fragment cosine (identical tree to cosine_similarity, one
-    # F.expr parse instead of ~6 per-lambda py4j builds — guide §7.3)
-    def cos_sql(a: str, b: str) -> str:
-        return (
-            f"{dot_sql(a, b)} / ({l2_norm_sql(a)} * {l2_norm_sql(b)})"
-        )
-
     scored = embeddings.crossJoin(F.broadcast(probes)).select(
         F.col(probe_id_col).alias("qid"),
         F.col(id_col).alias("sid"),
         F.col(vec_col).alias("svec"),
         F.round(
-            F.expr(cos_sql(f"`{vec_col}`", f"`{probe_vec_col}`")), round_dp
+            cosine_similarity(f"`{vec_col}`", f"`{probe_vec_col}`"), round_dp
         ).alias("rel"),
     )
     w = Window.partitionBy("qid").orderBy(F.col("rel").desc(), F.col("sid").asc())
@@ -350,7 +344,7 @@ def shortlist_with_sims_batch(
             (F.col("qid") == F.col("qid_b")) & (F.col("id_a") != F.col("id_b")),
             "left",
         )
-        .withColumn("sim", F.round(F.expr(cos_sql("vec_a", "vec_b")), round_dp))
+        .withColumn("sim", F.round(cosine_similarity("vec_a", "vec_b"), round_dp))
         .select(F.col("qid").alias(probe_id_col), "id_a", "rel_a", "id_b", "sim")
     )
 

@@ -42,10 +42,12 @@ from pyspark.sql import functions as F
 
 from vector_db_ingestor_spark.functions.vector import (
     cosine_similarity,
-    dot,
-    l2_norm,
+    dot_sql,
+    l2_norm_sql,
 )
 from vector_db_ingestor_spark.functions.literals import (
+    double_matrix_sql,
+    doubles_sql,
     lit_double_matrix,
     lit_doubles,
 )
@@ -93,32 +95,17 @@ def auto_n_bits(n_rows: int, target_bucket: int = 64, max_bits: int = 24) -> int
     return max(2, min(max_bits, bits))
 
 
-def rp_lsh_bucket(vec: Column | str, dim: int, n_bits: int = 8) -> Column:
-    """Random-hyperplane (SimHash-for-cosine) bucket id in [0, 2^n_bits).
-
-    Pass ``vec`` as a column NAME (or SQL fragment) where possible: the
-    whole bucket expression then builds as ONE ``F.expr`` string —
-    n_bits x ~30 ms of per-dot py4j lambda construction becomes ~1 ms —
-    parsing to the identical int-sum-of-sign-bits tree the Column path
-    produces.
-    """
-    from vector_db_ingestor_spark.functions.literals import doubles_sql
-    from vector_db_ingestor_spark.functions.vector import dot_sql
-
-    if isinstance(vec, str):
-        terms = ["0"]
-        for b in range(n_bits):
-            h = doubles_sql(_hyperplane(dim, b))
-            terms.append(f"(CAST(({dot_sql(vec, h)}) > 0 AS INT) * {1 << b})")
-        return F.expr(" + ".join(terms))
-    bucket = F.lit(0)
+def rp_lsh_bucket(vec: str, dim: int, n_bits: int = 8) -> Column:
+    """Random-hyperplane (SimHash-for-cosine) bucket id in [0, 2^n_bits):
+    the int sum of ``sign(dot(vec, h_b)) << b`` over the hyperplanes
+    :func:`_hyperplane`, with ``vec`` a column name or SQL fragment.
+    One ArrayType literal per plane keeps the tree O(n_bits), not
+    O(n_bits * dim)."""
+    terms = ["0"]
     for b in range(n_bits):
-        # one ArrayType literal per plane (not dim scalar literals):
-        # keeps the expression tree O(n_bits), not O(n_bits * dim)
-        h = lit_doubles(_hyperplane(dim, b))
-        bit = (dot(vec, h) > 0).cast("int")
-        bucket = bucket + bit * F.lit(1 << b)
-    return bucket
+        h = doubles_sql(_hyperplane(dim, b))
+        terms.append(f"(CAST(({dot_sql(vec, h)}) > 0 AS INT) * {1 << b})")
+    return F.expr(" + ".join(terms))
 
 
 def brute_force_topk(
@@ -135,7 +122,7 @@ def brute_force_topk(
     (huge) embedding table, score JVM-side, window-rank per probe."""
     scored = embeddings.crossJoin(F.broadcast(probes)).withColumn(
         "score",
-        F.round(cosine_similarity(F.col(vec_col), F.col(probe_vec_col)), round_dp),
+        F.round(cosine_similarity(f"`{vec_col}`", f"`{probe_vec_col}`"), round_dp),
     )
     w = Window.partitionBy(probe_id_col).orderBy(
         F.col("score").desc(), F.col(id_col).asc()
@@ -167,7 +154,7 @@ def lsh_topk(
     p = probes.withColumn("__bucket", rp_lsh_bucket(f"`{probe_vec_col}`", dim, n_bits))
     scored = e.join(F.broadcast(p), "__bucket").withColumn(
         "score",
-        F.round(cosine_similarity(F.col(vec_col), F.col(probe_vec_col)), round_dp),
+        F.round(cosine_similarity(f"`{vec_col}`", f"`{probe_vec_col}`"), round_dp),
     )
     w = Window.partitionBy(probe_id_col).orderBy(
         F.col("score").desc(), F.col(id_col).asc()
@@ -182,9 +169,10 @@ def lsh_topk(
 # ------------------------------------------------------------------ IVF
 
 def _assign_cid(
-    vec: Column, centroids: list[list[float]], round_dp: int | None = None
-) -> Column:
-    """cid of the nearest centroid, as a narrow array expression.
+    vec: str, centroids: list[list[float]], round_dp: int | None = None
+) -> str:
+    """cid of the nearest centroid, as a narrow SQL array expression
+    over ``vec`` (a column name or SQL fragment).
 
     ``transform`` over a literal array-of-centroids computes all sims in
     one pass; ``array_position(sims, array_max(sims))`` is argmax with
@@ -195,46 +183,34 @@ def _assign_cid(
     ``round_dp`` rounds each sim before the argmax — the cross-engine
     oracle (``q_ann_ivf_assign``) needs last-ulp sum differences
     squashed so Spark and DuckDB argmax the same values.  The IVF paths
-    (:func:`ivf_train`, :func:`ivf_write`, :func:`ivf_append`) and the
-    codebook training in :func:`ivfpq_train_write` assign at full
-    precision (None); every IVF-PQ encode that writes or serves codes
-    (:func:`_ivfpq_encode` callers) passes its ``round_dp`` (6 by
-    default).
+    (:func:`ivf_train`, :func:`ivf_write`, :func:`ivf_append`) assign
+    at full precision (None); every IVF-PQ encode
+    (:func:`_ivfpq_encode`) passes its ``round_dp`` (6 by default).
 
-    Evaluation shape (r15 optimization): HOF lambdas are interpreted
-    with NO common-subexpression elimination, so the naive
-    ``transform(cents, c -> cos(vec, c))`` re-evaluated ``vec``, its
-    norm, AND each literal centroid's norm once per centroid per row,
-    and the ``array_position(sims, array_max(sims))`` argmax evaluated
-    the whole sims array twice.  Here the row vector and its norm bind
-    ONCE per row (transform over a singleton struct), centroid norms
-    are Python-precomputed literals (``math.sqrt`` of a left-to-right
-    sum — the same IEEE operation sequence as the engine-side fold, so
-    bit-identical doubles; the ``pq_adc_tables`` contract), and the
-    sims array binds once for the argmax.  Same values, ~2 x ksub
-    fewer 64-element folds per row.
+    Evaluation shape: HOF lambdas are interpreted with NO
+    common-subexpression elimination, so the row vector and its norm
+    bind ONCE per row (transform over a singleton struct), centroid
+    norms are Python-precomputed literals (``math.sqrt`` of a
+    left-to-right sum — the same IEEE operation sequence as the
+    engine-side fold, so bit-identical doubles; the ``pq_adc_tables``
+    contract), and the sims array binds once for the argmax.
     """
-    cents_col = lit_double_matrix(centroids)
-    cnorms = lit_doubles(
+    cnorms = doubles_sql(
         [math.sqrt(sum(float(x) * float(x) for x in c)) for c in centroids]
     )
-
-    def sims_of(b: Column) -> Column:
-        sims = F.transform(
-            cents_col,
-            lambda c, i: dot(b["v"], c)
-            / (b["n"] * F.element_at(cnorms, i + F.lit(1))),
-        )
-        if round_dp is not None:
-            sims = F.transform(sims, lambda s: F.round(s, round_dp))
-        return sims
-
-    bound = F.array(F.struct(vec.alias("v"), l2_norm(vec).alias("n")))
-    argmax = F.transform(
-        F.transform(bound, sims_of),
-        lambda s: F.array_position(s, F.array_max(s)),
+    sims = (
+        f"transform({double_matrix_sql(centroids)}, (c, i) -> "
+        f"{dot_sql('b.v', 'c')} / (b.n * element_at({cnorms}, i + 1)))"
     )
-    return (F.element_at(argmax, 1) - 1).cast("int")
+    if round_dp is not None:
+        sims = f"transform({sims}, s -> round(s, {round_dp}))"
+    bound = (
+        f"array(struct(CAST({vec} AS ARRAY<DOUBLE>) AS v, {l2_norm_sql(vec)} AS n))"
+    )
+    return (
+        f"CAST(element_at(transform(transform({bound}, b -> {sims}),"
+        " s -> array_position(s, array_max(s))), 1) - 1 AS INT)"
+    )
 
 
 def ivf_train(
@@ -282,7 +258,7 @@ def ivf_train(
     sums_sql = "array(" + ",".join(f"sum(__v[{i}])" for i in range(dim)) + ")"
     for _ in range(iters):
         sums = (
-            v.withColumn("cid", _assign_cid(F.col("__v"), centroids))
+            v.withColumn("cid", F.expr(_assign_cid("__v", centroids)))
             .groupBy("cid")
             .agg(F.count("*").alias("n"), F.expr(sums_sql).alias("s"))
             .collect()
@@ -295,39 +271,20 @@ def ivf_train(
 
 
 def _checked_vec(vec_col: str, dim: int, caller: str) -> Column:
-    """Identity on a right-length vector, job-failing otherwise.  Rides
-    the first scan that consumes the column, so a malformed batch
-    aborts the FIRST training pass — before its prefix is summed into
-    any centroid and before the full training cost is paid (the
-    write-time :func:`_checked_cid` guard alone fires only after
-    training finishes)."""
-    return F.when(F.size(F.col(vec_col)) == dim, F.col(vec_col)).otherwise(
-        F.raise_error(
-            F.concat(
-                F.lit(f"{caller}: embedding dimension != {dim}: got "),
-                F.coalesce(F.size(F.col(vec_col)).cast("string"), F.lit("NULL")),
-            )
-        )
-    )
+    """Identity on a right-length vector, job-failing otherwise.
 
-
-def _checked_cid(vec_col: str, centroids: list[list[float]], caller: str) -> Column:
-    """:func:`_assign_cid` with a scan-time dimension guard: a
-    wrong-length vector would null-pad through ``zip_with``, get a
+    A wrong-length vector would null-pad through ``zip_with``, get a
     null cid, and be written to ``cid=__HIVE_DEFAULT_PARTITION__`` —
-    silently unsearchable by ``ivf_topk``'s ``cid IN (...)`` pruning
-    while the write reports success.  Fail the job instead."""
-    dim = len(centroids[0])
-    vec = F.col(vec_col).cast("array<double>")
-    return F.when(F.size(F.col(vec_col)) == dim, _assign_cid(vec, centroids)).otherwise(
-        F.raise_error(
-            F.concat(
-                F.lit(f"{caller}: embedding dimension != {dim}: got "),
-                # size(NULL) is null — coalesce so a null embedding
-                # still produces the diagnostic, not raise_error(NULL)
-                F.coalesce(F.size(F.col(vec_col)).cast("string"), F.lit("NULL")),
-            )
-        )
+    silently unsearchable by ``cid IN (...)`` pruning while the write
+    reports success.  Riding the first scan that consumes the column,
+    the guard aborts the FIRST training pass — before a malformed
+    batch's prefix is summed into any centroid.  ``size(NULL)`` is
+    null, so a null embedding still gets the diagnostic."""
+    col = f"`{vec_col}`"
+    return F.expr(
+        f"CASE WHEN size({col}) = {dim} THEN {col} ELSE raise_error(concat("
+        f"'{caller}: embedding dimension != {dim}: got ',"
+        f" coalesce(CAST(size({col}) AS STRING), 'NULL'))) END"
     )
 
 
@@ -348,13 +305,12 @@ def ivf_write(
     the leading underscore makes Spark's reader skip it when scanning
     the collection itself.
     """
-    # guard the training input too: without it a wrong-length vector
-    # still shapes the centroids (its prefix sums into the Lloyd agg)
-    # and the job only dies at write time, all training cost spent
+    # one guard for training and write: a wrong-length vector fails
+    # the first Lloyd pass instead of shaping the centroids
     guarded = embeddings.withColumn(vec_col, _checked_vec(vec_col, dim, "ivf_write"))
     centroids = ivf_train(guarded, dim, n_centroids, iters, id_col, vec_col)
     (
-        embeddings.withColumn("cid", _checked_cid(vec_col, centroids, "ivf_write"))
+        guarded.withColumn("cid", F.expr(_assign_cid(f"`{vec_col}`", centroids)))
         .write.mode("overwrite")
         .partitionBy("cid")
         .parquet(path)
@@ -451,9 +407,9 @@ def ivf_append(
         )
     aligned = new_embeddings.select(
         *[F.col(f.name).cast(f.dataType) for f in stored]
-    )
+    ).withColumn(vec_col, _checked_vec(vec_col, len(centroids[0]), "ivf_append"))
     (
-        aligned.withColumn("cid", _checked_cid(vec_col, centroids, "ivf_append"))
+        aligned.withColumn("cid", F.expr(_assign_cid(f"`{vec_col}`", centroids)))
         .write.mode("append")
         .partitionBy("cid")
         .parquet(path)
@@ -477,7 +433,7 @@ def ivf_drift_report(indexed: DataFrame, n_centroids: int | None = None) -> Data
     observed-group count — otherwise skew is understated exactly when
     drift is worst (12 of 16 partitions empty looks ~4x calmer than it
     is).  Anomalous groups — a null cid (null-partition corruption
-    predating the :func:`_checked_cid` guard) or a cid outside the
+    predating the :func:`_checked_vec` guard) or a cid outside the
     model range — still appear as extra rows with their own counts, and
     they intentionally stay in the denominator too (it is
     ``n_centroids`` + anomalous-group count, per the full-outer join
@@ -557,14 +513,13 @@ def ivf_topk(
     raise ``nprobe`` for highly-selective filters.
     """
     shortlist = ivf_shortlist(centroids, probe, nprobe)
-    probe_col = lit_doubles(probe)
-    vec = F.col(vec_col).cast("array<double>")
+    cos = cosine_similarity(f"`{vec_col}`", doubles_sql(probe))
     scored = indexed.filter(F.col("cid").isin(shortlist))
     if predicate is not None:
         scored = scored.filter(predicate)
     return (
         scored
-        .withColumn("score", F.round(cosine_similarity(vec, probe_col), round_dp))
+        .withColumn("score", F.round(cos, round_dp))
         .orderBy(F.col("score").desc(), F.col(id_col).asc())
         .limit(k)
         .select(id_col, "cid", "score")
@@ -608,7 +563,6 @@ def ivf_topk_batch(
         routes, schema="cid INT, query_id INT, query_vec ARRAY<DOUBLE>"
     )
     union_cids = sorted({cid for cid, _, _ in routes})
-    vec = F.col(vec_col).cast("array<double>")
     pruned = indexed.filter(F.col("cid").isin(union_cids))
     if predicate is not None:
         pruned = pruned.filter(predicate)
@@ -617,7 +571,7 @@ def ivf_topk_batch(
         .join(F.broadcast(route_df), "cid")
         .withColumn(
             "score",
-            F.round(cosine_similarity(vec, F.col("query_vec")), round_dp),
+            F.round(cosine_similarity(f"`{vec_col}`", "query_vec"), round_dp),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -677,7 +631,7 @@ def _ivfpq_encode(
     codebooks: list[list[list[float]]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_dp: int | None = 6,
+    round_dp: int = 6,
     keep_resid: bool = False,
     id_type: str | None = None,
 ) -> DataFrame:
@@ -687,10 +641,10 @@ def _ivfpq_encode(
     subspace.  Every build, append and encode-inline serve goes
     through it, so codes written and codes scored cannot drift apart.
 
-    ``round_dp`` rounds the assignment sims and the code distances
-    (None = full-precision assignment, for ``codebooks=[]`` only).
+    ``round_dp`` rounds the assignment sims and the code distances.
     ``keep_resid`` keeps the residual as ``__r``: with no codebooks
-    that is the codebook-training input.  ``id_type`` casts the id to
+    that is the codebook-training input, assigned exactly as the
+    written codes are.  ``id_type`` casts the id to
     the stored codes' type (appends).  Narrow expressions only — the
     encode rides the scan, and a ``cid`` filter placed above it is
     pushed below the encode by the optimizer.
@@ -699,7 +653,7 @@ def _ivfpq_encode(
     assigned = embeddings.select(
         F.col(id_col).cast(id_type).alias(id_col) if id_type else id_col,
         vec.alias("v"),
-        _assign_cid(vec, centroids, round_dp).alias("cid"),
+        F.expr(_assign_cid(f"`{vec_col}`", centroids, round_dp)).alias("cid"),
     )
     resid = F.zip_with(
         F.col("v"),
@@ -715,7 +669,7 @@ def _ivfpq_encode(
         "cid",
         *(["__r"] if keep_resid else []),
         *[
-            pq_code(F.col("__r"), cb, s * dsub, round_dp).alias(f"c{s}")
+            F.expr(pq_code("__r", cb, s * dsub, round_dp)).alias(f"c{s}")
             for s, cb in enumerate(codebooks)
         ],
     )
@@ -774,9 +728,7 @@ def ivfpq_train_write(
     100 TB both trainings run on a sample; write/encode is the only
     corpus-sized pass."""
     cents = ivf_train(embeddings, dim, n_centroids, iters, id_col, vec_col)
-    resid = _ivfpq_encode(
-        embeddings, cents, [], id_col, vec_col, round_dp=None, keep_resid=True
-    )
+    resid = _ivfpq_encode(embeddings, cents, [], id_col, vec_col, keep_resid=True)
     cbs = pq_train(resid, dim, m, ksub, iters, id_col, "__r")
     ivfpq_write(embeddings, path, cents, cbs, id_col, vec_col)
     return cents, cbs
@@ -978,7 +930,7 @@ def _ivfpq_refine(
         .withColumn(
             "score",
             F.round(
-                cosine_similarity(F.col(vec_col), F.col("query_vec")),
+                cosine_similarity(f"`{vec_col}`", "query_vec"),
                 round_dp,
             ),
         )
@@ -1146,11 +1098,11 @@ def simjoin_lsh(
     from pyspark.ml.feature import BucketedRandomProjectionLSH
     from pyspark.ml.functions import array_to_vector
 
-    from vector_db_ingestor_spark.functions.vector import normalize
+    from vector_db_ingestor_spark.functions.vector import normalize_sql
 
     df = embeddings.select(
         F.col(id_col),
-        array_to_vector(normalize(F.col(vec_col))).alias("features"),
+        array_to_vector(F.expr(normalize_sql(f"`{vec_col}`"))).alias("features"),
     )
     lsh = BucketedRandomProjectionLSH(
         inputCol="features",
@@ -1201,7 +1153,7 @@ def lsh_topk_multiprobe(
     ).drop("__b0")
     scored = e.join(F.broadcast(p), "__bucket").withColumn(
         "score",
-        F.round(cosine_similarity(F.col(vec_col), F.col(probe_vec_col)), round_dp),
+        F.round(cosine_similarity(f"`{vec_col}`", f"`{probe_vec_col}`"), round_dp),
     )
     w = Window.partitionBy(probe_id_col).orderBy(
         F.col("score").desc(), F.col(id_col).asc()
@@ -1239,9 +1191,10 @@ def pq_codebooks(
 
 
 def pq_code(
-    vec: Column, codebook: list[list[float]], offset: int, round_dp: int = 6
-) -> Column:
-    """Code (centroid index) of one subvector against one sub-codebook.
+    vec: str, codebook: list[list[float]], offset: int, round_dp: int = 6
+) -> str:
+    """Code (centroid index) of one subvector of ``vec`` (a column name
+    or SQL fragment) against one sub-codebook, as a SQL expression.
 
     Argmin of the REDUCED squared-L2 ``d_j = -2 x.c_j + c_j.c_j`` (the
     row-constant ``x.x`` term cannot change the argmin, so it is
@@ -1249,39 +1202,27 @@ def pq_code(
     reduced form, so parity holds by construction).  ``c_j.c_j`` is a
     Python literal; the per-centroid dots run inside ONE ``transform``
     over an array-of-centroids literal — the expression tree is O(1)
-    in ``ksub`` (one lambda, two literals), not O(ksub) separate
-    slice+fold trees, which is what keeps plan analysis and the
-    interpreted-HOF row cost flat as codebooks grow.  First-wins
-    tie-break via ``array_position``; same sequential-dot algebra as
-    DuckDB `list_dot_product`.  Narrow array expression: no shuffle,
-    no Python — assignment rides the scan, so encoding a 100 TB corpus
-    is one map stage.
-    """
-    from vector_db_ingestor_spark.functions.vector import dot
+    in ``ksub``.  First-wins tie-break via ``array_position``; same
+    sequential-dot algebra as DuckDB `list_dot_product`.  Narrow array
+    expression: no shuffle, no Python — assignment rides the scan.
 
+    The subvector binds ONCE per row (transform over a singleton):
+    HOF lambdas get no CSE, so referencing the slice (and, through it,
+    the residual expression on the IVF-PQ paths) inside the
+    per-centroid lambda would re-evaluate it ksub times per row; the
+    argmin's double reference to the distance array binds likewise.
+    """
     dsub = len(codebook[0])
-    sub = F.slice(vec.cast("array<double>"), offset + 1, dsub)
-    cents = lit_double_matrix(codebook)
-    ccs = lit_doubles([float(sum(x * x for x in c)) for c in codebook])
-    # bind the subvector ONCE per row (transform over a singleton —
-    # the word_shingles trick): HOF lambdas get no CSE, so referencing
-    # the slice (and, through it, whatever expression ``vec`` is — the
-    # residual zip_with on the IVF-PQ paths) inside the per-centroid
-    # lambda re-evaluated it ksub times per row; the argmin's double
-    # reference to ``dists`` likewise re-ran all ksub dots.  Binding
-    # both keeps the arithmetic (and therefore every code) identical
-    # while evaluating the slice and the distance array exactly once.
-    dists_of = lambda sv: F.transform(  # noqa: E731
-        cents,
-        lambda c, i: F.round(
-            F.lit(-2.0) * dot(sv, c) + F.element_at(ccs, i + F.lit(1)), round_dp
-        ),
+    ccs = doubles_sql([float(sum(x * x for x in c)) for c in codebook])
+    dists = (
+        f"transform({double_matrix_sql(codebook)}, (c, i) -> "
+        f"round(-2.0D * {dot_sql('sv', 'c')} + element_at({ccs}, i + 1), {round_dp}))"
     )
-    argmin = F.transform(
-        F.transform(F.array(sub), dists_of),
-        lambda d: F.array_position(d, F.array_min(d)),
+    sub = f"slice(CAST({vec} AS ARRAY<DOUBLE>), {offset + 1}, {dsub})"
+    return (
+        f"CAST(element_at(transform(transform(array({sub}), sv -> {dists}),"
+        " d -> array_position(d, array_min(d))), 1) - 1 AS INT)"
     )
-    return (F.element_at(argmin, 1) - 1).cast("int")
 
 
 def pq_adc_tables(
@@ -1370,9 +1311,7 @@ def pq_train(
             *[
                 F.struct(
                     F.lit(s).alias("s"),
-                    pq_code(
-                        F.col("__v"), cbs[s], s * dsub, round_dp=dist_dp
-                    ).alias("c"),
+                    F.expr(pq_code("__v", cbs[s], s * dsub, dist_dp)).alias("c"),
                     F.slice("__v", s * dsub + 1, dsub).alias("sub"),
                 )
                 for s in range(m)

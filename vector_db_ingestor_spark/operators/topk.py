@@ -31,12 +31,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from vector_db_ingestor_spark.functions.literals import lit_doubles
+from vector_db_ingestor_spark.functions.literals import doubles_sql
 from vector_db_ingestor_spark.functions.vector import cosine_similarity
-
-
-def probe_literal(probe: list[float]) -> Column:
-    return lit_doubles(probe)
 
 
 def topk_cosine(
@@ -57,7 +53,7 @@ def topk_cosine(
     if predicate is not None:
         scored = scored.filter(predicate)
     scored = scored.withColumn(
-        "score", F.round(cosine_similarity(F.col(vec_col), probe_literal(probe)), round_dp)
+        "score", F.round(cosine_similarity(f"`{vec_col}`", doubles_sql(probe)), round_dp)
     )
     top = (
         scored.drop(vec_col)
@@ -96,7 +92,7 @@ def topk_cosine_batch(
         scored = scored.filter(predicate)
     scored = scored.crossJoin(F.broadcast(probes)).withColumn(
         "score",
-        F.round(cosine_similarity(F.col(vec_col), F.col(probe_vec_col)), round_dp),
+        F.round(cosine_similarity(f"`{vec_col}`", f"`{probe_vec_col}`"), round_dp),
     )
     w = Window.partitionBy(probe_id_col).orderBy(
         F.col("score").desc(), F.col(id_col).asc()
@@ -122,7 +118,7 @@ def knn_per_group(
     One shuffle on ``group_col``; ``row_number`` keeps k rows per group.
     """
     scored = embeddings.withColumn(
-        "score", F.round(cosine_similarity(F.col(vec_col), probe_literal(probe)), round_dp)
+        "score", F.round(cosine_similarity(f"`{vec_col}`", doubles_sql(probe)), round_dp)
     )
     w = Window.partitionBy(group_col).orderBy(F.col("score").desc(), F.col(id_col).asc())
     return (

@@ -20,7 +20,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from vector_db_ingestor_spark.functions.literals import (
-    lit_double_matrix,
+    double_matrix_sql,
+    doubles_sql,
     lit_doubles,
 )
 
@@ -812,7 +813,7 @@ def q_multimodal_struct(spark: SparkSession, sf_dir: str) -> DataFrame:
     one struct column through a join and filter, fields projected out at
     the end.  The struct survives Catalyst column pruning — only the
     struct fields actually read reach the scan."""
-    from vector_db_ingestor_spark.functions.vector import l2_norm
+    from vector_db_ingestor_spark.functions.vector import l2_norm_sql
 
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
@@ -827,7 +828,7 @@ def q_multimodal_struct(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label",
         F.size(F.col("mm.embedding")).alias("dim"),
         F.length(F.col("mm.text")).alias("text_chars"),
-        F.round(l2_norm(F.col("mm.embedding")), 6).alias("emb_norm"),
+        F.round(F.expr(l2_norm_sql("mm.embedding")), 6).alias("emb_norm"),
     )
 
 
@@ -1545,10 +1546,9 @@ def q_ann_ivf_assign_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = _ivf_assign_centroids()
     shortlist = ivf_shortlist(cents, PROBE_64, nprobe=4)
     emb = load_table(spark, sf_dir, "embeddings")
-    vec = F.col("embedding").cast("array<double>")
     return emb.select(
         "vec_id",
-        _assign_cid(vec, cents, round_dp=6).alias("cid"),
+        F.expr(_assign_cid("embedding", cents, round_dp=6)).alias("cid"),
     ).withColumn("in_shortlist", F.col("cid").isin(shortlist))
 
 
@@ -1559,19 +1559,10 @@ def _ivf_assign_oracle(nprobe: int = 4) -> str:
     nprobe) instead of trusting the Spark side's Python selection."""
     cents = _ivf_assign_centroids()
 
-    def cvec(c: list[float]) -> str:
-        return "[" + ", ".join(repr(v) for v in c) + "]::DOUBLE[]"
-
-    def cos_sql(c: list[float]) -> str:
-        lit = cvec(c)
-        return (
-            f"round(list_dot_product(embedding::DOUBLE[], {lit})"
-            f" / (sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))"
-            f" * sqrt(list_dot_product({lit}, {lit}))), 6)"
-        )
-
-    cent_rows = ", ".join(f"({i}, {cvec(c)})" for i, c in enumerate(cents))
-    sims = ", ".join(cos_sql(c) for c in cents)
+    cent_rows = ", ".join(
+        f"({i}, {probe_sql_literal(c)})" for i, c in enumerate(cents)
+    )
+    sims = ", ".join(_score_sql_for(probe_sql_literal(c)) for c in cents)
     return f"""
     WITH cents(cid, cvec) AS (VALUES {cent_rows}),
     short AS (
@@ -1616,8 +1607,9 @@ def q_ann_ivf_filtered_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cents = _ivf_assign_centroids()
     emb = load_table(spark, sf_dir, "embeddings")
-    vec = F.col("embedding").cast("array<double>")
-    indexed = emb.withColumn("cid", _assign_cid(vec, cents, round_dp=6))
+    indexed = emb.withColumn(
+        "cid", F.expr(_assign_cid("embedding", cents, round_dp=6))
+    )
     return ivf_topk(
         indexed, cents, PROBE_64, k=10, nprobe=4,
         predicate=F.col("label").isin(1, 3, 5, 7),
@@ -1631,19 +1623,10 @@ def _ivf_filtered_oracle(nprobe: int = 4, k: int = 10) -> str:
     q_topk_cosine scorer ranking the survivors."""
     cents = _ivf_assign_centroids()
 
-    def cvec(c: list[float]) -> str:
-        return "[" + ", ".join(repr(v) for v in c) + "]::DOUBLE[]"
-
-    def cos_sql(c: list[float]) -> str:
-        lit = cvec(c)
-        return (
-            f"round(list_dot_product(embedding::DOUBLE[], {lit})"
-            f" / (sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))"
-            f" * sqrt(list_dot_product({lit}, {lit}))), 6)"
-        )
-
-    cent_rows = ", ".join(f"({i}, {cvec(c)})" for i, c in enumerate(cents))
-    sims = ", ".join(cos_sql(c) for c in cents)
+    cent_rows = ", ".join(
+        f"({i}, {probe_sql_literal(c)})" for i, c in enumerate(cents)
+    )
+    sims = ", ".join(_score_sql_for(probe_sql_literal(c)) for c in cents)
     return f"""
     WITH cents(cid, cvec) AS (VALUES {cent_rows}),
     short AS (
@@ -1699,10 +1682,9 @@ def q_ann_ivf_escalate_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = _ivf_assign_centroids()
     order = ivf_shortlist(cents, PROBE_64, nprobe=len(cents))
     emb = load_table(spark, sf_dir, "embeddings")
-    vec = F.col("embedding").cast("array<double>")
     pred = F.col("label") == 9
     cand = (
-        emb.withColumn("cid", _assign_cid(vec, cents, round_dp=6))
+        emb.withColumn("cid", F.expr(_assign_cid("embedding", cents, round_dp=6)))
         .filter(pred)
     )
     rr = F.lit(None).cast("int")
@@ -1726,7 +1708,7 @@ def q_ann_ivf_escalate_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rr") <= F.col("nprobe_used"))
         .withColumn(
             "score",
-            F.round(cosine_similarity(vec, lit_doubles(PROBE_64)), 6),
+            F.round(cosine_similarity("embedding", doubles_sql(PROBE_64)), 6),
         )
     )
     w = Window.orderBy(F.col("score").desc(), F.col("vec_id").asc())
@@ -1745,19 +1727,10 @@ def _ivf_escalate_oracle(k: int = 25) -> str:
     rounded-cosine top-k within the chosen prefix wins."""
     cents = _ivf_assign_centroids()
 
-    def cvec(c: list[float]) -> str:
-        return "[" + ", ".join(repr(v) for v in c) + "]::DOUBLE[]"
-
-    def cos_sql(c: list[float]) -> str:
-        lit = cvec(c)
-        return (
-            f"round(list_dot_product(embedding::DOUBLE[], {lit})"
-            f" / (sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))"
-            f" * sqrt(list_dot_product({lit}, {lit}))), 6)"
-        )
-
-    cent_rows = ", ".join(f"({i}, {cvec(c)})" for i, c in enumerate(cents))
-    sims = ", ".join(cos_sql(c) for c in cents)
+    cent_rows = ", ".join(
+        f"({i}, {probe_sql_literal(c)})" for i, c in enumerate(cents)
+    )
+    sims = ", ".join(_score_sql_for(probe_sql_literal(c)) for c in cents)
     n_cells = len(cents)
     return f"""
     WITH cents(cid, cvec) AS (VALUES {cent_rows}),
@@ -2245,8 +2218,11 @@ def q_array_fns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array / higher-order function battery (transform, filter,
     aggregate, zip_with, slice, reverse) — all JVM-side expressions in
     one narrow projection; HOFs evaluate per-row with zero shuffles."""
+    from vector_db_ingestor_spark.functions.vector import dot_sql
+
     emb = load_table(spark, sf_dir, "embeddings")
-    e = F.col("embedding").cast("array<double>")
+    ev = "CAST(embedding AS ARRAY<DOUBLE>)"
+    e = F.expr(ev)
     return emb.select(
         "vec_id",
         F.size(e).alias("n"),
@@ -2262,14 +2238,9 @@ def q_array_fns(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(
             F.aggregate(F.slice(e, 1, 8), F.lit(0.0), lambda a, x: a + x * x), 6
         ).alias("head_energy"),
-        F.round(
-            F.aggregate(
-                F.zip_with(e, F.reverse(e), lambda x, y: x * y),
-                F.lit(0.0),
-                lambda a, v: a + v,
-            ),
-            6,
-        ).alias("rev_dot"),
+        F.round(F.expr(dot_sql(ev, f"reverse({ev})")), 6).alias(
+            "rev_dot"
+        ),
     )
 
 
@@ -3650,7 +3621,7 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ngram_list_sql(n: int) -> str:
     """DuckDB expression for the distinct word n-gram list of ``text``,
-    mirroring operators.dedup.word_shingles bit-for-bit."""
+    mirroring operators.dedup.word_shingles_sql bit-for-bit."""
     toks = "string_split_regex(lower(trim(text)), '\\s+')"
     gram = " || ' ' || ".join(f"{toks}[i+{j}]" for j in range(n))
     return f"list_distinct(list_transform(range(1, len({toks}) - {n - 2}), i -> {gram}))"
@@ -3757,24 +3728,28 @@ def q_vector_fns(spark: SparkSession, sf_dir: str) -> DataFrame:
     3 folds per row instead of 6, bit-identical doubles either way.
     The probe's own norm is a foldable literal expression (constant-
     folded at plan time, zero per-row cost)."""
-    from vector_db_ingestor_spark.functions.vector import dot, l2_distance, l2_norm
+    from vector_db_ingestor_spark.functions.vector import (
+        dot_sql,
+        l2_distance_sql,
+        l2_norm_sql,
+    )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    p = lit_doubles(PROBE_64)
-    v = F.col("embedding").cast("array<double>")
+    p = doubles_sql(PROBE_64)
+    v = "CAST(embedding AS ARRAY<DOUBLE>)"
     raw = emb.select(
         "vec_id",
-        v.alias("v"),
-        dot(v, p).alias("dp"),
-        l2_norm(v).alias("nrm"),
-        l2_distance(v, p).alias("l2"),
+        F.expr(v).alias("v"),
+        F.expr(dot_sql(v, p)).alias("dp"),
+        F.expr(l2_norm_sql(v)).alias("nrm"),
+        F.expr(l2_distance_sql(v, p)).alias("l2"),
     )
     return raw.select(
         "vec_id",
         F.round("dp", 6).alias("dot_p"),
         F.round("nrm", 6).alias("norm"),
         F.round("l2", 6).alias("l2_dist"),
-        F.round(F.col("dp") / (F.col("nrm") * l2_norm(p)), 6).alias("cosine"),
+        F.round(F.expr(f"dp / (nrm * {l2_norm_sql(p)})"), 6).alias("cosine"),
         F.round(F.element_at(F.col("v"), 1) / F.col("nrm"), 6).alias("unit_first"),
     )
 
@@ -3821,14 +3796,12 @@ def q_vec_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("v"), lambda x: F.floor(x * 127.0 / F.col("max_abs"))
     )
     with_codes = with_scale.withColumn("codes", codes)
-    recon = F.transform(
-        F.col("codes"), lambda c: c * F.col("max_abs") / 127.0
-    )
+    recon = "transform(codes, c -> c * max_abs / 127.0D)"
     return with_codes.select(
         "vec_id",
         F.round("max_abs", 6).alias("scale_max"),
         F.size(F.filter("codes", lambda c: c == 0)).alias("n_zero"),
-        F.round(cosine_similarity(F.col("v"), recon), 6).alias("recon_cosine"),
+        F.round(cosine_similarity("v", recon), 6).alias("recon_cosine"),
     )
 
 
@@ -4452,28 +4425,18 @@ def q_topk_maxsim(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scan stage, and top-k is TakeOrderedAndProject.  At 100 TB the
     same expression runs per (doc x query) with the query token matrix
     broadcast."""
-    from vector_db_ingestor_spark.functions.vector import dot
+    from vector_db_ingestor_spark.functions.vector import dot_sql
 
     n_slices, width, k = 4, 16, 10
     emb = load_table(spark, sf_dir, "embeddings")
     e = F.col("embedding").cast("array<double>")
     dv = F.array(*[F.slice(e, s * width + 1, width) for s in range(n_slices)])
-    qv = F.array(
-        *[
-            lit_doubles(PROBE_64[s * width : (s + 1) * width])
-            for s in range(n_slices)
-        ]
+    qv = double_matrix_sql(
+        [PROBE_64[s * width : (s + 1) * width] for s in range(n_slices)]
     )
-    maxsim = F.round(
-        F.aggregate(
-            F.transform(
-                qv,
-                lambda q: F.array_max(F.transform(F.col("dv"), lambda t: dot(q, t))),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        6,
+    maxsim = F.expr(
+        f"round(aggregate(transform({qv}, q -> array_max(transform(dv,"
+        f" t -> {dot_sql('q', 't')}))), 0.0D, (acc, x) -> acc + x), 6)"
     )
     return (
         emb.select("vec_id", dv.alias("dv"))
@@ -4879,15 +4842,14 @@ def q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         ranked_topn,
         rrf_fuse,
     )
-    from vector_db_ingestor_spark.operators.topk import probe_literal
 
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
     dense = emb.select(
         F.col("vec_id").alias("doc_id"),
-        F.round(
-            cosine_similarity(F.col("embedding"), probe_literal(PROBE_64)), 6
-        ).alias("score"),
+        F.round(cosine_similarity("embedding", doubles_sql(PROBE_64)), 6).alias(
+            "score"
+        ),
     )
     dense_top = ranked_topn(dense, "score", "doc_id", 20).select(
         "doc_id", F.col("rank").alias("dense_rank")
@@ -4980,10 +4942,9 @@ def q_topk_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
         mmr_rerank,
         shortlist_with_sims,
     )
-    from vector_db_ingestor_spark.operators.topk import probe_literal
 
     emb = load_table(spark, sf_dir, "embeddings")
-    pairs = shortlist_with_sims(emb, probe_literal(PROBE_64), n=20)
+    pairs = shortlist_with_sims(emb, PROBE_64, n=20)
     return mmr_rerank(pairs, lam=0.7, k=8)
 
 
@@ -5106,10 +5067,12 @@ def q_vec_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     cbs = pq_codebooks(EMBEDDING_DIM, m, ksub)
     tabs = pq_adc_tables(PROBE_64, cbs)
     emb = load_table(spark, sf_dir, "embeddings")
-    vec = F.col("embedding")
     enc = emb.select(
         "vec_id",
-        *[pq_code(vec, cbs[s], s * dsub).alias(f"c{s}") for s in range(m)],
+        *[
+            F.expr(pq_code("embedding", cbs[s], s * dsub)).alias(f"c{s}")
+            for s in range(m)
+        ],
     )
     adc = F.element_at(lit_doubles(tabs[0]), F.col("c0") + 1)
     for s in range(1, m):
@@ -5260,11 +5223,12 @@ def q_vec_pq_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         cent_dp=_PQT["cent_dp"],
         dist_dp=_PQT["dist_dp"],
     )
-    vec = F.col("embedding")
     return emb.select(
         "vec_id",
         *[
-            pq_code(vec, cbs[s], s * dsub, round_dp=_PQT["dist_dp"]).alias(f"c{s}")
+            F.expr(pq_code("embedding", cbs[s], s * dsub, _PQT["dist_dp"])).alias(
+                f"c{s}"
+            )
             for s in range(m)
         ],
     )
@@ -5339,10 +5303,9 @@ def q_ann_ivf_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = cbs[0]
     dists = [(_reduced_l2(PROBE_64, c, _IVFT["dist_dp"]), j) for j, c in enumerate(cents)]
     short = [j for _, j in sorted(dists)[: _IVFT["nprobe"]]]
-    vec = F.col("embedding")
     return emb.select(
         "vec_id",
-        pq_code(vec, cents, 0, round_dp=_IVFT["dist_dp"]).alias("cid"),
+        F.expr(pq_code("embedding", cents, 0, _IVFT["dist_dp"])).alias("cid"),
     ).withColumn("in_shortlist", F.col("cid").isin(short))
 
 
@@ -5923,16 +5886,8 @@ def _ivfpq_oracle(
     def lst(v: list[float]) -> str:
         return bare(v) + "::DOUBLE[]"
 
-    def cos_sql(c: list[float]) -> str:
-        lit = lst(c)
-        return (
-            f"round(list_dot_product(embedding::DOUBLE[], {lit})"
-            f" / (sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))"
-            f" * sqrt(list_dot_product({lit}, {lit}))), 6)"
-        )
-
     cent_rows = ", ".join(f"({i}, {lst(c)})" for i, c in enumerate(cents))
-    sims = ", ".join(cos_sql(c) for c in cents)
+    sims = ", ".join(_score_sql_for(probe_sql_literal(c)) for c in cents)
     sub_cols = ", ".join(
         f"list_slice(r, {s * dsub + 1}, {(s + 1) * dsub}) AS s{s}" for s in range(m)
     )
@@ -6070,8 +6025,9 @@ def q_ivf_drift_report_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cents = _ivf_assign_centroids()
     emb = load_table(spark, sf_dir, "embeddings")
-    vec = F.col("embedding").cast("array<double>")
-    assigned = emb.select(_assign_cid(vec, cents, round_dp=6).alias("cid"))
+    assigned = emb.select(
+        F.expr(_assign_cid("embedding", cents, round_dp=6)).alias("cid")
+    )
     return ivf_drift_report(assigned, n_centroids=len(cents))
 
 
@@ -6082,18 +6038,7 @@ def _ivf_drift_oracle() -> str:
     like the Spark side."""
     cents = _ivf_assign_centroids()
 
-    def cvec(c: list[float]) -> str:
-        return "[" + ", ".join(repr(v) for v in c) + "]::DOUBLE[]"
-
-    def cos_sql(c: list[float]) -> str:
-        lit = cvec(c)
-        return (
-            f"round(list_dot_product(embedding::DOUBLE[], {lit})"
-            f" / (sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))"
-            f" * sqrt(list_dot_product({lit}, {lit}))), 6)"
-        )
-
-    sims = ", ".join(cos_sql(c) for c in cents)
+    sims = ", ".join(_score_sql_for(probe_sql_literal(c)) for c in cents)
     k = len(cents)
     return f"""
     WITH assigned AS (
@@ -7526,28 +7471,15 @@ def q_topk_matryoshka_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
     embeddings are NOT MRL-trained, so prefix recall here is whatever
     generic vectors give — the key certifies the MACHINERY; the
     recall-vs-prefix tradeoff on real models is a model property."""
+    from vector_db_ingestor_spark.functions.vector import dot_sql, l2_norm_sql
+
     emb = load_table(spark, sf_dir, "embeddings")
-    prefix = F.slice(F.col("embedding").cast("array<double>"), 1, 16)
-    probe16 = lit_doubles(PROBE_64[:16])
-    pre_score = F.round(
-        F.aggregate(
-            F.zip_with(prefix, probe16, lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        / (
-            F.sqrt(
-                F.aggregate(
-                    F.transform(prefix, lambda x: x * x),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-            )
-            * F.lit(
-                float(sum(v * v for v in PROBE_64[:16]) ** 0.5)
-            )
-        ),
-        6,
+    prefix = "slice(CAST(embedding AS ARRAY<DOUBLE>), 1, 16)"
+    p16 = doubles_sql(PROBE_64[:16])
+    p16_norm = float(sum(v * v for v in PROBE_64[:16]) ** 0.5)
+    pre_score = F.expr(
+        f"round({dot_sql(prefix, p16)}"
+        f" / ({l2_norm_sql(prefix)} * {p16_norm!r}D), 6)"
     )
     short = (
         emb.select("vec_id", pre_score.alias("pre_score"))
@@ -8217,24 +8149,18 @@ def q_vec_pq_quality_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
     cid.  At deployment this reads the codes table + raw vectors once;
     per-cell partials merge, so it also runs incrementally per
     append batch."""
-    from vector_db_ingestor_spark.functions.vector import dot
+    from vector_db_ingestor_spark.functions.vector import dot_sql
     from vector_db_ingestor_spark.operators.similarity import _ivfpq_encode
 
     cents, cbs, m, _ = _ivfpq_params()
     emb = load_table(spark, sf_dir, "embeddings")
     # the index's own encoder, residual kept for the reconstruction
     coded = _ivfpq_encode(emb, cents, cbs, round_dp=6, keep_resid=True)
-    recon = F.concat(
-        *[
-            F.element_at(
-                lit_double_matrix(cbs[s]),
-                F.col(f"c{s}") + 1,
-            )
-            for s in range(m)
-        ]
-    )
-    d = F.zip_with(F.col("__r"), recon, lambda a, b: a - b)
-    err_u = F.round(dot(d, d) * 1000000.0).cast("long")
+    recon = "concat(" + ", ".join(
+        f"element_at({double_matrix_sql(cbs[s])}, c{s} + 1)" for s in range(m)
+    ) + ")"
+    d = f"zip_with(__r, {recon}, (a, b) -> a - b)"
+    err_u = F.expr(f"CAST(round({dot_sql(d, d)} * 1000000.0D) AS BIGINT)")
     return (
         coded.select("cid", err_u.alias("e"))
         .groupBy("cid")
@@ -8256,19 +8182,10 @@ def _vec_pq_quality_oracle() -> str:
     cents, cbs, m, _ = _ivfpq_params()
     dsub = EMBEDDING_DIM // m
 
-    def lst(v: list[float]) -> str:
-        return "[" + ", ".join(repr(x) for x in v) + "]::DOUBLE[]"
-
-    def cos_sql(c: list[float]) -> str:
-        lit = lst(c)
-        return (
-            f"round(list_dot_product(embedding::DOUBLE[], {lit})"
-            f" / (sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))"
-            f" * sqrt(list_dot_product({lit}, {lit}))), 6)"
-        )
-
-    cent_rows = ", ".join(f"({i}, {lst(c)})" for i, c in enumerate(cents))
-    sims = ", ".join(cos_sql(c) for c in cents)
+    cent_rows = ", ".join(
+        f"({i}, {probe_sql_literal(c)})" for i, c in enumerate(cents)
+    )
+    sims = ", ".join(_score_sql_for(probe_sql_literal(c)) for c in cents)
     sub_cols = ", ".join(
         f"list_slice(r, {s * dsub + 1}, {(s + 1) * dsub}) AS s{s}"
         for s in range(m)
@@ -8276,7 +8193,7 @@ def _vec_pq_quality_oracle() -> str:
     dist_cols = []
     for s in range(m):
         ds = ", ".join(
-            f"round(-2.0 * list_dot_product(s{s}, {lst(c)})"
+            f"round(-2.0 * list_dot_product(s{s}, {probe_sql_literal(c)})"
             f" + {sum(x * x for x in c)!r}, 6)"
             for c in cbs[s]
         )
@@ -8286,7 +8203,8 @@ def _vec_pq_quality_oracle() -> str:
         for s in range(m)
     )
     cb_lits = [
-        "[" + ", ".join(lst(c) for c in cbs[s]) + "]" for s in range(m)
+        "[" + ", ".join(probe_sql_literal(c) for c in cbs[s]) + "]"
+        for s in range(m)
     ]
     recon = " || ".join(f"{cb_lits[s]}[c{s} + 1]" for s in range(m))
     return f"""
@@ -9217,15 +9135,14 @@ def q_ann_nprobe_curve_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = _ivf_assign_centroids()
     order = ivf_shortlist(cents, PROBE_64, nprobe=len(cents))
     emb = load_table(spark, sf_dir, "embeddings")
-    vec = F.col("embedding").cast("array<double>")
     rr = F.lit(None).cast("int")
     for pos, cid in enumerate(order):
         rr = F.when(F.col("cid") == cid, pos + 1).otherwise(rr)
     scored = (
-        emb.withColumn("cid", _assign_cid(vec, cents, round_dp=6))
+        emb.withColumn("cid", F.expr(_assign_cid("embedding", cents, round_dp=6)))
         .withColumn("rr", rr)
         .withColumn(
-            "score", F.round(cosine_similarity(vec, lit_doubles(PROBE_64)), 6)
+            "score", F.round(cosine_similarity("embedding", doubles_sql(PROBE_64)), 6)
         )
         .select("vec_id", "rr", "score")
     )
@@ -9260,19 +9177,10 @@ def _ann_nprobe_curve_oracle(k: int = 20) -> str:
     milli recall."""
     cents = _ivf_assign_centroids()
 
-    def cvec(c: list[float]) -> str:
-        return "[" + ", ".join(repr(v) for v in c) + "]::DOUBLE[]"
-
-    def cos_sql(c: list[float]) -> str:
-        lit = cvec(c)
-        return (
-            f"round(list_dot_product(embedding::DOUBLE[], {lit})"
-            f" / (sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))"
-            f" * sqrt(list_dot_product({lit}, {lit}))), 6)"
-        )
-
-    cent_rows = ", ".join(f"({i}, {cvec(c)})" for i, c in enumerate(cents))
-    sims = ", ".join(cos_sql(c) for c in cents)
+    cent_rows = ", ".join(
+        f"({i}, {probe_sql_literal(c)})" for i, c in enumerate(cents)
+    )
+    sims = ", ".join(_score_sql_for(probe_sql_literal(c)) for c in cents)
     depth_legs = "\n        UNION ALL\n".join(
         f"""        SELECT CAST({p} AS INTEGER) AS nprobe, vec_id
         FROM (SELECT vec_id FROM scored WHERE rr <= {p}
